@@ -80,7 +80,7 @@ of its class — burn 0.86 for compute-dominated stages, scan-agg 0.758
 for the pure scan-aggregations (hex/raster tiles), and a measured
 harmonic mix 0.777 for knn (phase profiling shows ~79% of its local[4]
 wall is full table scans — 4 scans ≈ 36 s of 45.4 s — and ~21%
-window/probe compute; `tools/profile_knn_scale.py`) — normalized =
+window/probe compute) — normalized =
 raw / ceiling, capped at 1 (a ceiling is a same-class measurement, not
 a hard bound).
 
@@ -128,7 +128,7 @@ reference's own pinned coordinates.
 # per-class host ceilings for §2b (see host_calibration.json + the
 # scaling.py docstring): pure scan-aggregations read against the
 # measured scan-agg wall; everything else against the pure-CPU burn.
-# knn: phase profiling (tools/profile_knn_scale.py, post scan-merge)
+# knn: phase profiling (post scan-merge)
 # shows ~79% of its local[4] wall is full table scans (4 scans ≈ 36 s
 # of 45.4 s: 2 merged candidate branches + the 2-branch straggler
 # retry) and ~21% compute (window/probe/estimate) — harmonic mix

@@ -1,22 +1,17 @@
 """Single-source shortest hop distances (parallel BFS).
 
-The unweighted shortest-path primitive (reachability with distance).
-Same iteration discipline as :mod:`osmspark.graph.cc`: a frontier of
-newly-settled nodes expands through the edge list one equi-join per
-round, distances settle monotonically (a node keeps its FIRST level —
-BFS layers), and the loop stops when a round settles nothing. Rounds =
-eccentricity of the source, each round one join + one combinable
-min-aggregate; the settled set is checkpointed per round the same way
-cc.py does (count + order-insensitive hash) so the convergence check
-doubles as the materialization barrier.
-
-The edge list is treated as UNDIRECTED (both directions expanded) —
-pass a pre-oriented list for directed semantics.
+The unweighted shortest-path primitive (reachability with distance):
+:func:`osmspark.graph.centrality.multi_source_hops` from a one-row
+roots frame. Rounds = eccentricity of the source + one confirming
+round; the edge list is treated as UNDIRECTED (both directions
+expanded) — pass a pre-oriented list for directed semantics.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from .centrality import multi_source_hops
 
 __all__ = ["shortest_hops"]
 
@@ -24,28 +19,8 @@ __all__ = ["shortest_hops"]
 def shortest_hops(edges: DataFrame, source, src: str = "src",
                   dst: str = "dst", max_rounds: int = 64) -> DataFrame:
     """(node, dist) for every node reachable from ``source`` (the
-    source itself at dist 0). Unreachable nodes are absent."""
-    both = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .union(edges.select(F.col(dst).alias("u"),
-                                F.col(src).alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct())
-
-    spark = edges.sparkSession
-    settled = spark.createDataFrame([(source, 0)], ["node", "dist"]) \
-        .withColumn("dist", F.col("dist").cast("int"))
-    frontier = settled
-    for r in range(1, max_rounds + 1):
-        nxt = (both.join(frontier.withColumnRenamed("node", "u"), "u")
-               .select(F.col("v").alias("node"))
-               .distinct()
-               .join(settled.select("node"), "node", "left_anti")
-               .withColumn("dist", F.lit(r).cast("int")))
-        # one action per round: materializes the frontier AND detects
-        # convergence (cc.py's discipline — no separate count job)
-        nxt = nxt.localCheckpoint()
-        if nxt.count() == 0:
-            break
-        settled = settled.union(nxt).localCheckpoint()
-        frontier = nxt
-    return settled
+    source itself at dist 0). Unreachable nodes are absent. Raises if
+    ``max_rounds`` does not exceed the source's eccentricity."""
+    roots = edges.sparkSession.createDataFrame([(source,)], ["root"])
+    return multi_source_hops(edges, roots, src, dst,
+                             max_rounds).drop("root")

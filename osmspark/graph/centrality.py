@@ -6,7 +6,7 @@ bfs.py consume; reference scope ends at entity decode —
 lib/pbfParser.js — so this is consumer-side graph analytics).
 
 Multi-source BFS carries (root, node) STATE through the same frontier
-discipline as :mod:`osmspark.graph.bfs` — one edge equi-join per round,
+discipline as a single-source BFS — one edge equi-join per round,
 first-settle-wins layers, localCheckpoint as both materialization
 barrier and convergence probe — but expands ALL roots simultaneously:
 rounds = max eccentricity over the roots, not |roots|·ecc sequential
@@ -41,6 +41,9 @@ def multi_source_hops(edges: DataFrame, roots: DataFrame,
     semantics); unreachable (root, node) pairs are absent.
 
     ``roots``: single-column DataFrame of root ids (deduplicated here).
+    Rounds = max root eccentricity + one round that settles nothing,
+    so ``max_rounds`` must exceed the largest eccentricity; raises
+    ``RuntimeError`` otherwise instead of returning partial distances.
     """
     both = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
             .union(edges.select(F.col(dst).alias("u"),
@@ -62,13 +65,14 @@ def multi_source_hops(edges: DataFrame, roots: DataFrame,
                      ["root", "node"], "left_anti")
                .withColumn("dist", F.lit(r).cast("int")))
         # one action per round: materializes the frontier AND detects
-        # convergence (bfs.py/cc.py's discipline)
+        # convergence
         nxt = nxt.localCheckpoint()
         if nxt.count() == 0:
-            break
+            return settled
         settled = settled.union(nxt).localCheckpoint()
         frontier = nxt
-    return settled
+    raise RuntimeError(
+        f"multi_source_hops did not converge in {max_rounds} rounds")
 
 
 def closeness_centrality(edges: DataFrame, roots: DataFrame,

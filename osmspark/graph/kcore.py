@@ -36,8 +36,7 @@ __all__ = ["kcore_hindex"]
 
 
 def kcore_hindex(edges: DataFrame, n_iter: int = 16,
-                 src: str = "src", dst: str = "dst",
-                 materialize: bool = False) -> DataFrame:
+                 src: str = "src", dst: str = "dst") -> DataFrame:
     """Core-number estimates after ``n_iter`` h-index iterations:
     (node, core) with core int64 — exact core numbers once ``n_iter``
     reaches the convergence depth (monotone, so overshooting is safe).
@@ -45,22 +44,12 @@ def kcore_hindex(edges: DataFrame, n_iter: int = 16,
     Input is an undirected edge list in any shape — duplicates, both
     directions, self-loops all tolerated (canonicalized first).
 
-    ``materialize`` repartitions the symmetrized edge table on the
-    JOIN key (``nbr``) and local-checkpoints it, making every round's
-    estimate join exchange-free on both sides (the estimate table
-    exits each round hash-partitioned on the node id, which the
-    alias-aware planner matches to the edge side) — exactly ONE
-    edge-scale shuffle per round remains, the window's node
-    partitioning. Default OFF on measurement: at the scaling suite's
-    n_iter=3 / 25M edges the one-time checkpoint write cost exceeded
-    the saved shuffles (level-8 kcore 73 s → 211 s with it on — the
-    RDD-storage write serializes and the checkpointed scan loses
-    whole-stage fusion with the join). Worth enabling only when
-    n_iter is large enough to amortize one materialization against
-    n_iter saved edge shuffles, or when the edge lineage is itself
-    expensive to recompute; a warehouse table BUCKETED on the node id
-    gets the same exchange-free join with none of the cost — the
-    100 TB answer (see pagerank_mass's docstring, same contract).
+    A warehouse edge table BUCKETED on the node id makes every round's
+    estimate join exchange-free on the edge side at no per-run cost —
+    the 100 TB answer (see pagerank_mass's docstring, same contract).
+    Repartitioning + local-checkpointing the edges per call instead
+    was measured slower (level-8 scaling suite, n_iter=3: 73 s →
+    211 s), so it is not done here.
     """
     canon = (edges.select(
         F.least(F.col(src), F.col(dst)).alias("a"),
@@ -72,9 +61,6 @@ def kcore_hindex(edges: DataFrame, n_iter: int = 16,
                                F.col("a").alias("nbr"))))
     est = (sym.groupBy("node")
            .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    if materialize:
-        sym = (sym.repartition(F.col("nbr"))
-               .localCheckpoint(eager=False))
     w = Window.partitionBy("node").orderBy(F.desc("nc"), F.asc("nbr"))
     for _ in range(n_iter):
         nb = sym.join(est.select(F.col("node").alias("nbr"),

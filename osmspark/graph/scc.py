@@ -7,7 +7,7 @@ inherently serial — so the distributed form is the classic
 forward-backward minimum peel (the Pregel/coloring family): per phase
 
 1. ``f(u)`` = min node id reachable FORWARD from u (min-label
-   propagation to fixpoint, signature-checked like ``cc_labels``),
+   propagation to fixpoint on :func:`osmspark.fixpoint.iterate`),
 2. ``b(u)`` = the same over REVERSED edges,
 3. every node with ``f(u) = b(u) = a`` is settled into SCC ``a``:
    u reaches a and a reaches u, so the pair equality is a PROOF of
@@ -21,27 +21,16 @@ web-shaped graphs settle the bulk in the first phase (every SCC whose
 min id is not forward-reachable from a smaller id settles
 immediately). Both propagation loops are edge equi-joins + combinable
 min aggregations — one shuffle pair per round, nothing driver-side but
-the convergence signature scalar (the cc.py contract).
+the convergence signature scalar.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..fixpoint import iterate
+
 __all__ = ["scc_labels", "condense", "topo_levels"]
-
-
-def _sig(df: DataFrame, a: str, b: str) -> tuple:
-    """Convergence signature, the cc.py discipline: count + TWO
-    independent order-insensitive hash sums — a false "stable" needs
-    a simultaneous collision of both 64-bit sums AND the count
-    (~2^-128), vs ~2^-64 for a single sum."""
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64(a, b).cast("decimal(38,0)")).alias("h1"),
-        F.sum(F.xxhash64(b, a, F.lit(7))
-              .cast("decimal(38,0)")).alias("h2")).collect()[0]
-    return (row["n"], row["h1"], row["h2"])
 
 
 def _min_reach(nodes: DataFrame, edges: DataFrame, forward: bool,
@@ -49,24 +38,17 @@ def _min_reach(nodes: DataFrame, edges: DataFrame, forward: bool,
     """(node, l): min id reachable from node along the edge direction
     (forward: follow s→d; backward: d→s). Self always included."""
     s, d = ("s", "d") if forward else ("d", "s")
-    lab = (nodes.select("node", F.col("node").alias("l"))
-           .localCheckpoint(eager=False))
-    cur = _sig(lab, "node", "l")
-    for _ in range(max_rounds):
+
+    def step(lab: DataFrame) -> DataFrame:
         cand = (edges.join(lab.select(F.col("node").alias(d),
                                       F.col("l").alias("dl")), d)
                 .select(F.col(s).alias("node"), F.col("dl").alias("l")))
-        new = (lab.unionByName(cand)
-               .groupBy("node").agg(F.min("l").alias("l"))
-               .localCheckpoint(eager=False))
-        nxt = _sig(new, "node", "l")
-        stable = nxt == cur
-        lab, cur = new, nxt
-        if stable:
-            return lab
-    raise RuntimeError(
-        f"scc min-label propagation did not converge in {max_rounds} "
-        "rounds (label signature still moving)")
+        return (lab.unionByName(cand)
+                .groupBy("node").agg(F.min("l").alias("l")))
+
+    return iterate("scc min-label propagation",
+                   nodes.select("node", F.col("node").alias("l")),
+                   step, ("node", "l"), max_rounds)
 
 
 def scc_labels(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -151,8 +133,8 @@ def topo_levels(dag: DataFrame, src: str = "src", dst: str = "dst",
     crawl/dependency executor runs (everything in one level is
     mutually independent given earlier levels).
 
-    Iterative max-relaxation with the cc.py signature-convergence
-    contract; rounds = DAG depth. Exact integers; raises on
+    Iterative max-relaxation on :func:`osmspark.fixpoint.iterate`;
+    rounds = DAG depth. Exact integers; raises on
     non-convergence — which on a CYCLIC input manifests as levels
     climbing past ``max_rounds``, so feeding a non-condensed graph
     fails loudly instead of looping forever.
@@ -163,22 +145,16 @@ def topo_levels(dag: DataFrame, src: str = "src", dst: str = "dst",
     nodes = (e.select(F.col("s").alias("node"))
              .union(e.select(F.col("d").alias("node")))
              .distinct())
-    lab = (nodes.select("node", F.lit(0).cast("long").alias("lv"))
-           .localCheckpoint(eager=False))
-    cur = _sig(lab, "node", "lv")
-    for _ in range(max_rounds):
+
+    def step(lab: DataFrame) -> DataFrame:
         cand = (e.join(lab.select(F.col("node").alias("s"),
                                   F.col("lv").alias("sl")), "s")
                 .select(F.col("d").alias("node"),
                         (F.col("sl") + 1).alias("lv")))
-        new = (lab.unionByName(cand)
-               .groupBy("node").agg(F.max("lv").alias("lv"))
-               .localCheckpoint(eager=False))
-        nxt = _sig(new, "node", "lv")
-        stable = nxt == cur
-        lab, cur = new, nxt
-        if stable:
-            return lab.select("node", F.col("lv").alias("level"))
-    raise RuntimeError(
-        f"topo_levels did not converge in {max_rounds} rounds — "
-        "input likely contains a cycle (condense() it first)")
+        return (lab.unionByName(cand)
+                .groupBy("node").agg(F.max("lv").alias("lv")))
+
+    lab = iterate("topo_levels (on a cyclic input? condense() it first)",
+                  nodes.select("node", F.lit(0).cast("long").alias("lv")),
+                  step, ("node", "lv"), max_rounds)
+    return lab.select("node", F.col("lv").alias("level"))

@@ -17,10 +17,9 @@ synchronous joins, not a priority queue). Each round is one equi-join
 ``min`` aggregate + an anti-improvement filter against the settled
 map; the loop stops when a round improves nothing. Round count = max
 hop count over all optimal paths (≤ V−1 in theory; small for
-real networks where heavy detours don't win). The settled table is
-checkpointed per round with the cc.py discipline — the convergence
-count doubles as the materialization barrier — so lineage never grows
-with the round number.
+real networks where heavy detours don't win); a run that exhausts
+``max_rounds`` with a non-empty frontier raises. The settled table is
+checkpointed per round, so lineage never grows with the round number.
 
 Weights must be NON-NEGATIVE integers (validated per-row inside the
 relaxation expression: a negative weight poisons the run with an
@@ -41,7 +40,10 @@ def shortest_paths(edges: DataFrame, source, src: str = "src",
     """(node, dist) — exact weighted shortest distance from ``source``
     for every reachable node (the source itself at dist 0); unreachable
     nodes are absent. Undirected by default: each edge row relaxes in
-    both directions with the SAME weight."""
+    both directions with the SAME weight. ``max_rounds`` must exceed
+    the largest hop count of an improving path; raises
+    ``RuntimeError`` otherwise instead of returning partial
+    distances."""
     w = (F.col(weight).cast("long"))
     # raise_error is never evaluated for valid rows (CASE short-circuit)
     w = F.when(w >= 0, w).otherwise(
@@ -68,12 +70,13 @@ def shortest_paths(edges: DataFrame, source, src: str = "src",
                             | (F.col("nd") < F.col("dist")))
                     .select("node", F.col("nd").alias("dist")))
         # one action per round: materializes the frontier AND detects
-        # convergence (bfs/cc discipline — no separate count job)
+        # convergence (no separate count job)
         improved = improved.localCheckpoint()
         if improved.count() == 0:
-            break
+            return settled
         settled = (settled.union(improved)
                    .groupBy("node").agg(F.min("dist").alias("dist"))
                    .localCheckpoint())
         frontier = improved
-    return settled
+    raise RuntimeError(
+        f"shortest_paths did not converge in {max_rounds} rounds")

@@ -27,10 +27,9 @@ so a level is ~12 cheap integer ops with no array literal, no CASE
 chain, and no ANSI bounds checks. And the walk runs ONLY the top
 ``level`` steps, not all 30: the walk is MSB-first, so a level-10 cell
 id depends on just the first 10 steps — the other 20 compute bits the
-parent mask discards. Profiling (tools/profile_s2.py) showed the r2
-regression was mostly *driver-side plan compilation* (~1.9 s of
-Catalyst time per fresh plan on the 30-level trees, vs ~0.9 s of
-execution); shrinking the tree 3x cuts both: measured at sf0.1 / 1M
+parent mask discards. Profiling showed the r2 regression was mostly
+*driver-side plan compilation* (~1.9 s of Catalyst time per fresh plan
+on the 30-level trees, vs ~0.9 s of execution); shrinking the tree 3x cuts both: measured at sf0.1 / 1M
 rows, plan ~0.5 s + exec ~0.4 s vs r2's 2.4 s total.
 
 Two structural constraints shape the loop (both measured, see
@@ -97,7 +96,7 @@ def _pack_table() -> int:
 _WALK_LIT = _pack_table()
 
 # Levels fused into one projection round (must divide MAX_LEVEL=30).
-# Trade-off measured by tools/profile_s2.py: fewer rounds = fewer
+# Trade-off measured by profiling: fewer rounds = fewer
 # per-Project row copies but bigger doConsume bodies; with the packed
 # shift-mask lookup all of {3, 5, 6} stay under the JIT method limit.
 _LEVELS_PER_ROUND = 5
@@ -162,7 +161,7 @@ def with_s2_cell_sql(df: DataFrame, level: int, lat_col: str = "lat",
     # so the remaining 30-level steps compute bits the parent mask
     # throws away. Skipping them shrinks BOTH the driver plan-compile
     # cost (the r2 regression was ~1.9s of optimizer time on the
-    # 30-level expression trees, measured in tools/profile_s2.py) and
+    # 30-level expression trees, measured by profiling) and
     # the executed work, ~proportionally to level/30.
     #
     # Per level: one fused shift-mask lookup (sub_pos and next orient

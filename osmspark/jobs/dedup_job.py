@@ -16,8 +16,9 @@ The classic Common-Crawl-scale pipeline shape:
    10^12-doc path: bucket equi-join, no all-pairs shuffle), ``simhash``
    (Hamming chunks), or ``jaccard`` (exact inverted-index join for
    modest corpora);
-3. ``dedup_clusters`` min-label propagation collapses transitive
-   near-dups; the min doc id per cluster is the canonical keeper;
+3. ``dedup_clusters`` (connected components in O(log n) rounds)
+   collapses transitive near-dups; the min doc id per cluster is the
+   canonical keeper;
 4. outputs: ``clusters/`` (doc_id → cluster_id), ``kept/`` (canonical
    docs only, original columns intact) — the deduplicated corpus.
 

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from ..graph.cc import cc_labels
+
 __all__ = ["exact_dedup", "ngram_jaccard_pairs", "minhash_signatures",
            "lsh_candidate_pairs", "simhash_signatures", "simhash_pairs",
            "cosine_neardup_pairs", "cosine_neardup_lsh", "dedup_clusters",
@@ -464,52 +466,19 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame,
     cluster whose id is the cluster's min doc id (the canonical keeper).
     Docs in no pair are their own singleton cluster.
 
-    Plan: min-label propagation — each iteration joins labels across
-    edges and keeps the per-node min (one shuffle join + one keyed agg
-    per iteration; edges are materialized once, symmetric). Converges in
-    O(cluster diameter) iterations — near-dup clusters are shallow (a
-    hub + variants), so 2-4 passes in practice; per-iteration results
-    ``localCheckpoint`` so lineage doesn't stack. At 10^12 docs each
-    iteration is one shuffle on doc_id — the standard large-scale CC
-    shape (alternating-star variants optimize constant factors, not the
-    shuffle count, and need the same joins).
-
-    ``max_iters`` is a cluster-DIAMETER bound: if labels are still
-    changing after the last iteration the returned ids would be split
-    clusters, so the function raises instead of silently returning
-    partial labels (a transitive chain of incrementally-edited docs can
-    exceed any fixed bound — raise ``max_iters`` for such graphs).
+    This is :func:`osmspark.graph.cc.cc_labels` (hash-greater-to-min,
+    O(log n) rounds, so a long chain of incrementally-edited docs costs
+    log-many rounds, not one per link) under the (doc_id, cluster_id)
+    names. Precondition: the pair endpoints are a
+    subset of ``docs``' ids, which holds whenever the pairs are built
+    from the same docs frame; an endpoint outside ``docs`` would get a
+    row of its own. ``max_iters`` bounds the rounds; if the components
+    are still moving after it the function raises instead of returning
+    split clusters.
     """
-    ids = docs.select(F.col(id_col).alias("id"))
-    edges = (pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-             .unionByName(pairs.select(F.col("b").alias("u"),
-                                       F.col("a").alias("v")))
-             .distinct().localCheckpoint(eager=True))
-    labels = ids.select("id", F.col("id").alias("label"))
-    for _ in range(max_iters):
-        neighbor_min = (edges.join(labels, edges.v == labels.id)
-                        .groupBy("u").agg(F.min("label").alias("nmin")))
-        new_labels = (labels.join(neighbor_min, labels.id == neighbor_min.u,
-                                  "left")
-                      .select(F.col("id"),
-                              F.least(F.col("label"),
-                                      F.coalesce(F.col("nmin"),
-                                                 F.col("label")))
-                              .alias("label"))
-                      .localCheckpoint(eager=True))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "id")
-                   .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"dedup_clusters did not converge in max_iters={max_iters} "
-            f"iterations ({changed} labels still changing): a near-dup "
-            "chain has diameter > max_iters — raise max_iters")
-    return labels.select(F.col("id").alias(id_col),
-                         F.col("label").alias("cluster_id"))
+    return (cc_labels(docs, pairs, id_col=id_col, max_rounds=max_iters)
+            .select(F.col("id").alias(id_col),
+                    F.col("label").alias("cluster_id")))
 
 
 # --------------------------------------------------------------------------

@@ -24,7 +24,8 @@ Spark-first shape:
    deterministic, one anti-join, no iteration. (The paper keeps one
    representative per near-duplicate group; min-id is the
    deterministic representative choice. For full transitive-closure
-   groups, feed the pair table to ``dedup.dedup_clusters`` instead.)
+   groups, feed the pair table to ``dedup.dedup_clusters`` — connected
+   components in O(log n) rounds — instead.)
 
 Scale: the shuffle keys are the cluster id (pairs) and the vec id
 (anti-join). An oversized cluster makes the pair stage quadratic in

@@ -19,13 +19,15 @@ Scale shape: D8 is one 8-offset explode equi-join on the cell key +
 one min(struct) argmin — the autocorr/k-ring neighborhood pattern,
 never an all-pairs join. Accumulation iterates
 ``acc(v) ← 1 + Σ_{u→v} acc(u)`` (exact int64; converges in flow-path
-depth, signature-checked like cc.py) — each round one equi-join of the
-O(cells) accumulator onto the flow forest + one combinable sum.
+depth on :func:`osmspark.fixpoint.iterate`) — each round one equi-join
+of the O(cells) accumulator onto the flow forest + one combinable sum.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..fixpoint import iterate
 
 __all__ = ["d8_flow", "flow_accumulation", "watershed_labels",
            "fill_depressions", "slope_aspect", "ruggedness_index"]
@@ -34,25 +36,16 @@ _OFFS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
          if not (dx == 0 and dy == 0)]
 
 
-def _sig(df: DataFrame, cols: tuple[str, ...]) -> tuple:
-    """cc.py convergence signature: count + two independent
-    order-insensitive hash sums (simultaneous-collision odds
-    ~2^-128)."""
-    rev = tuple(reversed(cols))
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h1"),
-        F.sum(F.xxhash64(*rev, F.lit(7))
-              .cast("decimal(38,0)")).alias("h2")).collect()[0]
-    return (row["n"], row["h1"], row["h2"])
-
-
 def d8_flow(cells: DataFrame, elev_col: str = "elev",
             cx_col: str = "cell_x", cy_col: str = "cell_y") -> DataFrame:
     """(cell_x, cell_y, to_x, to_y, drop) — one row per NON-sink cell,
     pointing at its steepest strictly-lower 8-neighbor. ``drop`` is
     the integer elevation difference. Absent neighbors (raster edge,
     nodata holes) simply aren't candidates.
+
+    int64 envelope: every drop must satisfy ``|drop| < 2^31``, since the
+    steepness rank ``drop² · 2`` is computed in int64 and wraps past
+    that (elevations in mm or cm are far inside it).
     """
     base = cells.select(F.col(cx_col).alias("cx"),
                         F.col(cy_col).alias("cy"),
@@ -95,10 +88,11 @@ def flow_accumulation(cells: DataFrame, flows: DataFrame,
                       max_rounds: int = 64) -> DataFrame:
     """(cell_x, cell_y, acc) — acc = number of cells draining THROUGH
     each cell (its own cell included, the standard convention), over
-    the D8 flow forest from :func:`d8_flow`. Converges in flow-path
-    depth; raises if the accumulator signature still moves after
-    ``max_rounds`` (a cyclic "flow" input — impossible from d8_flow,
-    whose edges strictly descend — would manifest that way).
+    the D8 flow forest from :func:`d8_flow`. One round per edge of the
+    longest flow path plus one confirming round, so ``max_rounds``
+    must exceed the longest flow path's edge count; raises otherwise.
+    A cyclic "flow" input — impossible from d8_flow, whose edges
+    strictly descend — would also raise.
     """
     # checkpoint the STATIC inputs: without it every convergence
     # round re-executes the full upstream d8_flow plan (explode +
@@ -111,10 +105,8 @@ def flow_accumulation(cells: DataFrame, flows: DataFrame,
                       F.col("to_x").alias("vx"),
                       F.col("to_y").alias("vy"))
          .localCheckpoint(eager=False))
-    acc = (base.select("cx", "cy", F.lit(1).cast("long").alias("acc"))
-           .localCheckpoint(eager=False))
-    cur = _sig(acc, ("cx", "cy", "acc"))
-    for _ in range(max_rounds):
+
+    def step(acc: DataFrame) -> DataFrame:
         inflow = (e.join(acc.select(F.col("cx").alias("ux"),
                                     F.col("cy").alias("uy"),
                                     F.col("acc").alias("ua")),
@@ -122,20 +114,18 @@ def flow_accumulation(cells: DataFrame, flows: DataFrame,
                   .groupBy(F.col("vx").alias("cx"),
                            F.col("vy").alias("cy"))
                   .agg(F.sum("ua").alias("inflow")))
-        new = (base.join(inflow, ["cx", "cy"], "left")
-               .select("cx", "cy",
-                       (F.lit(1) + F.coalesce(F.col("inflow"),
-                                              F.lit(0).cast("long")))
-                       .cast("long").alias("acc"))
-               .localCheckpoint(eager=False))
-        nxt = _sig(new, ("cx", "cy", "acc"))
-        stable = nxt == cur
-        acc, cur = new, nxt
-        if stable:
-            return acc.select(F.col("cx").alias("cell_x"),
-                              F.col("cy").alias("cell_y"), "acc")
-    raise RuntimeError(
-        f"flow_accumulation did not converge in {max_rounds} rounds")
+        return (base.join(inflow, ["cx", "cy"], "left")
+                .select("cx", "cy",
+                        (F.lit(1) + F.coalesce(F.col("inflow"),
+                                               F.lit(0).cast("long")))
+                        .cast("long").alias("acc")))
+
+    acc = iterate("flow_accumulation",
+                  base.select("cx", "cy",
+                              F.lit(1).cast("long").alias("acc")),
+                  step, ("cx", "cy", "acc"), max_rounds)
+    return acc.select(F.col("cx").alias("cell_x"),
+                      F.col("cy").alias("cell_y"), "acc")
 
 
 def watershed_labels(cells: DataFrame, flows: DataFrame,
@@ -152,7 +142,7 @@ def watershed_labels(cells: DataFrame, flows: DataFrame,
     ⌈log₂ depth⌉ rounds — the classic parallel list-ranking shortcut,
     vs flow-path-depth rounds for naive following. Per round ONE
     equi-join of the O(cells) pointer table with itself on the
-    pointee key + the cc.py two-hash convergence signature.
+    pointee key, driven by :func:`osmspark.fixpoint.iterate`.
     """
     ptr = (cells.select(F.col(cx_col).alias("cx"),
                         F.col(cy_col).alias("cy"))
@@ -163,30 +153,24 @@ def watershed_labels(cells: DataFrame, flows: DataFrame,
                  ["cx", "cy"], "left")
            .select("cx", "cy",
                    F.coalesce(F.col("px"), F.col("cx")).alias("px"),
-                   F.coalesce(F.col("py"), F.col("cy")).alias("py"))
-           .localCheckpoint(eager=False))
-    cur = _sig(ptr, ("cx", "cy", "px", "py"))
-    for _ in range(max_rounds):
+                   F.coalesce(F.col("py"), F.col("cy")).alias("py")))
+
+    def step(ptr: DataFrame) -> DataFrame:
         hop = ptr.select(F.col("cx").alias("px"),
                          F.col("cy").alias("py"),
                          F.col("px").alias("gx"),
                          F.col("py").alias("gy"))
-        new = (ptr.join(hop, ["px", "py"])
-               .select("cx", "cy",
-                       F.col("gx").alias("px"),
-                       F.col("gy").alias("py"))
-               .localCheckpoint(eager=False))
-        nxt = _sig(new, ("cx", "cy", "px", "py"))
-        stable = nxt == cur
-        ptr, cur = new, nxt
-        if stable:
-            return ptr.select(F.col("cx").alias("cell_x"),
-                              F.col("cy").alias("cell_y"),
-                              F.col("px").alias("sink_x"),
-                              F.col("py").alias("sink_y"))
-    raise RuntimeError(
-        f"watershed_labels did not converge in {max_rounds} "
-        "pointer-jumping rounds")
+        return (ptr.join(hop, ["px", "py"])
+                .select("cx", "cy",
+                        F.col("gx").alias("px"),
+                        F.col("gy").alias("py")))
+
+    ptr = iterate("watershed_labels pointer jumping", ptr, step,
+                  ("cx", "cy", "px", "py"), max_rounds)
+    return ptr.select(F.col("cx").alias("cell_x"),
+                      F.col("cy").alias("cell_y"),
+                      F.col("px").alias("sink_x"),
+                      F.col("py").alias("sink_y"))
 
 
 def fill_depressions(cells: DataFrame, elev_col: str = "elev",
@@ -205,8 +189,8 @@ def fill_depressions(cells: DataFrame, elev_col: str = "elev",
 
         W(v) ← max(elev(v), min over 8-neighbors of W(u))
 
-    monotonically draining until the fixpoint — exact integers, the
-    cc.py two-hash signature detects convergence, rounds bounded by
+    monotonically draining until the fixpoint — exact integers,
+    :func:`osmspark.fixpoint.iterate` detects convergence, rounds bounded by
     the longest interior drainage path (``max_rounds`` guards flats).
     Per round: one 8-offset scatter join of the O(cells) level table +
     one combinable min + one static join — the flow_accumulation
@@ -232,10 +216,9 @@ def fill_depressions(cells: DataFrame, elev_col: str = "elev",
                      .alias("interior"))
              .select("cx", "cy", "e", "interior",
                      F.when(F.col("interior"), big)
-                     .otherwise(F.col("e")).alias("w"))
-             .localCheckpoint(eager=False))
-    cur = _sig(state, ("cx", "cy", "w"))
-    for _ in range(max_rounds):
+                     .otherwise(F.col("e")).alias("w")))
+
+    def step(state: DataFrame) -> DataFrame:
         nbr_min = (state.select(F.col("cx").alias("ox"),
                                 F.col("cy").alias("oy"),
                                 F.col("w"),
@@ -245,25 +228,21 @@ def fill_depressions(cells: DataFrame, elev_col: str = "elev",
                            "w")
                    .groupBy("cx", "cy")
                    .agg(F.min("w").alias("nw")))
-        new = (state.join(nbr_min, ["cx", "cy"], "left")
-               .select("cx", "cy", "e", "interior",
-                       F.when(F.col("interior"),
-                              F.greatest(F.col("e"),
-                                         F.coalesce(F.col("nw"), big)))
-                       .otherwise(F.col("e")).alias("w"))
-               .localCheckpoint(eager=False))
-        nxt = _sig(new, ("cx", "cy", "w"))
-        stable = nxt == cur
-        state, cur = new, nxt
-        if stable:
-            return state.select(
-                F.col("cx").alias("cell_x"),
-                F.col("cy").alias("cell_y"),
-                F.col("e").alias("elev"),
-                (F.col("w") - F.col("e")).cast("long").alias("filled"))
-    raise RuntimeError(
-        f"fill_depressions did not converge in {max_rounds} rounds "
-        "(very long interior drainage path or a flat plateau chain)")
+        return (state.join(nbr_min, ["cx", "cy"], "left")
+                .select("cx", "cy", "e", "interior",
+                        F.when(F.col("interior"),
+                               F.greatest(F.col("e"),
+                                          F.coalesce(F.col("nw"), big)))
+                        .otherwise(F.col("e")).alias("w")))
+
+    state = iterate("fill_depressions (very long interior drainage path "
+                    "or a flat plateau chain)", state, step,
+                    ("cx", "cy", "w"), max_rounds)
+    return state.select(
+        F.col("cx").alias("cell_x"),
+        F.col("cy").alias("cell_y"),
+        F.col("e").alias("elev"),
+        (F.col("w") - F.col("e")).cast("long").alias("filled"))
 
 
 def slope_aspect(cells: DataFrame, elev_col: str = "elev",

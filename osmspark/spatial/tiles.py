@@ -2,9 +2,9 @@
 
 North-rule operator "raster↔vector tile aggregation producing per-cell
 counts". All aggregation is plain DataFrame groupBy (map-side partial agg +
-final hash agg — Catalyst handles the two-phase plan); only the cell-id
-encode itself runs in a vectorized pandas UDF (NumPy, Arrow batches).
-The raster (z/x/y) variant is pure Spark expressions, fully SQL-expressible
+final hash agg — Catalyst handles the two-phase plan), and every cell-id
+encode (hex, S2, raster z/x/y) is a pure Spark SQL expression — JVM
+codegen, no Python worker; the raster variant is fully SQL-expressible
 for the DuckDB oracle.
 
 Scale notes: groupBy(cell) shuffles on the cell key; dense city cells are
@@ -17,38 +17,14 @@ resolution re-aggregates *tile counts* (tiny), never the raw points.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
 
-from ..grid import hexgrid, s2
 from ..grid.hexgrid_sql import hex_cell_col
 
 __all__ = ["with_hex_cell", "with_s2_cell", "tile_counts", "rollup",
            "raster_tile_counts", "tile_pyramid", "kring_smooth",
            "hex_to_raster", "raster_to_points", "with_quadkey",
            "tile_mode"]
-
-
-def _hex_udf(res: int):
-    """pandas-UDF hex encode — kept for cross-checking hex_cell_col in
-    tests; production paths use the pure-SQL expression (JVM codegen)."""
-    @F.pandas_udf(T.LongType())
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(hexgrid.cell_id(lat.to_numpy(), lon.to_numpy(), res))
-    return enc
-
-
-def _s2_udf(level: int):
-    """pandas-UDF S2 encode — kept for cross-checking the pure-SQL
-    expression path (s2_sql.with_s2_cell_sql) in tests; production paths
-    use the SQL form (JVM codegen, no Python worker)."""
-    @F.pandas_udf(T.LongType())
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        # store as signed int64 (Spark has no uint64); bit pattern preserved
-        return pd.Series(
-            s2.cell_id(lat.to_numpy(), lon.to_numpy(), level).astype(np.int64))
-    return enc
 
 
 def with_hex_cell(df: DataFrame, res: int, lat_col: str = "lat",

@@ -1,5 +1,5 @@
-"""Pointer-jumping connected components: parity with BFS and with the
-one-hop propagation operator, log-round convergence on deep chains."""
+"""Hash-greater-to-min connected components: parity with BFS and with
+dedup_clusters, log-round convergence on deep chains."""
 
 from __future__ import annotations
 

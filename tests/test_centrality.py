@@ -125,3 +125,19 @@ def test_harmonic_ranks_align_with_closeness_on_component(frames):
     comp = [0, 3, 6]     # roots inside the big component
     assert max(comp, key=h.get) == max(comp, key=c.get)
     assert min(comp, key=h.get) == min(comp, key=c.get)
+
+
+def test_frontier_budget_raises_instead_of_truncating(spark):
+    # path 0-1-...-6: eccentricity 6 from node 0, so 6 expanding rounds
+    # plus one round that settles nothing
+    from osmspark.graph.bfs import shortest_hops
+    path = spark.createDataFrame(pd.DataFrame(
+        {"src": range(6), "dst": range(1, 7)}))
+    root = spark.createDataFrame(pd.DataFrame({"root": [0]}))
+    with pytest.raises(RuntimeError, match="did not converge in 6 rounds"):
+        multi_source_hops(path, root, max_rounds=6)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        shortest_hops(path, 0, max_rounds=6)
+    got = {int(r.node): int(r.dist)
+           for r in shortest_hops(path, 0, max_rounds=7).collect()}
+    assert got == {i: i for i in range(7)}

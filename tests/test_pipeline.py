@@ -290,9 +290,8 @@ def test_simhash_pairs_rejects_bad_threshold(docs):
 
 
 def test_dedup_clusters_raises_on_nonconvergence(spark):
-    """A transitive chain with diameter > max_iters must RAISE, not
-    silently return split clusters (the min label walks one hop per
-    iteration)."""
+    """A transitive chain that needs more rounds than max_iters must
+    RAISE, not silently return split clusters."""
     from osmspark.pipeline.dedup import dedup_clusters
     n = 8
     docs = spark.createDataFrame(

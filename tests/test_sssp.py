@@ -87,3 +87,11 @@ def test_long_light_chain_beats_heavy_edge(spark):
     edges = chain + [(0, 30, 100)]
     got = _run(spark, edges, 0)
     assert got[30] == 30
+
+
+def test_round_budget_raises_instead_of_truncating(spark):
+    # unit-weight path 0-1-...-6: 6 improving rounds + 1 empty round
+    path = [(i, i + 1, 1) for i in range(6)]
+    with pytest.raises(RuntimeError, match="did not converge in 6 rounds"):
+        _run(spark, path, 0, max_rounds=6)
+    assert _run(spark, path, 0, max_rounds=7) == {i: i for i in range(7)}
