@@ -16,6 +16,7 @@ ListArray / StructArray) — no per-row Python objects on the hot path.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
@@ -45,15 +46,17 @@ def decode_page(html: bytes) -> list[tuple[int, str, object]]:
     OSMHeader. Unknown blob types are kept with decoded=None (the
     reference's random-access API exposes them in the manifest too).
     """
-    out = []
-    for fb, blob in split_file_blocks(html):
-        if fb.type == "OSMData":
-            out.append((fb.blob_idx, fb.type, decode_primitive_block(inflate_blob(blob))))
-        elif fb.type == "OSMHeader":
-            out.append((fb.blob_idx, fb.type, decode_header_block(inflate_blob(blob))))
-        else:
-            out.append((fb.blob_idx, fb.type, None))
-    return out
+    # frame the whole page first: a framing error raises before any
+    # blob decodes
+    return [_decode_blob(fb, blob) for fb, blob in split_file_blocks(html)]
+
+
+def _decode_blob(fb, blob) -> tuple[int, str, object]:
+    if fb.type == "OSMData":
+        return fb.blob_idx, fb.type, decode_primitive_block(inflate_blob(blob))
+    if fb.type == "OSMHeader":
+        return fb.blob_idx, fb.type, decode_header_block(inflate_blob(blob))
+    return fb.blob_idx, fb.type, None
 
 
 def decode_page_quarantine(
@@ -84,14 +87,7 @@ def decode_page_quarantine(
             break
         next_idx = fb.blob_idx + 1
         try:
-            if fb.type == "OSMData":
-                blocks.append((fb.blob_idx, fb.type,
-                               decode_primitive_block(inflate_blob(blob))))
-            elif fb.type == "OSMHeader":
-                blocks.append((fb.blob_idx, fb.type,
-                               decode_header_block(inflate_blob(blob))))
-            else:
-                blocks.append((fb.blob_idx, fb.type, None))
+            blocks.append(_decode_blob(fb, blob))
         except PbfError as e:
             errors.append((fb.blob_idx, e.kind, str(e)))
     return blocks, errors
@@ -180,23 +176,20 @@ def _iter_pages(batch: pa.RecordBatch):
         yield urls[i].as_py(), htmls[i].as_py()
 
 
-def _make_nodes_fn(on_error: str = "raise"):
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            acc = _NodeAccumulator()
-            for url, html in _iter_pages(batch):
-                for block_idx, btype, decoded in _page_blocks(html, on_error):
-                    if btype != "OSMData":
-                        continue
-                    for group_idx, grp in enumerate(decoded.groups):
-                        if grp.kind == "nodes":
-                            acc.add_group(url, block_idx, group_idx, grp.nodes)
-            yield from acc.flush()
-    return fn
-
-
-# default instance — also consumed by the streaming source
-_nodes_fn = _make_nodes_fn()
+# The ``_*_fn`` decoders are mapInArrow functions; the public API binds
+# ``on_error`` with ``partial``. The streaming source uses ``_nodes_fn``
+# as is (raise mode).
+def _nodes_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
+    for batch in it:
+        acc = _NodeAccumulator()
+        for url, html in _iter_pages(batch):
+            for block_idx, btype, decoded in _page_blocks(html, on_error):
+                if btype != "OSMData":
+                    continue
+                for group_idx, grp in enumerate(decoded.groups):
+                    if grp.kind == "nodes":
+                        acc.add_group(url, block_idx, group_idx, grp.nodes)
+        yield from acc.flush()
 
 
 def _info_cols(rows: list[dict]):
@@ -211,13 +204,7 @@ def _info_cols(rows: list[dict]):
     ]
 
 
-def _make_ways_fn(on_error: str = "raise"):
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _ways_fn_impl(it, on_error)
-    return fn
-
-
-def _ways_fn_impl(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
+def _ways_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
     for batch in it:
         rows = []
         for url, html in _iter_pages(batch):
@@ -259,13 +246,7 @@ def _ways_fn_impl(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iter
         yield pa.RecordBatch.from_arrays(cols, schema=_ARROW_WAY_SCHEMA)
 
 
-def _make_relations_fn(on_error: str = "raise"):
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _relations_fn_impl(it, on_error)
-    return fn
-
-
-def _relations_fn_impl(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
+def _relations_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
     for batch in it:
         rows = []
         for url, html in _iter_pages(batch):
@@ -312,13 +293,7 @@ def _relations_fn_impl(it: Iterator[pa.RecordBatch], on_error: str = "raise") ->
         yield pa.RecordBatch.from_arrays(cols, schema=_ARROW_REL_SCHEMA)
 
 
-def _make_headers_fn(on_error: str = "raise"):
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _headers_fn_impl(it, on_error)
-    return fn
-
-
-def _headers_fn_impl(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
+def _headers_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
     for batch in it:
         rows = []
         for url, html in _iter_pages(batch):
@@ -394,13 +369,7 @@ def render_text(decoded_blocks: list) -> str:
     return "\n".join(lines)
 
 
-def _make_text_fn(on_error: str = "raise"):
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _text_fn_impl(it, on_error)
-    return fn
-
-
-def _text_fn_impl(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
+def _text_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
     for batch in it:
         urls, texts = [], []
         for url, html in _iter_pages(batch):
@@ -426,19 +395,19 @@ def nodes_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:
     """``on_error``: "raise" (parity default — a bad blob fails the job,
     like the reference's fatal error path) or "quarantine" (bad blobs
     are skipped; read them via ``quarantine_from_pages``)."""
-    return _pruned(pages).mapInArrow(_make_nodes_fn(on_error), model.NODE_SCHEMA)
+    return _pruned(pages).mapInArrow(partial(_nodes_fn, on_error=on_error), model.NODE_SCHEMA)
 
 
 def ways_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:
-    return _pruned(pages).mapInArrow(_make_ways_fn(on_error), model.WAY_SCHEMA)
+    return _pruned(pages).mapInArrow(partial(_ways_fn, on_error=on_error), model.WAY_SCHEMA)
 
 
 def relations_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:
-    return _pruned(pages).mapInArrow(_make_relations_fn(on_error), model.RELATION_SCHEMA)
+    return _pruned(pages).mapInArrow(partial(_relations_fn, on_error=on_error), model.RELATION_SCHEMA)
 
 
 def headers_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:
-    return _pruned(pages).mapInArrow(_make_headers_fn(on_error), model.HEADER_SCHEMA)
+    return _pruned(pages).mapInArrow(partial(_headers_fn, on_error=on_error), model.HEADER_SCHEMA)
 
 
 def quarantine_from_pages(pages: DataFrame) -> DataFrame:
@@ -488,4 +457,4 @@ def bounds_from_pages(pages: DataFrame) -> DataFrame:
 
 
 def extracted_text_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:
-    return _pruned(pages).mapInArrow(_make_text_fn(on_error), model.TEXT_SCHEMA)
+    return _pruned(pages).mapInArrow(partial(_text_fn, on_error=on_error), model.TEXT_SCHEMA)

@@ -85,6 +85,9 @@ def get_spark(app: str = "osmspark", master: str | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # pinned, not inherited from the deployment's default: the exact
+        # int64 moments and ranks must raise on overflow, never wrap
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # big Arrow batches: Python-UDF cost is per-batch fixed overhead +
         # per-row work; 4k batches made the PIP refine 5× slower than 64k

@@ -17,9 +17,9 @@ while |dev| = |N·x − S| < 3·10^9 (int64 product headroom); past that
 multiplying — noted, not silently wrong: decimal sums overflow to NULL,
 never wrap.
 
-Scale shape: adjacency is the dwithin-style trick — one side explodes
-its 4 rook offsets, equi-join on the cell key (one shuffle, no range
-or cross join); the three moments (N, S, Σdev², Σdev·dev) are two
+Scale shape: adjacency is one ``lattice.scatter`` of every cell to
+its 4 rook offsets, then an equi-join on the cell key (one shuffle, no
+range or cross join); the three moments (N, S, Σdev², Σdev·dev) are two
 map-side-combinable aggregations. Observed-cells-only convention:
 absent tiles are not zero-valued observations (the standard lattice
 treatment for sparse rasters).
@@ -28,6 +28,8 @@ treatment for sparse rasters).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..grid.lattice import ROOK, block, scatter
 
 __all__ = ["morans_i", "gearys_c", "getis_ord_gi_star",
            "local_morans_i", "join_counts", "getis_general_g",
@@ -53,16 +55,7 @@ def morans_i(cells: DataFrame, x_col: str = "n",
            .select("cx", "cy", "n",
                    (F.col("n") * F.col("x") - F.col("s")).alias("dev")))
 
-    offs = F.array(
-        F.struct(F.lit(1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(-1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(1).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(-1).alias("dy")))
-    left = (dev.select("dev", F.explode(offs).alias("o"),
-                       F.col("cx"), F.col("cy"))
-            .select(F.col("dev").alias("dev_i"),
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
+    left = scatter(dev, ["cx", "cy"], ROOK, F.col("dev").alias("dev_i"))
     right = dev.select(F.col("cx"), F.col("cy"),
                        F.col("dev").alias("dev_j"))
     pairs = left.join(right, ["cx", "cy"], "inner")
@@ -108,9 +101,9 @@ def gearys_c(cells: DataFrame, x_col: str = "n",
     with num/den decimal(38,0)-exact sums (overflow → NULL, never a
     wrap) and one final float division of identical exact operands.
 
-    Same scale shape as morans_i: one exploded-4-offset equi-join (one
-    shuffle, no range/cross join) and two combinable aggregations;
-    absent tiles are not zero observations.
+    Same scale shape as morans_i: one ``lattice.scatter`` to the 4 rook
+    offsets + equi-join (one shuffle, no range/cross join) and two
+    combinable aggregations; absent tiles are not zero observations.
 
     One-row result: (n_cells, w_pairs, num, den, geary_c); NULL C when
     den = 0 (constant field), W = 0 (no adjacency) or N < 2.
@@ -125,17 +118,7 @@ def gearys_c(cells: DataFrame, x_col: str = "n",
                    F.col("x"),
                    (F.col("n") * F.col("x") - F.col("s")).alias("dev")))
 
-    offs = F.array(
-        F.struct(F.lit(1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(-1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(1).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(-1).alias("dy")))
-    left = (dev.select(F.col("x").alias("x_i"),
-                       F.explode(offs).alias("o"),
-                       F.col("cx"), F.col("cy"))
-            .select("x_i",
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
+    left = scatter(dev, ["cx", "cy"], ROOK, F.col("x").alias("x_i"))
     right = dev.select(F.col("cx"), F.col("cy"),
                        F.col("x").alias("x_j"))
     pairs = left.join(right, ["cx", "cy"], "inner")
@@ -186,10 +169,11 @@ def getis_ord_gi_star(cells: DataFrame, x_col: str = "n",
     (never a silent int64 wrap); the float tail is division/sqrt of
     identical exact operands on any IEEE engine, rounded to 9 dp.
 
-    Scale shape: one exploded-offset equi-join ((2r+1)² offsets — no
-    range or cross join), one per-cell combinable aggregation, and the
-    three global moments broadcast. Observed-cells-only convention as
-    in morans_i: absent tiles are not zero observations.
+    Scale shape: one ``lattice.scatter`` to the (2r+1)² block offsets +
+    equi-join (no range or cross join), one per-cell combinable
+    aggregation, and the three global moments broadcast.
+    Observed-cells-only convention as in morans_i: absent tiles are not
+    zero observations.
 
     NULL z when N = 1 or C_i = 0 (the neighborhood covers every
     observed cell — variance of the permutation distribution is 0).
@@ -203,24 +187,17 @@ def getis_ord_gi_star(cells: DataFrame, x_col: str = "n",
         F.sum(F.col("x").cast("decimal(38,0)")
               * F.col("x").cast("decimal(38,0)")).alias("q_d"))
 
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)])
     # origin cell scatters to every neighborhood slot it can observe
     # from; joining on the slot == "which observed cells does origin
     # see" because the offset grid is symmetric.
-    left = (base.select(F.col("cx").alias("ox"), F.col("cy").alias("oy"),
-                        F.explode(offs).alias("o"))
-            .select("ox", "oy",
-                    (F.col("ox") + F.col("o.dx")).alias("cx"),
-                    (F.col("oy") + F.col("o.dy")).alias("cy")))
-    nbr = (left.join(base, ["cx", "cy"], "inner")
-           .groupBy("ox", "oy")
+    nbr = (scatter(base, ["cx", "cy"], block(ring))
+           .join(base, ["cx", "cy"], "inner")
+           .groupBy("o_cx", "o_cy")
            .agg(F.count(F.lit(1)).alias("w_i"),
                 F.sum("x").alias("l_sum")))
 
-    joined = (base.join(nbr, (F.col("cx") == F.col("ox"))
-                        & (F.col("cy") == F.col("oy")), "inner")
+    joined = (base.join(nbr, (F.col("cx") == F.col("o_cx"))
+                        & (F.col("cy") == F.col("o_cy")), "inner")
               .crossJoin(F.broadcast(tot)))
     a_d = (F.col("n").cast("decimal(38,0)")
            * F.col("l_sum").cast("decimal(38,0)")
@@ -265,10 +242,10 @@ def local_morans_i(cells: DataFrame, x_col: str = "n",
     ``num_i`` over all cells equals the global morans_i numerator·N,
     pinning the decomposition.
 
-    Same plan shape as morans_i: one exploded-4-offset equi-join, one
-    per-cell aggregation, global moments broadcast. Isolated cells
-    (w_i = 0) keep a row with lsum = 0 and I_i = 0 — the convention
-    that makes ΣI_i reproduce the global numerator exactly.
+    Same plan shape as morans_i: one ``lattice.scatter`` rook
+    equi-join, one per-cell aggregation, global moments broadcast.
+    Isolated cells (w_i = 0) keep a row with lsum = 0 and I_i = 0 — the
+    convention that makes ΣI_i reproduce the global numerator exactly.
     Output: (cell_x, cell_y, x, w_i, dev, lsum, lisa_i).
     """
     base = cells.select(F.col(cx_col).alias("cx"),
@@ -279,28 +256,18 @@ def local_morans_i(cells: DataFrame, x_col: str = "n",
            .select("cx", "cy", "n", "x",
                    (F.col("n") * F.col("x") - F.col("s")).alias("dev")))
 
-    offs = F.array(
-        F.struct(F.lit(1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(-1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(1).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(-1).alias("dy")))
-    left = (dev.select(F.col("cx").alias("ox"), F.col("cy").alias("oy"),
-                       F.explode(offs).alias("o"))
-            .select("ox", "oy",
-                    (F.col("ox") + F.col("o.dx")).alias("cx"),
-                    (F.col("oy") + F.col("o.dy")).alias("cy")))
-    nbr = (left.join(dev.select("cx", "cy",
-                                F.col("dev").alias("dev_j")),
-                     ["cx", "cy"], "inner")
-           .groupBy("ox", "oy")
+    nbr = (scatter(dev, ["cx", "cy"], ROOK)
+           .join(dev.select("cx", "cy", F.col("dev").alias("dev_j")),
+                 ["cx", "cy"], "inner")
+           .groupBy("o_cx", "o_cy")
            .agg(F.count(F.lit(1)).alias("w_i"),
                 F.sum("dev_j").alias("lsum")))
 
     den = dev.agg(F.sum(F.col("dev").cast("decimal(38,0)")
                         * F.col("dev").cast("decimal(38,0)"))
                   .alias("den_d"))
-    j = (dev.join(nbr, (F.col("cx") == F.col("ox"))
-                  & (F.col("cy") == F.col("oy")), "left")
+    j = (dev.join(nbr, (F.col("cx") == F.col("o_cx"))
+                  & (F.col("cy") == F.col("o_cy")), "left")
          .crossJoin(F.broadcast(den)))
     w_i = F.coalesce(F.col("w_i"), F.lit(0)).cast("long")
     lsum = F.coalesce(F.col("lsum"), F.lit(0)).cast("long")
@@ -330,7 +297,7 @@ def join_counts(cells: DataFrame, x_col: str = "n",
     exact integers; the whole result is integer-only (trivially
     engine-exact — no float anywhere).
 
-    One exploded-4-offset equi-join + one global census.
+    One ``lattice.scatter`` rook equi-join + one global census.
     Output: (n_cells, n_black, w_pairs, bb, bw, ww) — w_pairs is the
     ORDERED pair count (= 2W), bb+bw+ww = w_pairs/2.
     """
@@ -344,20 +311,9 @@ def join_counts(cells: DataFrame, x_col: str = "n",
                  .cast("int").alias("black"),
                  "n"))
 
-    offs = F.array(
-        F.struct(F.lit(1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(-1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(1).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(-1).alias("dy")))
-    left = (b.select(F.col("black").alias("b_i"),
-                     F.explode(offs).alias("o"),
-                     F.col("cx"), F.col("cy"))
-            .select("b_i",
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
-    pairs = left.join(b.select("cx", "cy",
-                               F.col("black").alias("b_j")),
-                      ["cx", "cy"], "inner")
+    pairs = (scatter(b, ["cx", "cy"], ROOK, F.col("black").alias("b_i"))
+             .join(b.select("cx", "cy", F.col("black").alias("b_j")),
+                   ["cx", "cy"], "inner"))
     agg = pairs.agg(
         F.count(F.lit(1)).alias("w_pairs"),
         (F.sum(F.col("b_i") * F.col("b_j")) / 2).cast("long").alias("bb"),
@@ -385,9 +341,10 @@ def getis_general_g(cells: DataFrame, x_col: str = "n",
 
         G = Σ_{i≠j} w_ij x_i x_j / Σ_{i≠j} x_i x_j
 
-    Numerator: within-ring ordered products (the exploded (2r+1)²−1
-    offset equi-join); denominator: (Σx)² − Σx² — both exact
-    decimal(38,0) integers, ONE final division rounded 9 dp.
+    Numerator: within-ring ordered products (one ``lattice.scatter``
+    to the (2r+1)²−1 offsets + equi-join); denominator: (Σx)² − Σx²
+    — both exact decimal(38,0) integers, ONE final division rounded
+    9 dp.
     Output one row: (n_cells, w_pairs, num, den, general_g); NULL G
     when the denominator is 0 (≤1 nonzero cell) or no adjacency.
     """
@@ -399,16 +356,8 @@ def getis_general_g(cells: DataFrame, x_col: str = "n",
                    F.sum(xd).alias("s_d"),
                    F.sum(xd * xd).alias("q_d"))
 
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in range(-ring, ring + 1)
-        for dy in range(-ring, ring + 1) if not (dx == 0 and dy == 0)])
-    left = (base.select(F.col("x").alias("x_i"),
-                        F.explode(offs).alias("o"),
-                        F.col("cx"), F.col("cy"))
-            .select("x_i",
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
+    left = scatter(base, ["cx", "cy"], block(ring, centre=False),
+                   F.col("x").alias("x_i"))
     pairs = left.join(base.select("cx", "cy", F.col("x").alias("x_j")),
                       ["cx", "cy"], "inner")
     num = pairs.agg(
@@ -444,8 +393,8 @@ def bivariate_morans_i(cells: DataFrame, x_col: str = "x",
     between the cross-product numerator and the geometric-mean
     denominator; the two sqrt/division ops are the only floats
     (identical exact operands ⇒ identical IEEE result, the gi_star
-    √B·√C precedent). Same scale shape: one exploded-4-offset rook
-    equi-join + combinable aggregations, broadcast one-row totals.
+    √B·√C precedent). Same scale shape: one ``lattice.scatter``
+    rook equi-join + combinable aggregations, broadcast one-row totals.
 
     One-row result: (n_cells, w_pairs, num, den_x, den_y, moran_xy);
     NULL when either field is constant or no adjacency exists.
@@ -460,16 +409,7 @@ def bivariate_morans_i(cells: DataFrame, x_col: str = "x",
            .select("cx", "cy",
                    (F.col("n") * F.col("x") - F.col("sx")).alias("devx"),
                    (F.col("n") * F.col("y") - F.col("sy")).alias("devy")))
-    offs = F.array(
-        F.struct(F.lit(1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(-1).alias("dx"), F.lit(0).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(1).alias("dy")),
-        F.struct(F.lit(0).alias("dx"), F.lit(-1).alias("dy")))
-    left = (dev.select("devx", F.explode(offs).alias("o"),
-                       F.col("cx"), F.col("cy"))
-            .select(F.col("devx").alias("dev_i"),
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
+    left = scatter(dev, ["cx", "cy"], ROOK, F.col("devx").alias("dev_i"))
     right = dev.select("cx", "cy", F.col("devy").alias("dev_j"))
     pairs = left.join(right, ["cx", "cy"], "inner")
     num = pairs.agg(

@@ -16,15 +16,17 @@ construction.
 
 Exactness: the "has a neighbor" census is a DISTINCT count of exact
 integers; each PR is ONE division rounded 9 dp; PI = least() of two
-identical-on-both-engines doubles. Scale shape: one 9-offset explode
-equi-join on the cell key (never all-pairs), two combinable censuses,
-and a category-pair join on a table whose size is |categories|² —
-broadcastable at any corpus scale.
+identical-on-both-engines doubles. Scale shape: one 9-offset
+``lattice.scatter`` equi-join on the cell key (never all-pairs), two
+combinable censuses, and a category-pair join on a table whose size is
+|categories|² — broadcastable at any corpus scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..grid.lattice import block, scatter
 
 __all__ = ["colocation_pi"]
 
@@ -45,14 +47,8 @@ def colocation_pi(points: DataFrame, cell_deg: float,
         .alias("cy"))
     totals = inst.groupBy("cat").agg(F.count(F.lit(1)).alias("n"))
 
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    left = (inst.select("iid", "cat", F.explode(offs).alias("o"),
-                        "cx", "cy")
-            .select("iid", F.col("cat").alias("cat_i"),
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
+    left = scatter(inst, ["cx", "cy"], block(1), "iid",
+                   F.col("cat").alias("cat_i"))
     right = inst.select("cx", "cy", F.col("cat").alias("cat_j"))
     near = (left.join(right, ["cx", "cy"])
             .filter(F.col("cat_i") != F.col("cat_j"))

@@ -7,11 +7,11 @@ Construction:
 1. Cell size = the radius. Every point maps to one square grid cell
    ``(floor(lat/r), floor(lon/r))`` — a two-int key computed in
    whole-stage codegen.
-2. The A side explodes to its 3×3 cell neighborhood (9 rows); B keeps
-   its single cell. Any pair within ``r`` differs by ≤ r in each axis,
-   so B's cell is one of A's nine — the candidate set is COMPLETE, and
-   because B owns exactly one cell each pair joins exactly once (no
-   dedup pass).
+2. The A side scatters to its 3×3 cell neighborhood
+   (``lattice.scatter``, 9 rows); B keeps its single cell. Any pair
+   within ``r`` differs by ≤ r in each axis, so B's cell is one of A's
+   nine — the candidate set is COMPLETE, and because B owns exactly
+   one cell each pair joins exactly once (no dedup pass).
 3. Equi-join on the two cell ints + the exact ``dist2 <= r²`` refine,
    all in codegen — no Python, no range join, no cross join.
 
@@ -36,6 +36,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..grid.lattice import SPACETIME, block, scatter
 from .geometry import EARTH_RADIUS_M
 
 __all__ = ["dwithin_join", "dwithin_meters_join", "colocate_join"]
@@ -53,16 +54,12 @@ def dwithin_join(a: DataFrame, b: DataFrame, radius: float,
     pass the smaller input as ``a``.
     """
     r = float(radius)
-    offs = F.array(F.lit(-1), F.lit(0), F.lit(1))
-    aa = (a.select(F.col(a_id).alias("a_id"),
-                   F.col("lat").alias("a_lat"), F.col("lon").alias("a_lon"))
-          .withColumn("_dx", F.explode(offs))
-          .withColumn("_dy", F.explode(offs))
-          .withColumn("cx", (F.floor(F.col("a_lon") / r) + F.col("_dx"))
-                      .cast("long"))
-          .withColumn("cy", (F.floor(F.col("a_lat") / r) + F.col("_dy"))
-                      .cast("long"))
-          .drop("_dx", "_dy"))
+    aa = scatter(
+        a.select(F.col(a_id).alias("a_id"),
+                 F.col("lat").alias("a_lat"), F.col("lon").alias("a_lon"),
+                 F.floor(F.col("lon") / r).cast("long").alias("cx"),
+                 F.floor(F.col("lat") / r).cast("long").alias("cy")),
+        ["cx", "cy"], block(1), "a_id", "a_lat", "a_lon")
     bb = (b.select(F.col(b_id).alias("b_id"),
                    F.col("lat").alias("b_lat"), F.col("lon").alias("b_lon"))
           .withColumn("cx", F.floor(F.col("b_lon") / r).cast("long"))
@@ -215,24 +212,20 @@ def colocate_join(a: DataFrame, b: DataFrame, radius: float,
     """
     r = float(radius)
     w = int(max_dt_us)
-    offs = F.array(F.lit(-1), F.lit(0), F.lit(1))
     aa = (a.select(F.col(a_id).alias("a_id"),
                    F.col("lat").alias("a_lat"), F.col("lon").alias("a_lon"),
                    F.col("ts_us").alias("a_ts"))
-          .withColumn("_dx", F.explode(offs))
-          .withColumn("_dy", F.explode(offs))
-          .withColumn("_dt", F.explode(offs))
-          .withColumn("cx", (F.floor(F.col("a_lon") / r) + F.col("_dx"))
-                      .cast("long"))
-          .withColumn("cy", (F.floor(F.col("a_lat") / r) + F.col("_dy"))
-                      .cast("long"))
-          # integer DIV, not floor(double/):  epoch_us ~1.7e15 divided in
-          # f64 can land an ulp past a bucket boundary and shift ct by 1,
-          # breaking the ±1 completeness cover. DIV == floor for ts ≥ 0
-          # (documented: epoch microseconds are nonnegative).
-          .withColumn("ct", (F.expr(f"a_ts DIV {w}") + F.col("_dt"))
-                      .cast("long"))
-          .drop("_dx", "_dy", "_dt"))
+          .withColumns({
+              "cx": F.floor(F.col("a_lon") / r).cast("long"),
+              "cy": F.floor(F.col("a_lat") / r).cast("long"),
+              # integer DIV, not floor(double/):  epoch_us ~1.7e15
+              # divided in f64 can land an ulp past a bucket boundary
+              # and shift ct by 1, breaking the ±1 completeness cover.
+              # DIV == floor for ts ≥ 0 (documented: epoch microseconds
+              # are nonnegative).
+              "ct": F.expr(f"a_ts DIV {w}").cast("long")}))
+    aa = scatter(aa, ["cx", "cy", "ct"], SPACETIME,
+                 "a_id", "a_lat", "a_lon", "a_ts")
     bb = (b.select(F.col(b_id).alias("b_id"),
                    F.col("lat").alias("b_lat"), F.col("lon").alias("b_lon"),
                    F.col("ts_us").alias("b_ts"))

@@ -15,12 +15,13 @@ on any engine. Cells with no lower neighbor are SINKS (no out-edge);
 run :func:`fill_depressions` first when interior pits should drain
 to the border instead of terminating basins.
 
-Scale shape: D8 is one 8-offset explode equi-join on the cell key +
-one min(struct) argmin — the autocorr/k-ring neighborhood pattern,
-never an all-pairs join. Accumulation iterates
-``acc(v) ← 1 + Σ_{u→v} acc(u)`` (exact int64; converges in flow-path
-depth on :func:`osmspark.fixpoint.iterate`) — each round one equi-join
-of the O(cells) accumulator onto the flow forest + one combinable sum.
+Scale shape: D8 is one ``lattice.scatter`` to the 8 neighbour offsets,
+an equi-join on the cell key + one min(struct) argmin — the
+autocorr/k-ring neighborhood pattern, never an all-pairs join.
+Accumulation iterates ``acc(v) ← 1 + Σ_{u→v} acc(u)`` (exact int64;
+converges in flow-path depth on :func:`osmspark.fixpoint.iterate`) —
+each round one equi-join of the O(cells) accumulator onto the flow
+forest + one combinable sum.
 """
 
 from __future__ import annotations
@@ -28,12 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..fixpoint import iterate
+from ..grid.lattice import D8, scatter
 
 __all__ = ["d8_flow", "flow_accumulation", "watershed_labels",
            "fill_depressions", "slope_aspect", "ruggedness_index"]
-
-_OFFS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-         if not (dx == 0 and dy == 0)]
 
 
 def d8_flow(cells: DataFrame, elev_col: str = "elev",
@@ -50,34 +49,27 @@ def d8_flow(cells: DataFrame, elev_col: str = "elev",
     base = cells.select(F.col(cx_col).alias("cx"),
                         F.col(cy_col).alias("cy"),
                         F.col(elev_col).cast("long").alias("e"))
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(i).alias("oi"),
-                 F.lit(dx * dx + dy * dy).alias("d2"))
-        for i, (dx, dy) in enumerate(_OFFS)])
-    left = (base.select("cx", "cy", "e", F.explode(offs).alias("o"))
-            .select(F.col("cx").alias("ox"), F.col("cy").alias("oy"),
-                    F.col("e").alias("oe"), F.col("o.oi").alias("oi"),
-                    F.col("o.d2").alias("d2"),
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
-    nbrs = (left.join(base, ["cx", "cy"])
+    nbrs = (scatter(base, ["cx", "cy"], D8, F.col("e").alias("oe"))
+            .join(base, ["cx", "cy"])
             .filter(F.col("e") < F.col("oe")))
     drop = F.col("oe") - F.col("e")
     # steepness drop/√d2 ranked by the exact integer drop²·(2/d2):
     # cardinals (d2=1) weight 2, diagonals (d2=2) weight 1 — the
     # cross-multiplied square comparison, order-exact for drops ≥ 0
-    rank = drop * drop * F.when(F.col("d2") == 1, F.lit(2)) \
-        .otherwise(F.lit(1))
+    cardinal = ((F.col("cx") == F.col("o_cx"))
+                | (F.col("cy") == F.col("o_cy")))
+    rank = drop * drop * F.when(cardinal, F.lit(2)).otherwise(F.lit(1))
+    # ties break by the offset's dx-major index (the oracle's `oi`):
+    # within one origin, ascending target (tx, ty) is that order
     pick = (nbrs.select(
-        F.col("ox"), F.col("oy"),
-        F.struct((-rank).alias("nr"), F.col("oi").alias("oi"),
+        F.col("o_cx"), F.col("o_cy"),
+        F.struct((-rank).alias("nr"),
                  F.col("cx").alias("tx"), F.col("cy").alias("ty"),
                  drop.alias("drop")).alias("cand"))
-        .groupBy("ox", "oy")
+        .groupBy("o_cx", "o_cy")
         .agg(F.min("cand").alias("best")))
-    return pick.select(F.col("ox").alias("cell_x"),
-                       F.col("oy").alias("cell_y"),
+    return pick.select(F.col("o_cx").alias("cell_x"),
+                       F.col("o_cy").alias("cell_y"),
                        F.col("best.tx").alias("to_x"),
                        F.col("best.ty").alias("to_y"),
                        F.col("best.drop").cast("long").alias("drop"))
@@ -192,22 +184,16 @@ def fill_depressions(cells: DataFrame, elev_col: str = "elev",
     monotonically draining until the fixpoint — exact integers,
     :func:`osmspark.fixpoint.iterate` detects convergence, rounds bounded by
     the longest interior drainage path (``max_rounds`` guards flats).
-    Per round: one 8-offset scatter join of the O(cells) level table +
-    one combinable min + one static join — the flow_accumulation
-    shape. ``filled = W − elev`` isolates the poured depth.
+    Per round: one ``lattice.scatter`` D8 join of the O(cells) level
+    table + one combinable min + one static join — the
+    flow_accumulation shape. ``filled = W − elev`` isolates the poured depth.
     """
     base = cells.select(F.col(cx_col).alias("cx"),
                         F.col(cy_col).alias("cy"),
                         F.col(elev_col).cast("long").alias("e"))
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in _OFFS])
-    scat = (base.select("cx", "cy", F.explode(offs).alias("o"))
-            .select(F.col("cx").alias("sx"), F.col("cy").alias("sy"),
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
-    ncount = (scat.join(base.select("cx", "cy"), ["cx", "cy"])
-              .groupBy(F.col("sx").alias("cx"), F.col("sy").alias("cy"))
+    ncount = (scatter(base, ["cx", "cy"], D8)
+              .join(base.select("cx", "cy"), ["cx", "cy"])
+              .groupBy(F.col("o_cx").alias("cx"), F.col("o_cy").alias("cy"))
               .agg(F.count(F.lit(1)).alias("n_nbrs")))
     big = F.lit(1 << 60).cast("long")
     state = (base.join(ncount, ["cx", "cy"], "left")
@@ -219,13 +205,7 @@ def fill_depressions(cells: DataFrame, elev_col: str = "elev",
                      .otherwise(F.col("e")).alias("w")))
 
     def step(state: DataFrame) -> DataFrame:
-        nbr_min = (state.select(F.col("cx").alias("ox"),
-                                F.col("cy").alias("oy"),
-                                F.col("w"),
-                                F.explode(offs).alias("o"))
-                   .select((F.col("ox") + F.col("o.dx")).alias("cx"),
-                           (F.col("oy") + F.col("o.dy")).alias("cy"),
-                           "w")
+        nbr_min = (scatter(state, ["cx", "cy"], D8, "w")
                    .groupBy("cx", "cy")
                    .agg(F.min("w").alias("nw")))
         return (state.join(nbr_min, ["cx", "cy"], "left")
@@ -260,27 +240,21 @@ def slope_aspect(cells: DataFrame, elev_col: str = "elev",
     unit scaling); ``slope`` = √(gx² + gy²) and ``aspect_deg`` =
     atan2(gy, gx) in (−180, 180] are the only floats — fixed-shape
     IEEE ops on identical integers (the with_bearing trig precedent),
-    rounded 9 dp. One 8-offset scatter join + one combinable
+    rounded 9 dp. One ``lattice.scatter`` D8 join + one combinable
     conditional-sum aggregation; the all-8 filter is the exact
     n_nbrs = 8 census.
     """
     base = cells.select(F.col(cx_col).alias("cx"),
                         F.col(cy_col).alias("cy"),
                         F.col(elev_col).cast("long").alias("e"))
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in _OFFS])
-    # scatter every cell's elevation to each neighbor, tagged with the
-    # RECEIVER-relative offset (the reverse of the scatter direction)
-    scat = (base.select("cx", "cy", "e", F.explode(offs).alias("o"))
-            .select((F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy"),
-                    (-F.col("o.dx")).alias("rdx"),
-                    (-F.col("o.dy")).alias("rdy"),
-                    F.col("e").alias("ne_")))
-    recv = scat.join(base.select("cx", "cy"), ["cx", "cy"])
-    wx = F.col("rdx") * F.when(F.col("rdy") == 0, 2).otherwise(1)
-    wy = F.col("rdy") * F.when(F.col("rdx") == 0, 2).otherwise(1)
+    # scatter every cell's elevation to each neighbor; the
+    # RECEIVER-relative offset is the reverse of the scatter direction
+    recv = (scatter(base, ["cx", "cy"], D8, F.col("e").alias("ne_"))
+            .join(base.select("cx", "cy"), ["cx", "cy"]))
+    rdx = F.col("o_cx") - F.col("cx")
+    rdy = F.col("o_cy") - F.col("cy")
+    wx = rdx * F.when(rdy == 0, 2).otherwise(1)
+    wy = rdy * F.when(rdx == 0, 2).otherwise(1)
     g = (recv.groupBy("cx", "cy")
          .agg(F.count(F.lit(1)).alias("n_nbrs"),
               F.sum(wx * F.col("ne_")).alias("gx"),
@@ -305,20 +279,14 @@ def ruggedness_index(cells: DataFrame, elev_col: str = "elev",
     surfaces). ``sq_sum`` is the EXACT int64 quadratic (partial
     neighborhoods at raster edges use the neighbors present —
     n_nbrs reports how many, Riley's original convention); the single
-    sqrt is the only float, 9 dp. One 8-offset scatter + one
+    sqrt is the only float, 9 dp. One ``lattice.scatter`` D8 join + one
     combinable aggregation — the slope_aspect shape without the
     interior restriction.
     """
     base = cells.select(F.col(cx_col).alias("cx"),
                         F.col(cy_col).alias("cy"),
                         F.col(elev_col).cast("long").alias("e"))
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in _OFFS])
-    scat = (base.select("cx", "cy", F.explode(offs).alias("o"),
-                        F.col("e").alias("ne_"))
-            .select((F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy"), "ne_"))
+    scat = scatter(base, ["cx", "cy"], D8, F.col("e").alias("ne_"))
     d = F.col("ne_") - F.col("e")
     g = (scat.join(base, ["cx", "cy"])
          .groupBy("cx", "cy")

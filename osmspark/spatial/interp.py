@@ -10,9 +10,9 @@ decoded points (air quality, speed probes, signal strength).
 Spark-first shape — scatter/gather, one shuffle, all codegen:
 
 1. Each sample quantizes to 1e-6° integers and SCATTERS to its own
-   cell plus the 8 neighbors (a 9-element literal offset array +
-   explode — the kring_smooth idiom, tiles.py:202). The neighborhood
-   is bounded, so output fan-out is a constant 9×, never points².
+   cell plus the 8 neighbors (``lattice.scatter`` over the 3×3
+   block). The neighborhood is bounded, so output fan-out is a
+   constant 9×, never points².
 2. Per (target cell, sample): the squared planar distance to the CELL
    CENTER in 1e-6° units is an exact int64 (max 2·(1.5·cell)² ≈
    1.1e12 for 0.5° cells), and the weight is the exact integer
@@ -34,6 +34,8 @@ handles (salting hooks in tiles.py apply unchanged).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..grid.lattice import block, scatter
 
 __all__ = ["idw_grid"]
 
@@ -60,15 +62,9 @@ def idw_grid(samples: DataFrame, cell_deg: float = 0.5,
     pts = samples.select(
         lat_e6.alias("y_e6"), lon_e6.alias("x_e6"),
         F.col(value_col).cast("long").alias("v"),
-        F.floor(lat_e6 / F.lit(cell_e6)).cast("long").alias("sy"),
-        F.floor(lon_e6 / F.lit(cell_e6)).cast("long").alias("sx"))
-
-    offsets = F.array(*[F.struct(F.lit(dx).cast("long").alias("dx"),
-                                 F.lit(dy).cast("long").alias("dy"))
-                        for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    scat = (pts.withColumn("_o", F.explode(offsets))
-            .withColumn("cell_x", F.col("sx") + F.col("_o.dx"))
-            .withColumn("cell_y", F.col("sy") + F.col("_o.dy")))
+        F.floor(lat_e6 / F.lit(cell_e6)).cast("long").alias("cell_y"),
+        F.floor(lon_e6 / F.lit(cell_e6)).cast("long").alias("cell_x"))
+    scat = scatter(pts, ["cell_x", "cell_y"], block(1), "y_e6", "x_e6", "v")
 
     cx = F.col("cell_x") * F.lit(cell_e6) + F.lit(half)
     cy = F.col("cell_y") * F.lit(cell_e6) + F.lit(half)

@@ -11,14 +11,14 @@ sort-merge refine step". Scale-first construction (SURVEY.md §7.3):
    (``density_sample``; prebuilt and reused at warehouse scale, like any
    spatial index) estimates the radius that holds ~3k points, and the
    query is assigned the finest resolution whose guarantee ball covers
-   that radius. Resolutions are quantized to ≤ ``max_groups`` levels by
+   that radius. Resolutions are quantized to ≤ ``MAX_GROUPS`` levels by
    a cheapest-merge rule (each level is one scan branch; merging moves
    queries coarser, never finer, so completeness holds).
 2. Ring cells for every query are computed ON THE DRIVER (NumPy k_ring
    over ≤ |Q| rows) and **broadcast** — each level's candidate join is a
    BroadcastHashJoin on the cell id, so the big (point) side never
    shuffles. The levels run as UNION branches over per-level scans
-   (G ≤ max_groups scans; the single-scan explode alternative knocked
+   (G ≤ MAX_GROUPS scans; the single-scan explode alternative knocked
    the stage out of whole-stage codegen and ran ~20× slower).
 3. Distance is a SQL expression; an in-scan guarantee-ball filter
    (``dist2 ≤ g²``, g carried per-query on the broadcast side) cuts
@@ -63,19 +63,10 @@ bit-for-bit.
 from __future__ import annotations
 
 import math
-import os
-import time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def _dbg(t0: float, label: str) -> float:
-    """Phase timers, enabled via OSMSPARK_KNN_DEBUG=1 (perf tuning aid)."""
-    if os.environ.get("OSMSPARK_KNN_DEBUG"):
-        print(f"[knn {label}] {time.time() - t0:.1f}s", flush=True)
-    return time.time()
 
 from ..grid import hexgrid
 from ..grid.hexgrid_sql import hex_cell_col
@@ -84,6 +75,14 @@ __all__ = ["knn_join", "knn_broadcast", "knn_bruteforce", "density_sample",
            "write_points_bucketed"]
 
 _OUT_SCHEMA = "q_id long, p_id long, dist2 double"
+
+# density sketch size and hash seed
+TARGET_SAMPLE = 100_000
+SEED = 42
+# radius margin over the sketch's 3k-point estimate
+SAFETY = 2.0
+# cap on scan branches (resolution levels) in one candidate pass
+MAX_GROUPS = 4
 
 
 def _dist2(qlat, qlon, plat, plon):
@@ -213,7 +212,7 @@ def _coarse_cover(q_lat: np.ndarray, q_lon: np.ndarray, r: int, ring: int,
 
 
 def density_sample(points: DataFrame, point_id: str = "id",
-                   target: int = 100_000, seed: int = 42
+                   target: int = TARGET_SAMPLE, seed: int = SEED
                    ) -> tuple[pd.DataFrame, float]:
     """Hash-sampled (lat, lon) subset + realized sample rate — ONE scan.
 
@@ -330,10 +329,8 @@ def _nearest_sample_d2_spark(spark, q_pdf: pd.DataFrame,
 def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
              k: int,
              res: int = 9, ring: int = 1, point_id: str = "id",
-             partial_topk: bool = False, sample: pd.DataFrame | None = None,
-             sample_rate: float = 1.0, target_sample: int = 100_000,
-             safety: float = 2.0, max_groups: int = 4,
-             seed: int = 42, part_res: int | None = None,
+             sample: pd.DataFrame | None = None, sample_rate: float = 1.0,
+             part_res: int | None = None,
              part_col: str = "part_cell") -> DataFrame:
     """Exact kNN via one mixed-resolution k-ring candidate pass.
 
@@ -341,7 +338,7 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
     densest region's k-neighbor scale); each query is assigned the
     finest quantized level whose guarantee ball
     (1.5·ring − 0.5)·edge_deg(level) should hold ≥ 3k points per the
-    density sketch, with ``safety``× radius margin. ``sample``/
+    density sketch, with ``SAFETY``× radius margin. ``sample``/
     ``sample_rate`` inject a prebuilt ``density_sample`` (skips the
     sketch scan). When ``points`` was written by
     :func:`write_points_bucketed`, pass its ``part_res``: each candidate
@@ -350,21 +347,17 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
     module docstring for the full design and the exactness argument.
     """
     spark = points.sparkSession
-    t = time.time()
     if isinstance(queries, pd.DataFrame):
         # driver-resident query sets skip a collect job — the common
         # shape for benchmark/API callers that built the frame locally
         q_pdf = queries[["q_id", "lat", "lon"]]
     else:
         q_pdf = queries.select("q_id", "lat", "lon").toPandas()
-    t = _dbg(t, "queries toPandas")
     if len(q_pdf) == 0:
         return _empty_result(spark)
 
     if sample is None:
-        sample, sample_rate = density_sample(points, point_id,
-                                             target_sample, seed)
-        t = _dbg(t, "density_sample")
+        sample, sample_rate = density_sample(points, point_id)
     if len(sample) == 0:
         return _empty_result(spark)
     # table row count recovered from the realized sample rate (no job);
@@ -385,7 +378,7 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
     # edge query extends toward the cluster). Only when the sample is
     # too thin (3k·rate < 2) interpolate with the sqrt law from the
     # m-th nearest sample point: r(c·k) ≈ r(m/rate)·sqrt(c·k·rate/m).
-    # safety× covers residual error; misestimates are caught by the
+    # SAFETY× covers residual error; misestimates are caught by the
     # in-pass completeness count and repaired exactly, never silently.
     # the radius estimate only needs a coarse sketch: cap the estimation
     # subsample (the FULL sample stays whatever the caller built) and
@@ -408,9 +401,8 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
     else:
         d2_m = _nearest_sample_d2(q_lat, q_lon, s_lat_e, s_lon_e, m)
     sample_rate = rate_e
-    t = _dbg(t, "d2m estimate")
     est_in_dm = m / sample_rate
-    r_target = np.sqrt(d2_m) * np.sqrt(3.0 * k / est_in_dm) * safety
+    r_target = np.sqrt(d2_m) * np.sqrt(3.0 * k / est_in_dm) * SAFETY
     r_target = np.maximum(r_target, 1e-12)
     # finest r with factor·edge(r) ≥ r_target; edge(r) = BASE/√7^r
     with np.errstate(divide="ignore"):
@@ -445,7 +437,7 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
     # while a candidate pass stays in JVM codegen (~17 s for 81
     # stragglers, scans only). Brute force remains the LAST resort for
     # queries even pass 2 can't place (sparser than the coarsest ring).
-    cand_per_query = 3.0 * k * safety * safety
+    cand_per_query = 3.0 * k * SAFETY * SAFETY
     for _attempt in range(2):
         if not len(pending):
             break
@@ -457,19 +449,18 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
         # through the window (measured 190 s vs 6 s at local[16])
         if _attempt == 0:
             assigned = _quantize_levels(pending["r_est"].to_numpy(),
-                                        max_groups, scan_rows,
+                                        MAX_GROUPS, scan_rows,
                                         cand_per_query)
         else:
             assigned = _quantize_levels(pending["r_est"].to_numpy(),
-                                        min(max_groups, 2))
+                                        min(MAX_GROUPS, 2))
 
         # (a bbox-union pre-filter for tiny retry sets was tried here —
         # the pushed-down OR-chain knocked the parquet reader out of its
         # vectorized path and ran slower than the plain scans)
         topk, resolved_set = _candidate_pass(
             points, pending, assigned, k, ring, factor, point_id,
-            partial_topk, part_res, part_col)
-        t = _dbg(t, f"pass levels={sorted(set(assigned.tolist()))} nq={len(pending)} resolved={len(resolved_set)}")
+            part_res, part_col)
         if resolved_set:
             parts.append(topk.filter(F.col("n_cand") >= k)
                          .select("q_id", "p_id", "dist2", "rank"))
@@ -484,8 +475,6 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
 
     to_broadcast = pd.concat([to_broadcast, pending])
     if len(to_broadcast):
-        if os.environ.get("OSMSPARK_KNN_DEBUG"):
-            print(f"[knn broadcast fallback] nq={len(to_broadcast)}", flush=True)
         parts.append(knn_broadcast(
             points, to_broadcast[["q_id", "lat", "lon"]], k, point_id))
 
@@ -518,7 +507,7 @@ def _quantize_levels(r_est: np.ndarray, max_groups: int,
     local[16]; the stage was 4 scans = 12 s of its 19 s wall), while a
     merged level only adds candidate rows to the shared window. With
     ``scan_rows`` (from the table's plan stats / density sample) and
-    ``cand_per_query`` (≈ 3k·safety², the ball's design occupancy), a
+    ``cand_per_query`` (≈ 3k·SAFETY², the ball's design occupancy), a
     merge that adds fewer candidate rows than ``scan_rows/8`` — a
     candidate row through shuffle+window costs roughly 8 scanned
     fixed-point rows — deletes a scan for less than its price. Small
@@ -553,8 +542,7 @@ def _quantize_levels(r_est: np.ndarray, max_groups: int,
 
 def _candidate_pass(points: DataFrame, q_pdf: pd.DataFrame,
                     assigned: np.ndarray, k: int, ring: int, factor: float,
-                    point_id: str, partial_topk: bool,
-                    part_res: int | None = None,
+                    point_id: str, part_res: int | None = None,
                     part_col: str = "part_cell") -> tuple[DataFrame, set]:
     """One mixed-resolution candidate join + fused top-k/completeness
     window. Returns (checkpointed topk with n_cand, resolved q_id set)."""
@@ -571,7 +559,7 @@ def _candidate_pass(points: DataFrame, q_pdf: pd.DataFrame,
     # measured MINUTES instead of seconds at 160M rows — the Generate
     # feeding a BroadcastHashJoin falls out of whole-stage codegen — so
     # G scans of a columnar source is the faster plan in practice, and
-    # G ≤ max_groups keeps it bounded.
+    # G ≤ MAX_GROUPS keeps it bounded.
     pts = points.select(F.col(point_id).alias("p_id"),
                         F.col("lat").alias("p_lat"),
                         F.col("lon").alias("p_lon"),
@@ -623,26 +611,6 @@ def _candidate_pass(points: DataFrame, q_pdf: pd.DataFrame,
             # guarantee) — the filter runs map-side inside the scan
             .filter(F.col("dist2") <= F.col("g2"))
             .select("q_id", "p_id", "dist2"))
-
-    if partial_topk:
-        # map-side reduction: each partition keeps ≤ |Q|·k candidate
-        # rows before the window. A Python hop costs ~1-2s of fixed
-        # overhead — worth it only when candidates per partition
-        # vastly exceed |Q|·k (warehouse-scale candidate sets).
-        def local_topk(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                d2 = pdf["dist2"].to_numpy()
-                order = np.lexsort((pdf["p_id"].to_numpy(), d2,
-                                    pdf["q_id"].to_numpy()))
-                qs = pdf["q_id"].to_numpy()[order]
-                starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-                rank = np.arange(len(qs)) - np.repeat(
-                    starts, np.diff(np.r_[starts, len(qs)]))
-                yield pdf.iloc[order[rank < k]]
-
-        cand = cand.mapInPandas(local_topk, _OUT_SCHEMA)
 
     # completeness count fused into the top-k job: same partition key
     # → one shuffle, two in-memory window passes, ONE action

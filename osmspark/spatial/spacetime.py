@@ -17,10 +17,12 @@ all four counts are exact integers and the two ratios are single
 float divisions of exact operands, rounded 9 dp.
 
 Scale shape — never all-pairs:
-- space-close pairs via the 3×3 δ-cell bucket self-join (each
-  unordered pair surfaces exactly once: the cell offset is determined
-  by the pair, `id <` keeps one orientation);
-- time-close pairs via the 3-offset τ-bin self-join (same argument);
+- space-close pairs via the 3×3 δ-cell bucket self-join, one side a
+  ``lattice.scatter`` (each unordered pair surfaces exactly once: the
+  cell offset is determined by the pair, `id <` keeps one
+  orientation);
+- time-close pairs via the 3-offset τ-bin self-join, the same scatter
+  over one key (same argument);
 - both-close pairs are a FILTER on the spatial join's carried
   timestamps — no third join.
 Both joins are equi-joins on integer bucket keys (shuffle-hash /
@@ -32,6 +34,8 @@ the DuckDB oracle at toy scale.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..grid.lattice import SPACETIME, block, scatter
 
 __all__ = ["knox_statistic", "contact_pairs", "gi_star_spacetime"]
 
@@ -64,15 +68,9 @@ def knox_statistic(points: DataFrame, radius_udeg: int, tau_us: int,
 
     n = cell.agg(F.count(F.lit(1)).alias("n_events"))
 
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    left = (cell.select("pid", "ts", "ux", "uy",
-                        F.explode(offs).alias("o"), "cx", "cy")
-            .select(F.col("pid").alias("pid_i"), F.col("ts").alias("ts_i"),
-                    F.col("ux").alias("ux_i"), F.col("uy").alias("uy_i"),
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
+    left = scatter(cell, ["cx", "cy"], block(1),
+                   F.col("pid").alias("pid_i"), F.col("ts").alias("ts_i"),
+                   F.col("ux").alias("ux_i"), F.col("uy").alias("uy_i"))
     dx = F.col("ux_i") - F.col("ux")
     dy = F.col("uy_i") - F.col("uy")
     sp = (left.join(cell.select("pid", "ts", "ux", "uy", "cx", "cy"),
@@ -86,11 +84,8 @@ def knox_statistic(points: DataFrame, radius_udeg: int, tau_us: int,
             (F.abs(F.col("ts_i") - F.col("ts")) <= t).cast("long")),
             F.lit(0)).alias("n_both"))
 
-    toffs = F.array(F.lit(-1), F.lit(0), F.lit(1))
-    tleft = (cell.select(F.col("pid").alias("pid_i"),
-                         F.col("ts").alias("ts_i"),
-                         F.explode(toffs).alias("o"), "tb")
-             .select("pid_i", "ts_i", (F.col("tb") + F.col("o")).alias("tb")))
+    tleft = scatter(cell, ["tb"], block(1, dims=1),
+                    F.col("pid").alias("pid_i"), F.col("ts").alias("ts_i"))
     tm = (tleft.join(cell.select("pid", "ts", "tb"), ["tb"], "inner")
           .filter((F.col("pid_i") < F.col("pid"))
                   & (F.abs(F.col("ts_i") - F.col("ts")) <= t)))
@@ -152,18 +147,10 @@ def contact_pairs(points: DataFrame, radius_udeg: int, tau_us: int,
         F.floor(F.col("ux") / F.lit(float(r))).cast("long").alias("cx"),
         F.floor(F.col("uy") / F.lit(float(r))).cast("long").alias("cy"))
 
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    left = (cell.select(F.col("u").alias("u_i"),
-                        F.col("pid").alias("pid_i"),
-                        F.col("ts").alias("ts_i"),
-                        F.col("ux").alias("ux_i"),
-                        F.col("uy").alias("uy_i"),
-                        F.explode(offs).alias("o"), "cx", "cy")
-            .select("u_i", "pid_i", "ts_i", "ux_i", "uy_i",
-                    (F.col("cx") + F.col("o.dx")).alias("cx"),
-                    (F.col("cy") + F.col("o.dy")).alias("cy")))
+    left = scatter(cell, ["cx", "cy"], block(1),
+                   F.col("u").alias("u_i"), F.col("pid").alias("pid_i"),
+                   F.col("ts").alias("ts_i"), F.col("ux").alias("ux_i"),
+                   F.col("uy").alias("uy_i"))
     dx = F.col("ux_i") - F.col("ux")
     dy = F.col("uy_i") - F.col("uy")
     hits = (left.join(cell.select("u", "pid", "ts", "ux", "uy",
@@ -199,9 +186,10 @@ def gi_star_spacetime(bins: DataFrame, x_col: str = "n",
     convention as the 2-D statistic) and a float tail of identical
     exact operands, rounded 9 dp.
 
-    One exploded-27-offset equi-join on (cx, cy, tb) + one combinable
-    aggregation + broadcast global moments — the 2-D plan with a
-    wider key. NULL z when N = 1 or C_i = 0.
+    One ``lattice.scatter`` to the 27 ``SPACETIME`` offsets +
+    equi-join on (cx, cy, tb) + one combinable aggregation + broadcast
+    global moments — the 2-D plan with a wider key. NULL z when N = 1
+    or C_i = 0.
     Output: (cell_x, cell_y, tbin, x, w_i, l_sum, a_num, gi_z).
     """
     base = bins.select(F.col(cx_col).alias("cx"),
@@ -214,25 +202,15 @@ def gi_star_spacetime(bins: DataFrame, x_col: str = "n",
         F.sum(F.col("x").cast("decimal(38,0)")
               * F.col("x").cast("decimal(38,0)")).alias("q_d"))
 
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(dt).alias("dt"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1) for dt in (-1, 0, 1)])
-    left = (base.select(F.col("cx").alias("ox"), F.col("cy").alias("oy"),
-                        F.col("tb").alias("ot"),
-                        F.explode(offs).alias("o"))
-            .select("ox", "oy", "ot",
-                    (F.col("ox") + F.col("o.dx")).alias("cx"),
-                    (F.col("oy") + F.col("o.dy")).alias("cy"),
-                    (F.col("ot") + F.col("o.dt")).alias("tb")))
-    nbr = (left.join(base, ["cx", "cy", "tb"], "inner")
-           .groupBy("ox", "oy", "ot")
+    nbr = (scatter(base, ["cx", "cy", "tb"], SPACETIME)
+           .join(base, ["cx", "cy", "tb"], "inner")
+           .groupBy("o_cx", "o_cy", "o_tb")
            .agg(F.count(F.lit(1)).alias("w_i"),
                 F.sum("x").alias("l_sum")))
 
-    joined = (base.join(nbr, (F.col("cx") == F.col("ox"))
-                        & (F.col("cy") == F.col("oy"))
-                        & (F.col("tb") == F.col("ot")), "inner")
+    joined = (base.join(nbr, (F.col("cx") == F.col("o_cx"))
+                        & (F.col("cy") == F.col("o_cy"))
+                        & (F.col("tb") == F.col("o_tb")), "inner")
               .crossJoin(F.broadcast(tot)))
     a_d = (F.col("n").cast("decimal(38,0)")
            * F.col("l_sum").cast("decimal(38,0)")

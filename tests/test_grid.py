@@ -1,10 +1,13 @@
-"""Grid encoder invariants (no Spark): S2 round-trip/hierarchy/Hilbert
-adjacency + hexgrid hierarchy/k-ring, plus pinned regression ids (our
-determinism contract — SURVEY.md §7.4)."""
+"""Grid encoder invariants: S2 round-trip/hierarchy/Hilbert adjacency +
+hexgrid hierarchy/k-ring, plus pinned regression ids (our determinism
+contract — SURVEY.md §7.4), all without Spark; and the square-lattice
+offset sets, checked through one Spark scatter."""
 
 import numpy as np
+import pytest
 
 from osmspark.grid import hexgrid as H
+from osmspark.grid import lattice as L
 from osmspark.grid import s2 as S
 
 
@@ -242,3 +245,29 @@ def test_quadkey_known_values_and_prefix(spark):
                               "tile_x long, tile_y long, n_points long"),
         15).collect()
     assert len(a.quadkey) == 16 and a.quadkey.startswith(b.quadkey)
+
+
+@pytest.mark.parametrize("offsets, expected", [
+    (L.ROOK, [(1, 0), (-1, 0), (0, 1), (0, -1)]),
+    (L.D8, [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1),
+            (1, -1), (1, 0), (1, 1)]),
+    (L.block(1), [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]),
+    (L.block(2, centre=False),
+     [(dx, dy) for dx in range(-2, 3) for dy in range(-2, 3)
+      if (dx, dy) != (0, 0)]),
+    (L.block(1, dims=1), [(-1,), (0,), (1,)]),
+    (L.SPACETIME, [(dx, dy, dt) for dx in (-1, 0, 1)
+                   for dy in (-1, 0, 1) for dt in (-1, 0, 1)]),
+], ids=["rook", "d8", "block1", "block2_no_centre", "block1_1d",
+        "spacetime"])
+def test_lattice_scatter_yields_offset_set(spark, offsets, expected):
+    """Scattering one cell at the origin lands exactly on each offset,
+    in the set's order (D8 dx-major: d8_flow's tie-break index)."""
+    keys = ["k0", "k1", "k2"][:len(expected[0])]
+    cell = spark.createDataFrame([tuple([0] * len(keys)) + (7,)],
+                                 ", ".join(f"{k} long" for k in keys)
+                                 + ", v long")
+    rows = L.scatter(cell, keys, offsets, "v").collect()
+    assert [tuple(r[k] for k in keys) for r in rows] == expected
+    assert all(r.v == 7 and all(r[f"o_{k}"] == 0 for k in keys)
+               for r in rows)

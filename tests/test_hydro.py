@@ -7,7 +7,8 @@ from collections import defaultdict
 
 import pytest
 
-from osmspark.spatial.hydro import _OFFS, d8_flow, flow_accumulation
+from osmspark.grid.lattice import D8
+from osmspark.spatial.hydro import d8_flow, flow_accumulation
 
 # a 7x5 "valley": elevation falls toward (3, 2) with a deterministic
 # ripple so diagonal-vs-cardinal ranking and ties both exercise
@@ -20,7 +21,7 @@ def _py_d8():
     out = {}
     for (x, y), e in CELLS.items():
         best = None
-        for oi, (dx, dy) in enumerate(_OFFS):
+        for oi, (dx, dy) in enumerate(D8):
             ne = CELLS.get((x + dx, y + dy))
             if ne is None or ne >= e:
                 continue
@@ -124,7 +125,7 @@ def _py_fill():
     import heapq
     interior = {c for c in CELLS
                 if sum((c[0] + dx, c[1] + dy) in CELLS
-                       for dx, dy in _OFFS) == 8}
+                       for dx, dy in D8) == 8}
     w = {}
     heap = []
     for c, e in CELLS.items():
@@ -135,7 +136,7 @@ def _py_fill():
         lv, (x, y) = heapq.heappop(heap)
         if w.get((x, y), 1 << 62) < lv:
             continue
-        for dx, dy in _OFFS:
+        for dx, dy in D8:
             n = (x + dx, y + dy)
             if n in CELLS and n not in w:
                 w[n] = max(CELLS[n], lv)
@@ -173,9 +174,9 @@ def test_filled_dem_has_no_strict_interior_pits(frames):
               - {(int(r.cell_x), int(r.cell_y)) for r in flows2.collect()})
     interior = {c for c in CELLS
                 if sum((c[0] + dx, c[1] + dy) in CELLS
-                       for dx, dy in _OFFS) == 8}
+                       for dx, dy in D8) == 8}
     for (x, y) in sinks2 & interior:
-        nbrs = [felev[(x + dx, y + dy)] for dx, dy in _OFFS
+        nbrs = [felev[(x + dx, y + dy)] for dx, dy in D8
                 if (x + dx, y + dy) in felev]
         assert min(nbrs) == felev[(x, y)]     # flat, never a strict pit
 
@@ -191,13 +192,13 @@ def test_slope_aspect_matches_python(frames):
     exp = {}
     for (x, y) in CELLS:
         nb = {(dx, dy): CELLS.get((x + dx, y + dy))
-              for dx, dy in _OFFS}
+              for dx, dy in D8}
         if any(v is None for v in nb.values()):
             continue
         gx = sum(dx * (2 if dy == 0 else 1) * nb[(dx, dy)]
-                 for dx, dy in _OFFS)
+                 for dx, dy in D8)
         gy = sum(dy * (2 if dx == 0 else 1) * nb[(dx, dy)]
-                 for dx, dy in _OFFS)
+                 for dx, dy in D8)
         exp[(x, y)] = (gx, gy,
                        round(math.sqrt(gx * gx + gy * gy), 9),
                        round(math.degrees(math.atan2(gy, gx)), 9))
@@ -218,7 +219,7 @@ def test_tri_matches_python(frames):
            for r in ruggedness_index(cells).collect()}
     exp = {}
     for (x, y), e in CELLS.items():
-        ds = [CELLS[(x + dx, y + dy)] - e for dx, dy in _OFFS
+        ds = [CELLS[(x + dx, y + dy)] - e for dx, dy in D8
               if (x + dx, y + dy) in CELLS]
         sq = sum(d * d for d in ds)
         exp[(x, y)] = (len(ds), sq, round(math.sqrt(sq), 9))
@@ -226,3 +227,23 @@ def test_tri_matches_python(frames):
     # corners see 3 neighbors, edges 5, interior 8
     assert got[(0, 0)][0] == 3 and got[(3, 0)][0] == 5 \
         and got[(3, 2)][0] == 8
+
+
+def _two_cell_drop(spark, drop):
+    cells = spark.createDataFrame([(0, 0, drop), (1, 0, 0)],
+                                  "cell_x long, cell_y long, elev long")
+    return [(int(r.cell_x), int(r.cell_y), int(r.to_x), int(r.to_y),
+             int(r.drop)) for r in d8_flow(cells).collect()]
+
+
+def test_d8_drop_at_envelope_edge_is_exact(spark):
+    # |drop| = 2^31 − 1: the cardinal rank drop²·2 = 2^63 − 2^33 + 2
+    # still fits int64
+    assert _two_cell_drop(spark, 2 ** 31 - 1) == [(0, 0, 1, 0, 2 ** 31 - 1)]
+
+
+def test_d8_drop_past_envelope_raises(spark):
+    # |drop| = 2^31: drop²·2 = 2^63 overflows int64, and ANSI mode
+    # raises instead of wrapping into a wrong steepness order
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        _two_cell_drop(spark, 2 ** 31)

@@ -1,4 +1,5 @@
-"""Session utilities: scoped optimizer-rule exclusion."""
+"""Session utilities: pinned configs and scoped optimizer-rule
+exclusion."""
 
 from __future__ import annotations
 
@@ -10,6 +11,11 @@ def _get(spark, key):
         return spark.conf.get(key)
     except Exception:
         return None
+
+
+def test_ansi_mode_pinned(spark):
+    """Integer overflow must raise, whatever the deployment default."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
 
 
 def test_rule_excluded_inside_scope_and_restored(spark):
