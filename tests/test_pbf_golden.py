@@ -218,3 +218,32 @@ def test_oversize_element_rejected():
 def test_truncated_file_rejected(golden_pbf):
     with pytest.raises(PbfError):
         split_file_blocks(golden_pbf[:-10])
+
+
+GOLDEN_TEXT = (
+    "N 319408586 51.5074089 -0.1080108\n"
+    "N 319408587 51.5074343 -0.1081264\n"
+    "N 275452090 51.5075933 -0.1076186 Jam's Sandwich Bar\n"
+    "N 304994980 51.5074645 -0.1075735\n"
+    "N 304994981 51.5074723 -0.1075014\n"
+    "N 304994979 51.507406 -0.1083348\n"
+    "W 27776903 304994979,319408587,319408586,304994980,304994981\n"
+    "R 56688 node:319408586:,way:27776903:"
+)
+
+
+def test_rendered_text_pinned(golden_pbf):
+    """The ``text`` column is produced by ``render_text`` itself, so the
+    Spark parity checks cannot see a rendering change; pin the literal.
+    The W/R lines agree with test_way_pinned / test_relation_pinned."""
+    from osmspark.pages import page_payload
+    from osmspark.pbf.source import decode_page, render_text
+
+    assert render_text(decode_page(golden_pbf)) == GOLDEN_TEXT
+    lines = render_text(decode_page(page_payload(2, 100))).split("\n")
+    assert len(lines) == 103
+    assert [ln for ln in lines if ln[0] in "WR"] == [
+        "W 25000001 20000001,20000002,20000003,20000004,20000005",
+        "W 25000002 20000048,20000049,20000050,20000051,20000052",
+        "R 26000001 node:20000001:,way:25000001:outer",
+    ]
