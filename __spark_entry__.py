@@ -2032,7 +2032,7 @@ def _q_triangles(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = docs.select(
         (F.col("doc_id") % 31).alias("src"),
-        ((F.col("doc_id") / 31).cast("long") % 31).alias("dst"))
+        (F.expr("doc_id DIV 31") % 31).alias("dst"))
     return triangle_counts(edges).orderBy("node")
 
 
@@ -2045,7 +2045,7 @@ def _q_clustering(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = docs.select(
         (F.col("doc_id") % 31).alias("src"),
-        ((F.col("doc_id") / 31).cast("long") % 31).alias("dst"))
+        (F.expr("doc_id DIV 31") % 31).alias("dst"))
     return clustering_coefficients(edges).orderBy("node")
 
 
@@ -3321,7 +3321,7 @@ def _q_kcore(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = docs.select(
         (F.col("doc_id") % 53).alias("src"),
-        ((F.col("doc_id") / 53).cast("long") % 53).alias("dst"))
+        (F.expr("doc_id DIV 53") % 53).alias("dst"))
     return kcore_hindex(edges, n_iter=16).orderBy("node")
 
 
@@ -3353,7 +3353,7 @@ def _q_linkpred(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = docs.select(
         (F.col("doc_id") % 31).alias("src"),
-        ((F.col("doc_id") / 31).cast("long") % 31).alias("dst"))
+        (F.expr("doc_id DIV 31") % 31).alias("dst"))
     return link_predictions(edges).orderBy("u", "v")
 
 

@@ -19,6 +19,7 @@ import re
 from dataclasses import dataclass
 
 from .pbf.decode import (
+    INFO_COLUMNS,
     FileBlock,
     decode_header_block,
     decode_primitive_block,
@@ -69,30 +70,37 @@ def create_pbf_parser(data: bytes) -> PbfRandomAccessParser:
     return PbfRandomAccessParser([fb for fb, _ in pairs], [b for _, b in pairs])
 
 
+def _rows(kind: str, g: dict):
+    """Row dicts of one decoded group, shaped like ``parse_osm_xml``'s."""
+    offs, keys, vals = g["tag_offsets"], g["tag_keys"], g["tag_vals"]
+    info = {k: [None] * g["n"] if g[k] is None else g[k].tolist() for k in INFO_COLUMNS}
+    for i, eid in enumerate(g["id"].tolist()):
+        row = {"id": eid, "id_str": str(eid),
+               "tags": dict(zip(keys[offs[i]:offs[i + 1]], vals[offs[i]:offs[i + 1]]))}
+        if kind == "nodes":
+            row["lat"] = float(g["lat"][i])
+            row["lon"] = float(g["lon"][i])
+        elif kind == "ways":
+            row["refs"] = g["refs"][g["ref_offsets"][i]:g["ref_offsets"][i + 1]].tolist()
+        else:
+            a, b = g["member_offsets"][i], g["member_offsets"][i + 1]
+            row["members"] = [
+                {"ref": str(ref), "role": role, "type": t}
+                for ref, role, t in zip(g["member_refs"][a:b].tolist(),
+                                        g["member_roles"][a:b], g["member_types"][a:b])]
+        yield row | {k: info[k][i] for k in INFO_COLUMNS}
+
+
 def parse_pbf(data: bytes) -> dict:
     """One-shot decode → {'nodes': [...], 'ways': [...], 'relations': [...]}
     row dicts in emission order (blocks → groups → nodes→ways→relations)."""
     parser = create_pbf_parser(data)
-    nodes, ways, relations = [], [], []
+    out: dict[str, list] = {"nodes": [], "ways": [], "relations": []}
     for fb in parser.find_file_blocks_by_blob_type("OSMData"):
-        blk = parser.read_block(fb)
-        for grp in blk.groups:
-            if grp.kind == "nodes":
-                g = grp.nodes
-                o = g["tag_offsets"]
-                for i in range(g["n"]):
-                    nodes.append({
-                        "id": int(g["id"][i]),
-                        "lat": float(g["lat"][i]),
-                        "lon": float(g["lon"][i]),
-                        "tags": dict(zip(g["tag_keys"][o[i]:o[i + 1]],
-                                         g["tag_vals"][o[i]:o[i + 1]])),
-                    })
-            elif grp.kind == "ways":
-                ways.extend(grp.ways)
-            elif grp.kind == "relations":
-                relations.extend(grp.relations)
-    return {"nodes": nodes, "ways": ways, "relations": relations}
+        for grp in parser.read_block(fb).groups:
+            if grp.kind in out:
+                out[grp.kind].extend(_rows(grp.kind, grp.cols))
+    return out
 
 
 def parse(data: bytes | str, *, path: str | None = None, format: str | None = None):

@@ -20,9 +20,22 @@ From-scratch vectorized re-implementation of the reference decode pipeline
 * ids kept as int64 **and** stringified (``'' + id``,
   ``lib/pbfParser.js:377``) for parity with the reference's string ids.
 
-Everything returns plain dict-of-numpy/lists ("columnar block") so the
-Spark layer (``osmspark.pbf.source``) can build Arrow batches without a
-row-at-a-time hop.
+Every message is read by one collector, ``collect``: given a list of
+message buffers and a field spec it returns each scalar field as one
+value per message and each repeated field as flat values plus
+per-message offsets, decoding all packed chunks of a field in one
+vectorized pass. DenseNodes, DenseInfo, Node+Info, Way and Relation are
+each a short spec on top of it.
+
+Every PrimitiveGroup decodes to one columnar shape, ``DecodedGroup(kind,
+cols)``: ``cols["n"]`` rows, an ``id`` array, ``tag_offsets[n+1]`` into
+flat ``tag_keys``/``tag_vals``, then per kind ``lat``/``lon`` (nodes),
+``ref_offsets`` + ``refs`` (ways) or ``member_offsets`` +
+``member_refs``/``member_roles``/``member_types`` (relations), and the
+six ``INFO_COLUMNS`` — each None when absent from the whole group, an
+array otherwise (object dtype with None where absent from some rows).
+The Spark layer (``osmspark.pbf.source``) builds Arrow arrays straight
+from these flat arrays, with no row-at-a-time hop.
 """
 
 from __future__ import annotations
@@ -32,38 +45,142 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .wire import (
-    decode_packed_sint64,
-    decode_packed_uint,
-    decode_packed_varints,
-    iter_fields,
-    read_varint,
-    zigzag_decode,
-)
+from .wire import PbfError, decode_packed_sint64, decode_packed_uint, read_field, zigzag_decode
 
 MAX_ELEMENT_SIZE = 32 * 1024 * 1024  # lib/nodejs/fsReader.js:25-27
 MEMBER_TYPES = np.array(["node", "way", "relation"], dtype=object)
+INFO_COLUMNS = ("version", "timestamp_ms", "changeset", "uid", "user", "visible")
 
 
-class PbfError(ValueError):
-    """Decode failure — the reference routes these to opts.error
-    (``lib/pbfParser.js:41-47``: every failure hits the error callback
-    and the parser closes cleanly).
+# --------------------------------------------------------------------------
+# the field collector
+# --------------------------------------------------------------------------
 
-    ``kind`` is a stable machine-readable category so the Spark-side
-    quarantine channel (``source.quarantine_from_pages``) can group
-    failures without string-matching human messages:
-    ``framing | oversize | inflate | decode``.
+# field kinds: one value per message ...
+UINT, SINT, BYTES = "uint", "sint", "bytes"
+# ... or repeated
+UINTS, SINTS, BYTES_LIST = "uint*", "sint*", "bytes*"
+
+
+def collect(bufs: list, spec: dict[int, tuple[str, str]]) -> dict:
+    """Read the ``spec`` fields of every message in ``bufs`` in one pass.
+
+    ``spec`` maps a field number to ``(name, kind)``; the result maps
+    ``name`` to, per kind:
+
+    * ``uint`` / ``sint`` — ``(values, present)``: int64[n] (zigzag
+      decoded for ``sint``; 0 where absent) and bool[n]. A repeated
+      occurrence overwrites the earlier one, as in protobuf.
+    * ``bytes`` — a list of n payload slices, None where absent.
+    * ``uint*`` / ``sint*`` — ``(flat int64 values, offsets int64[n+1])``.
+      Packed chunks and unpacked values are taken in wire order (an
+      unpacked varint's bytes are a one-value packed chunk), and every
+      chunk of the field is decoded by one vectorized pass.
+    * ``bytes*`` — ``(flat list of payload slices, offsets int64[n+1])``.
+
+    A None buffer reads as an empty message; fields not in ``spec`` are
+    skipped. A field whose wire type does not match its kind raises
+    PbfError.
     """
+    n = len(bufs)
+    # field → (owning messages, values, wire type it must have, whether
+    # it may also come unpacked)
+    slots = {f: ([], [], 0 if kind in (UINT, SINT) else 2, kind in (UINTS, SINTS))
+             for f, (_, kind) in spec.items()}
+    for i, buf in enumerate(bufs):
+        if buf is None:
+            continue
+        mv = memoryview(buf)
+        pos = 0
+        end = len(mv)
+        while pos < end:
+            f, w, value, start, pos = read_field(mv, pos)
+            slot = slots.get(f)
+            if slot is None:
+                continue
+            owners, values, wire, unpackable = slot
+            if w != wire:
+                if w != 0 or not unpackable:
+                    raise PbfError(f"field {f} has wire type {w}")
+                value = mv[start:pos]  # an unpacked value: a one-value packed chunk
+            owners.append(i)
+            values.append(value)
+    out = {}
+    for f, (name, kind) in spec.items():
+        owners, values, _, _ = slots[f]
+        if kind == BYTES:
+            col = [None] * n
+            for i, v in zip(owners, values):
+                col[i] = v
+            out[name] = col
+        elif kind in (UINT, SINT):
+            raw = np.zeros(n, dtype=np.uint64)
+            raw[owners] = np.array(values, dtype=np.uint64)
+            present = np.zeros(n, dtype=bool)
+            present[owners] = True
+            out[name] = (zigzag_decode(raw) if kind == SINT else raw.view(np.int64)), present
+        else:
+            # message i owns chunks bounds[i]:bounds[i + 1] (owners ascend)
+            bounds = np.searchsorted(np.array(owners, dtype=np.int64), np.arange(n + 1))
+            out[name] = (values, bounds) if kind == BYTES_LIST else _varints(values, kind, bounds)
+    return out
 
-    def __init__(self, msg: str, kind: str = "decode"):
-        super().__init__(msg)
-        self.kind = kind
+
+def _varints(chunks: list, kind: str, bounds: np.ndarray):
+    """Packed varint chunks → (flat values, per-message offsets), with
+    one vectorized decode over the chunks joined."""
+    data = b"".join(chunks)
+    arr = np.frombuffer(data, dtype=np.uint8)
+    lens = np.fromiter(map(len, chunks), dtype=np.int64, count=len(chunks))
+    ends = np.cumsum(lens)
+    # a chunk ending mid-varint would silently merge with the next one
+    if (arr[ends[lens > 0] - 1] & 0x80).any():
+        raise PbfError("truncated packed varint")
+    vals = decode_packed_sint64(data) if kind == SINTS else decode_packed_uint(data)
+    if bounds.size == 2:  # one message
+        return vals, np.array([0, vals.size])
+    # values before each message = terminator bytes (continuation bit
+    # clear) before its first byte
+    terms = np.zeros(arr.size + 1, dtype=np.int64)
+    np.cumsum(arr < 0x80, out=terms[1:])
+    return vals, terms[np.concatenate([[0], ends])[bounds]]
+
+
+def collect_one(buf, spec: dict[int, tuple[str, str]]) -> dict:
+    """``collect`` over one message: scalars become an int or None,
+    ``bytes`` a slice or None, repeated fields their flat values."""
+    got = collect([buf], spec)
+    out = {}
+    for name, kind in spec.values():
+        v = got[name][0]
+        if kind in (UINT, SINT):
+            v = int(v[0]) if got[name][1][0] else None
+        out[name] = v
+    return out
+
+
+def _delta_decode(deltas: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Per-message prefix sums of delta-coded values, from one global
+    cumsum minus each message's base."""
+    total = np.cumsum(deltas)
+    base = np.concatenate([[0], total])[offsets[:-1]]
+    return total - np.repeat(base, np.diff(offsets))
+
+
+def _utf8(b) -> str:
+    try:
+        return str(b, "utf-8")
+    except UnicodeDecodeError as e:
+        raise PbfError(f"invalid UTF-8 string: {e}") from None
 
 
 # --------------------------------------------------------------------------
 # block framing
 # --------------------------------------------------------------------------
+
+_BLOB_HEADER = {1: ("type", BYTES), 3: ("datasize", UINT)}
+_BLOB = {1: ("raw", BYTES), 2: ("raw_size", UINT), 3: ("zlib_data", BYTES)}
+
 
 @dataclass
 class FileBlock:
@@ -106,14 +223,9 @@ def iter_file_blocks(data: bytes):
         if len(header_buf) < header_size:
             raise PbfError("truncated BlobHeader", kind="framing")
         pos += header_size
-        blob_type = ""
-        datasize = -1
-        for f, w, v in iter_fields(header_buf):
-            if f == 1 and w == 2:      # type
-                blob_type = bytes(v).decode("utf-8")
-            elif f == 3 and w == 0:    # datasize
-                datasize = v
-        if datasize < 0:
+        header = collect_one(header_buf, _BLOB_HEADER)
+        datasize = header["datasize"]
+        if datasize is None or datasize < 0:
             raise PbfError("BlobHeader missing datasize", kind="framing")
         if datasize > MAX_ELEMENT_SIZE:
             raise PbfError(
@@ -124,6 +236,7 @@ def iter_file_blocks(data: bytes):
         if len(blob) < datasize:
             raise PbfError("truncated Blob payload", kind="framing")
         pos += datasize
+        blob_type = "" if header["type"] is None else _utf8(header["type"])
         yield FileBlock(idx, blob_type, pos - datasize, datasize), blob
         idx += 1
 
@@ -138,18 +251,11 @@ def inflate_blob(blob_buf: bytes) -> bytes:
     ``lib/proto/fileformat.proto:29-41``, so this engine accepts it
     behind the same interface (golden parity pinned by
     ``tests/test_pbf_golden.py::test_raw_blob_decodes``)."""
-    raw = None
-    zlib_data = None
-    raw_size = 0
-    for f, w, v in iter_fields(blob_buf):
-        if f == 1 and w == 2:
-            raw = bytes(v)
-        elif f == 2 and w == 0:
-            raw_size = v
-        elif f == 3 and w == 2:
-            zlib_data = bytes(v)
-    if zlib_data is None:
-        if raw is not None:
+    blob = collect_one(blob_buf, _BLOB)
+    raw_size = blob["raw_size"] or 0
+    if blob["zlib_data"] is None:
+        if blob["raw"] is not None:
+            raw = bytes(blob["raw"])
             if raw_size and len(raw) != raw_size:
                 raise PbfError(
                     f"raw size {len(raw)} != raw_size {raw_size}",
@@ -157,7 +263,7 @@ def inflate_blob(blob_buf: bytes) -> bytes:
             return raw
         raise PbfError("Blob has no payload", kind="inflate")
     try:
-        out = zlib.decompress(zlib_data)
+        out = zlib.decompress(blob["zlib_data"])
     except zlib.error as e:
         raise PbfError(f"zlib inflate failed: {e}", kind="inflate") from e
     if raw_size and len(out) != raw_size:
@@ -170,57 +276,46 @@ def inflate_blob(blob_buf: bytes) -> bytes:
 # header block
 # --------------------------------------------------------------------------
 
+_HEADER = {1: ("bbox", BYTES), 4: ("required_features", BYTES_LIST),
+           5: ("optional_features", BYTES_LIST), 16: ("writingprogram", BYTES),
+           17: ("source", BYTES)}
+_BBOX = {1: ("left", SINT), 2: ("right", SINT), 3: ("top", SINT), 4: ("bottom", SINT)}
+
+
 def decode_header_block(buf: bytes) -> dict:
     """HeaderBlock → dict (bbox nanodegrees, features, writingprogram...)."""
-    out = {
-        "bbox": None,
-        "required_features": [],
-        "optional_features": [],
-        "writingprogram": None,
-        "source": None,
+    h = collect_one(buf, _HEADER)
+    return {
+        "bbox": None if h["bbox"] is None else collect_one(h["bbox"], _BBOX),
+        "required_features": [_utf8(b) for b in h["required_features"]],
+        "optional_features": [_utf8(b) for b in h["optional_features"]],
+        "writingprogram": None if h["writingprogram"] is None else _utf8(h["writingprogram"]),
+        "source": None if h["source"] is None else _utf8(h["source"]),
     }
-    for f, w, v in iter_fields(buf):
-        if f == 1 and w == 2:
-            bbox = {}
-            names = {1: "left", 2: "right", 3: "top", 4: "bottom"}
-            for bf, bw, bv in iter_fields(v):
-                if bw == 0 and bf in names:
-                    bbox[names[bf]] = int(
-                        zigzag_decode(np.array([bv], dtype=np.uint64))[0]
-                    )
-            out["bbox"] = bbox
-        elif f == 4 and w == 2:
-            out["required_features"].append(bytes(v).decode("utf-8"))
-        elif f == 5 and w == 2:
-            out["optional_features"].append(bytes(v).decode("utf-8"))
-        elif f == 16 and w == 2:
-            out["writingprogram"] = bytes(v).decode("utf-8")
-        elif f == 17 and w == 2:
-            out["source"] = bytes(v).decode("utf-8")
-    return out
 
 
 # --------------------------------------------------------------------------
-# primitive block
+# primitive block (osmformat.proto field numbers)
 # --------------------------------------------------------------------------
 
-def _packed_or_repeated_signed(chunks: list, scalars: list[int]) -> np.ndarray:
-    """Packed repeated fields may also appear unpacked; merge both forms."""
-    parts = [decode_packed_sint64(c) for c in chunks]
-    if scalars:
-        parts.append(zigzag_decode(np.array(scalars, dtype=np.uint64)))
-    if not parts:
-        return np.empty(0, dtype=np.int64)
-    return np.concatenate(parts) if len(parts) > 1 else parts[0]
-
-
-def _packed_or_repeated_unsigned(chunks: list, scalars: list[int]) -> np.ndarray:
-    parts = [decode_packed_uint(c) for c in chunks]
-    if scalars:
-        parts.append(np.array(scalars, dtype=np.int64))
-    if not parts:
-        return np.empty(0, dtype=np.int64)
-    return np.concatenate(parts) if len(parts) > 1 else parts[0]
+_BLOCK = {1: ("stringtable", BYTES), 2: ("groups", BYTES_LIST),
+          17: ("granularity", UINT), 18: ("date_granularity", UINT),
+          19: ("lat_offset", UINT), 20: ("lon_offset", UINT)}
+_GROUP = {1: ("nodes", BYTES_LIST), 2: ("dense", BYTES),
+          3: ("ways", BYTES_LIST), 4: ("relations", BYTES_LIST)}
+_STRINGTABLE = {1: ("s", BYTES_LIST)}
+_INFO = {1: ("version", UINT), 2: ("timestamp", UINT), 3: ("changeset", UINT),
+         4: ("uid", UINT), 5: ("user_sid", UINT), 6: ("visible", UINT)}
+_DENSE_INFO = {1: ("version", UINTS), 2: ("timestamp", SINTS), 3: ("changeset", SINTS),
+               4: ("uid", SINTS), 5: ("user_sid", SINTS), 6: ("visible", UINTS)}
+_DENSE_NODES = {1: ("id", SINTS), 5: ("info", BYTES), 8: ("lat", SINTS),
+                9: ("lon", SINTS), 10: ("keys_vals", UINTS)}
+_NODE = {1: ("id", SINT), 2: ("keys", UINTS), 3: ("vals", UINTS), 4: ("info", BYTES),
+         8: ("lat", SINT), 9: ("lon", SINT)}
+_WAY = {1: ("id", UINT), 2: ("keys", UINTS), 3: ("vals", UINTS), 4: ("info", BYTES),
+        8: ("refs", SINTS)}
+_RELATION = {1: ("id", UINT), 2: ("keys", UINTS), 3: ("vals", UINTS), 4: ("info", BYTES),
+             8: ("roles", UINTS), 9: ("memids", SINTS), 10: ("types", UINTS)}
 
 
 @dataclass
@@ -231,73 +326,105 @@ class StringTable:
 
     @classmethod
     def decode(cls, buf) -> "StringTable":
-        raw = [bytes(v) for f, w, v in iter_fields(buf) if f == 1 and w == 2]
         # UTF-8 decode once per entry — reference memoizes per entry
         # (lib/pbfParser.js:245-259); we decode the whole table eagerly
         # because every entry is touched by the columnar tag assembly.
-        return cls(np.array([b.decode("utf-8") for b in raw], dtype=object))
+        raw = collect_one(buf, _STRINGTABLE)["s"]
+        return cls(np.array([_utf8(b) for b in raw], dtype=object))
 
     def take(self, idx: np.ndarray) -> np.ndarray:
+        if idx.size and (idx.min() < 0 or idx.max() >= self.entries.size):
+            raise PbfError(f"string index out of range for a "
+                           f"{self.entries.size}-entry string table")
         return self.entries[idx]
 
 
 @dataclass
 class DecodedGroup:
-    """One PrimitiveGroup decoded to columns. Exactly one kind is non-empty."""
+    """One PrimitiveGroup decoded to columns (see the module docstring)."""
 
     kind: str  # 'nodes' | 'ways' | 'relations' | 'empty'
-    nodes: dict = field(default_factory=dict)
-    ways: list = field(default_factory=list)
-    relations: list = field(default_factory=list)
+    cols: dict
 
 
-def _decode_dense_info(buf, date_granularity: int, count: int) -> dict:
-    """DenseInfo (osmformat.proto:155-171): columnar, delta-coded."""
-    versions_chunks, ts_chunks, cs_chunks, uid_chunks, sid_chunks, vis_chunks = (
-        [], [], [], [], [], [])
-    v_sc, t_sc, c_sc, u_sc, s_sc, vi_sc = [], [], [], [], [], []
-    for f, w, v in iter_fields(buf):
-        if f == 1:
-            (versions_chunks if w == 2 else v_sc).append(v)
-        elif f == 2:
-            (ts_chunks if w == 2 else t_sc).append(v)
-        elif f == 3:
-            (cs_chunks if w == 2 else c_sc).append(v)
-        elif f == 4:
-            (uid_chunks if w == 2 else u_sc).append(v)
-        elif f == 5:
-            (sid_chunks if w == 2 else s_sc).append(v)
-        elif f == 6:
-            (vis_chunks if w == 2 else vi_sc).append(v)
-    version = _packed_or_repeated_unsigned(versions_chunks, v_sc)
-    timestamp = np.cumsum(_packed_or_repeated_signed(ts_chunks, t_sc)) * np.int64(
-        date_granularity
-    )
-    changeset = np.cumsum(_packed_or_repeated_signed(cs_chunks, c_sc))
-    uid = np.cumsum(_packed_or_repeated_signed(uid_chunks, u_sc))
-    user_sid = np.cumsum(_packed_or_repeated_signed(sid_chunks, s_sc))
-    visible = _packed_or_repeated_unsigned(vis_chunks, vi_sc)
+@dataclass
+class DecodedBlock:
+    granularity: int
+    lat_offset: int
+    lon_offset: int
+    date_granularity: int
+    string_table: StringTable
+    groups: list = field(default_factory=list)  # of DecodedGroup
+
+
+def _degrees(q: np.ndarray, offset: int, granularity: int) -> np.ndarray:
+    # literal reference expression order for bit parity (pbfParser.js:378-379)
+    return (np.float64(offset) + np.float64(granularity) * q.astype(np.float64)) / 1e9
+
+
+def _nullable(values: np.ndarray, present: np.ndarray):
+    """Column absent from the whole group → None; partly absent → object
+    array with None in the absent rows."""
+    if not present.any():
+        return None
+    if present.all():
+        return values
+    out = values.astype(object)
+    out[~present] = None
+    return out
+
+
+def _info_columns(vals: dict, present: dict, blk: DecodedBlock) -> dict:
+    """Raw Info/DenseInfo fields → the six ``INFO_COLUMNS``."""
     return {
-        "version": version if version.size else None,
-        "timestamp_ms": timestamp if timestamp.size else None,
-        "changeset": changeset if changeset.size else None,
-        "uid": uid if uid.size else None,
-        "user_sid": user_sid if user_sid.size else None,
-        "visible": visible.astype(bool) if visible.size else None,
+        "version": _nullable(vals["version"], present["version"]),
+        "timestamp_ms": _nullable(vals["timestamp"] * np.int64(blk.date_granularity),
+                                  present["timestamp"]),
+        "changeset": _nullable(vals["changeset"], present["changeset"]),
+        "uid": _nullable(np.array([str(u) for u in vals["uid"].tolist()], dtype=object),
+                         present["uid"]),  # '' + uid parity
+        "user": _nullable(blk.string_table.take(vals["user_sid"]), present["user_sid"]),
+        "visible": _nullable(vals["visible"].astype(bool), present["visible"]),
     }
 
 
-def _split_keys_vals(keys_vals: np.ndarray, n_nodes: int, st: StringTable):
+def _info(msgs: list, blk: DecodedBlock) -> dict:
+    """Non-dense Info submessages (osmformat.proto:136-152), None where a
+    row has none."""
+    f = collect(msgs, _INFO)
+    return _info_columns({k: v for k, (v, _) in f.items()},
+                         {k: p for k, (_, p) in f.items()}, blk)
+
+
+def _dense_info(buf, n: int, blk: DecodedBlock) -> dict:
+    """DenseInfo (osmformat.proto:155-171): columnar, delta-coded; a
+    column absent from the message is absent for every node."""
+    f = collect_one(buf, _DENSE_INFO)
+    for k in ("timestamp", "changeset", "uid", "user_sid"):
+        f[k] = np.cumsum(f[k])
+    if any(v.size not in (0, n) for v in f.values()):
+        raise PbfError(f"DenseInfo column length differs from {n} nodes")
+    return _info_columns(f, {k: np.full(n, v.size == n) for k, v in f.items()}, blk)
+
+
+def _tags(f: dict, st: StringTable) -> dict:
+    (keys, offsets), (vals, val_offsets) = f["keys"], f["vals"]
+    if not np.array_equal(offsets, val_offsets):
+        raise PbfError("keys and vals differ in length")
+    return {"tag_offsets": offsets, "tag_keys": st.take(keys), "tag_vals": st.take(vals)}
+
+
+def _split_keys_vals(keys_vals: np.ndarray, n_nodes: int, st: StringTable) -> dict:
     """DenseNodes keys_vals: ((key val)* 0)* → per-node key/val id arrays.
 
     Vectorized: zeros are node delimiters (reference createTagsList,
-    lib/pbfParser.js:279-310). Returns (tag_offsets[n+1], keys, vals) where
-    keys/vals are decoded strings, flattened across nodes.
+    lib/pbfParser.js:279-310). Returns tag_offsets[n+1] and the decoded
+    keys/vals strings, flattened across nodes.
     """
     if keys_vals.size == 0:
-        offs = np.zeros(n_nodes + 1, dtype=np.int64)
         empty = np.empty(0, dtype=object)
-        return offs, empty, empty
+        return {"tag_offsets": np.zeros(n_nodes + 1, dtype=np.int64),
+                "tag_keys": empty, "tag_vals": empty}
     zero_pos = np.flatnonzero(keys_vals == 0)
     if zero_pos.size != n_nodes:
         raise PbfError(
@@ -310,422 +437,73 @@ def _split_keys_vals(keys_vals: np.ndarray, n_nodes: int, st: StringTable):
     n_pairs = (zero_pos - seg_start) // 2
     offs = np.zeros(n_nodes + 1, dtype=np.int64)
     np.cumsum(n_pairs, out=offs[1:])
-    keep = keys_vals != 0
-    kv = keys_vals[keep]
-    key_ids = kv[0::2]
-    val_ids = kv[1::2]
-    return offs, st.take(key_ids), st.take(val_ids)
+    kv = keys_vals[keys_vals != 0]
+    return {"tag_offsets": offs, "tag_keys": st.take(kv[0::2]),
+            "tag_vals": st.take(kv[1::2])}
 
 
-def _decode_dense_nodes(buf, st: StringTable, granularity: int,
-                        lat_offset: int, lon_offset: int,
-                        date_granularity: int) -> dict:
-    """DenseNodes → columnar node dict (all arrays length n)."""
-    id_chunks, lat_chunks, lon_chunks, kv_chunks = [], [], [], []
-    id_sc, lat_sc, lon_sc, kv_sc = [], [], [], []
-    denseinfo_buf = None
-    for f, w, v in iter_fields(buf):
-        if f == 1:
-            (id_chunks if w == 2 else id_sc).append(v)
-        elif f == 5 and w == 2:
-            denseinfo_buf = v
-        elif f == 8:
-            (lat_chunks if w == 2 else lat_sc).append(v)
-        elif f == 9:
-            (lon_chunks if w == 2 else lon_sc).append(v)
-        elif f == 10:
-            (kv_chunks if w == 2 else kv_sc).append(v)
-    ids = np.cumsum(_packed_or_repeated_signed(id_chunks, id_sc))
-    lat_q = np.cumsum(_packed_or_repeated_signed(lat_chunks, lat_sc))
-    lon_q = np.cumsum(_packed_or_repeated_signed(lon_chunks, lon_sc))
-    n = ids.size
-    # literal reference expression order for bit parity (pbfParser.js:378-379)
-    lat = (np.float64(lat_offset) + np.float64(granularity) * lat_q.astype(np.float64)) / 1e9
-    lon = (np.float64(lon_offset) + np.float64(granularity) * lon_q.astype(np.float64)) / 1e9
-    kv_parts = [decode_packed_uint(c) for c in kv_chunks]
-    if kv_sc:
-        kv_parts.append(np.array(kv_sc, dtype=np.int64))
-    keys_vals = (
-        np.concatenate(kv_parts) if kv_parts else np.empty(0, dtype=np.int64)
-    )
-    tag_offs, tag_keys, tag_vals = _split_keys_vals(keys_vals, n, st)
-    info = (
-        _decode_dense_info(denseinfo_buf, date_granularity, n)
-        if denseinfo_buf is not None
-        else {k: None for k in
-              ("version", "timestamp_ms", "changeset", "uid", "user_sid", "visible")}
-    )
-    user = st.take(info["user_sid"]) if info["user_sid"] is not None else None
-    uid_str = (
-        np.array([str(u) for u in info["uid"]], dtype=object)
-        if info["uid"] is not None else None
-    )
-    return {
-        "n": n,
-        "id": ids,
-        "lat": lat,
-        "lon": lon,
-        "tag_offsets": tag_offs,
-        "tag_keys": tag_keys,
-        "tag_vals": tag_vals,
-        "version": info["version"],
-        "timestamp_ms": info["timestamp_ms"],
-        "changeset": info["changeset"],
-        "uid": uid_str,
-        "user": user,
-        "visible": info["visible"],
-    }
+def _dense_nodes(buf, blk: DecodedBlock) -> dict:
+    f = collect_one(buf, _DENSE_NODES)
+    n = f["id"].size
+    if f["lat"].size != n or f["lon"].size != n:
+        raise PbfError("DenseNodes id/lat/lon lengths differ")
+    return {"n": n, "id": np.cumsum(f["id"]),
+            "lat": _degrees(np.cumsum(f["lat"]), blk.lat_offset, blk.granularity),
+            "lon": _degrees(np.cumsum(f["lon"]), blk.lon_offset, blk.granularity),
+            **_split_keys_vals(f["keys_vals"], n, blk.string_table),
+            **_dense_info(f["info"], n, blk)}
 
 
-def _decode_info(buf, st: StringTable, date_granularity: int) -> dict:
-    """Non-dense Info message (osmformat.proto:136-152)."""
-    out = {"version": None, "timestamp_ms": None, "changeset": None,
-           "uid": None, "user": None, "visible": None}
-    for f, w, v in iter_fields(buf):
-        if f == 1 and w == 0:
-            out["version"] = v
-        elif f == 2 and w == 0:
-            out["timestamp_ms"] = v * date_granularity
-        elif f == 3 and w == 0:
-            out["changeset"] = v
-        elif f == 4 and w == 0:
-            out["uid"] = str(v)
-        elif f == 5 and w == 0:
-            out["user"] = str(st.entries[v])
-        elif f == 6 and w == 0:
-            out["visible"] = bool(v)
-    return out
-
-
-def _zz_scalar(v: int) -> int:
-    """Zigzag-decode one varint value (sint64 scalar field)."""
-    return (v >> 1) ^ -(v & 1)
-
-
-def _decode_plain_nodes(node_bufs: list, st: StringTable, granularity: int,
-                        lat_offset: int, lon_offset: int,
-                        date_granularity: int) -> dict:
-    """Non-dense ``Node`` messages → the same columnar dict as
-    ``_decode_dense_nodes``.
+def _plain_nodes(bufs: list, blk: DecodedBlock) -> dict:
+    """Non-dense ``Node`` messages → the same columns as DenseNodes.
 
     The reference refuses these with 'not supported yet'
-    (``lib/pbfParser.js:269-271``); plain nodes are legal PBF
-    (``lib/proto/osmformat.proto`` Node: id=1 sint64, keys=2, vals=3,
-    info=4, lat=8 sint64, lon=9 sint64) and rare in real extracts, so a
-    per-node scan is fine — coordinates still dequantize through the
-    literal reference expression for bit parity with the dense path."""
-    n = len(node_bufs)
-    ids = np.empty(n, dtype=np.int64)
-    lat_q = np.zeros(n, dtype=np.int64)
-    lon_q = np.zeros(n, dtype=np.int64)
-    tag_counts = np.zeros(n, dtype=np.int64)
-    keys_parts: list[np.ndarray] = []
-    vals_parts: list[np.ndarray] = []
-    infos: list[dict | None] = []
-    for i, buf in enumerate(node_bufs):
-        k_chunks: list = []
-        v_chunks: list = []
-        k_sc: list[int] = []
-        v_sc: list[int] = []
-        info = None
-        for f, w, v in iter_fields(buf):
-            if f == 1 and w == 0:
-                ids[i] = _zz_scalar(v)
-            elif f == 2:
-                (k_chunks if w == 2 else k_sc).append(v)
-            elif f == 3:
-                (v_chunks if w == 2 else v_sc).append(v)
-            elif f == 4 and w == 2:
-                info = _decode_info(v, st, date_granularity)
-            elif f == 8 and w == 0:
-                lat_q[i] = _zz_scalar(v)
-            elif f == 9 and w == 0:
-                lon_q[i] = _zz_scalar(v)
-        tk, tv = _decode_tags(k_chunks, k_sc, v_chunks, v_sc, st)
-        keys_parts.append(tk)
-        vals_parts.append(tv)
-        tag_counts[i] = tk.size
-        infos.append(info)
-    lat = (np.float64(lat_offset)
-           + np.float64(granularity) * lat_q.astype(np.float64)) / 1e9
-    lon = (np.float64(lon_offset)
-           + np.float64(granularity) * lon_q.astype(np.float64)) / 1e9
-    tag_offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(tag_counts, out=tag_offs[1:])
-    empty = np.empty(0, dtype=object)
-    tag_keys = np.concatenate(keys_parts) if keys_parts else empty
-    tag_vals = np.concatenate(vals_parts) if vals_parts else empty
-
-    def info_col(key):
-        if all(it is None for it in infos):
-            return None
-        return [None if it is None else it[key] for it in infos]
-
-    return {
-        "n": n,
-        "id": ids,
-        "lat": lat,
-        "lon": lon,
-        "tag_offsets": tag_offs,
-        "tag_keys": tag_keys,
-        "tag_vals": tag_vals,
-        "version": info_col("version"),
-        "timestamp_ms": info_col("timestamp_ms"),
-        "changeset": info_col("changeset"),
-        "uid": info_col("uid"),
-        "user": info_col("user"),
-        "visible": info_col("visible"),
-    }
+    (``lib/pbfParser.js:269-271``); plain nodes are legal PBF and rare
+    in real extracts. Coordinates dequantize through the same literal
+    expression as the dense path, for bit parity."""
+    f = collect(bufs, _NODE)
+    return {"n": len(bufs), "id": f["id"][0],
+            "lat": _degrees(f["lat"][0], blk.lat_offset, blk.granularity),
+            "lon": _degrees(f["lon"][0], blk.lon_offset, blk.granularity),
+            **_tags(f, blk.string_table), **_info(f["info"], blk)}
 
 
-def _decode_tags(keys_chunks, keys_sc, vals_chunks, vals_sc, st: StringTable):
-    keys = _packed_or_repeated_unsigned(keys_chunks, keys_sc)
-    vals = _packed_or_repeated_unsigned(vals_chunks, vals_sc)
-    return st.take(keys), st.take(vals)
+def _ways(bufs: list, blk: DecodedBlock) -> dict:
+    f = collect(bufs, _WAY)
+    deltas, offsets = f["refs"]
+    return {"n": len(bufs), "id": f["id"][0], **_tags(f, blk.string_table),
+            "ref_offsets": offsets, "refs": _delta_decode(deltas, offsets),
+            **_info(f["info"], blk)}
 
 
-def _decode_way(buf, st: StringTable, date_granularity: int) -> dict:
-    wid = None
-    keys_chunks, vals_chunks, refs_chunks = [], [], []
-    keys_sc, vals_sc, refs_sc = [], [], []
-    info = {"version": None, "timestamp_ms": None, "changeset": None,
-            "uid": None, "user": None, "visible": None}
-    for f, w, v in iter_fields(buf):
-        if f == 1 and w == 0:
-            wid = v
-        elif f == 2:
-            (keys_chunks if w == 2 else keys_sc).append(v)
-        elif f == 3:
-            (vals_chunks if w == 2 else vals_sc).append(v)
-        elif f == 4 and w == 2:
-            info = _decode_info(v, st, date_granularity)
-        elif f == 8:
-            (refs_chunks if w == 2 else refs_sc).append(v)
-    tag_keys, tag_vals = _decode_tags(keys_chunks, keys_sc, vals_chunks, vals_sc, st)
-    refs = np.cumsum(_packed_or_repeated_signed(refs_chunks, refs_sc))
-    return {"id": wid, "tag_keys": tag_keys, "tag_vals": tag_vals,
-            "refs": refs, **info}
+def _relations(bufs: list, blk: DecodedBlock) -> dict:
+    f = collect(bufs, _RELATION)
+    (roles, offsets), (memids, mem_offsets), (types, type_offsets) = (
+        f["roles"], f["memids"], f["types"])
+    if not (np.array_equal(offsets, mem_offsets) and np.array_equal(offsets, type_offsets)):
+        raise PbfError("relation roles/memids/types differ in length")
+    if types.size and (types.min() < 0 or types.max() >= MEMBER_TYPES.size):
+        raise PbfError(f"relation member type {types.max()} out of range")
+    return {"n": len(bufs), "id": f["id"][0], **_tags(f, blk.string_table),
+            "member_offsets": offsets, "member_refs": _delta_decode(memids, offsets),
+            "member_roles": blk.string_table.take(roles),
+            "member_types": MEMBER_TYPES[types], **_info(f["info"], blk)}
 
 
-def _decode_ways_batch(way_bufs: list, st: StringTable,
-                       date_granularity: int) -> list[dict]:
-    """Decode a whole ways group with BATCHED packed-varint passes.
-
-    ``_decode_way`` per way costs ~20 tiny NumPy calls (each ~µs of
-    call overhead on ≤12 values) — 16k ways/s. Here pass 1 is a cheap
-    Python scan collecting each way's raw field slices; pass 2
-    concatenates every way's packed refs/keys/vals into ONE stream per
-    field and decodes it with a single vectorized pass (packed varints
-    are self-delimiting, so concatenation is still a valid stream);
-    per-way splits come from counting terminator bytes per byte-range
-    (np.add-style reduce over cumsum). Delta-decoded refs get their
-    per-way prefix sums from one global cumsum minus per-way bases.
-    Ways using the rare unpacked-repeated encoding take the scalar
-    slow path unchanged. Output dicts are slices of the flat arrays —
-    identical to ``_decode_way``'s, pinned by the golden tests.
-    """
-    n = len(way_bufs)
-    metas: list[tuple | None] = []
-    slow: dict[int, dict] = {}
-    for i, buf in enumerate(way_bufs):
-        wid = None
-        k_parts: list = []
-        v_parts: list = []
-        r_parts: list = []
-        info_buf = None
-        scalar = False
-        for f, w, v in iter_fields(buf):
-            if f == 1 and w == 0:
-                wid = v
-            elif f == 2 and w == 2:
-                k_parts.append(v)
-            elif f == 3 and w == 2:
-                v_parts.append(v)
-            elif f == 8 and w == 2:
-                r_parts.append(v)
-            elif f == 4 and w == 2:
-                info_buf = v
-            elif f in (2, 3, 8) and w == 0:
-                scalar = True
-        if scalar:
-            slow[i] = _decode_way(buf, st, date_granularity)
-            metas.append(None)
-        else:
-            metas.append((wid, k_parts, v_parts, r_parts, info_buf))
-
-    fast_idx = [i for i in range(n) if metas[i] is not None]
-
-    def batch(field: int, signed: bool):
-        blobs = [b"".join(bytes(p) for p in metas[i][field]) for i in fast_idx]
-        data = b"".join(blobs)
-        arr = np.frombuffer(data, dtype=np.uint8)
-        lens = np.fromiter((len(b) for b in blobs), dtype=np.int64,
-                           count=len(blobs))
-        byte_offs = np.zeros(len(blobs) + 1, dtype=np.int64)
-        np.cumsum(lens, out=byte_offs[1:])
-        csum = np.zeros(arr.size + 1, dtype=np.int64)
-        np.cumsum(arr < 0x80, out=csum[1:])
-        counts = csum[byte_offs[1:]] - csum[byte_offs[:-1]]
-        vals = (decode_packed_sint64(data) if signed
-                else decode_packed_varints(data).astype(np.int64))
-        offs = np.zeros(len(blobs) + 1, dtype=np.int64)
-        np.cumsum(counts, out=offs[1:])
-        return vals, offs
-
-    ref_deltas, r_offs = batch(3, signed=True)
-    # per-way prefix sums from one global cumsum minus per-way bases
-    g = np.cumsum(ref_deltas)
-    starts = r_offs[:-1]
-    base = np.where(starts > 0, g[np.maximum(starts - 1, 0)], 0)
-    refs_flat = g - np.repeat(base, np.diff(r_offs))
-    key_ids, k_offs = batch(1, signed=False)
-    val_ids, v_offs = batch(2, signed=False)
-    keys_flat = st.take(key_ids)
-    vals_flat = st.take(val_ids)
-
-    out: list[dict | None] = [None] * n
-    for j, i in enumerate(fast_idx):
-        wid, _k, _v, _r, info_buf = metas[i]
-        info = (_decode_info(info_buf, st, date_granularity) if info_buf
-                else {"version": None, "timestamp_ms": None,
-                      "changeset": None, "uid": None, "user": None,
-                      "visible": None})
-        out[i] = {"id": wid,
-                  "tag_keys": keys_flat[k_offs[j]:k_offs[j + 1]],
-                  "tag_vals": vals_flat[v_offs[j]:v_offs[j + 1]],
-                  "refs": refs_flat[r_offs[j]:r_offs[j + 1]], **info}
-    for i, d in slow.items():
-        out[i] = d
-    return out
-
-
-def _decode_relation(buf, st: StringTable, date_granularity: int) -> dict:
-    rid = None
-    keys_chunks, vals_chunks = [], []
-    keys_sc, vals_sc = [], []
-    roles_chunks, memids_chunks, types_chunks = [], [], []
-    roles_sc, memids_sc, types_sc = [], [], []
-    info = {"version": None, "timestamp_ms": None, "changeset": None,
-            "uid": None, "user": None, "visible": None}
-    for f, w, v in iter_fields(buf):
-        if f == 1 and w == 0:
-            rid = v
-        elif f == 2:
-            (keys_chunks if w == 2 else keys_sc).append(v)
-        elif f == 3:
-            (vals_chunks if w == 2 else vals_sc).append(v)
-        elif f == 4 and w == 2:
-            info = _decode_info(v, st, date_granularity)
-        elif f == 8:
-            (roles_chunks if w == 2 else roles_sc).append(v)
-        elif f == 9:
-            (memids_chunks if w == 2 else memids_sc).append(v)
-        elif f == 10:
-            (types_chunks if w == 2 else types_sc).append(v)
-    tag_keys, tag_vals = _decode_tags(keys_chunks, keys_sc, vals_chunks, vals_sc, st)
-    roles = st.take(_packed_or_repeated_unsigned(roles_chunks, roles_sc))
-    memids = np.cumsum(_packed_or_repeated_signed(memids_chunks, memids_sc))
-    types = MEMBER_TYPES[_packed_or_repeated_unsigned(types_chunks, types_sc)]
-    return {"id": rid, "tag_keys": tag_keys, "tag_vals": tag_vals,
-            "member_refs": memids, "member_roles": roles,
-            "member_types": types, **info}
-
-
-def _decode_relations_batch(rel_bufs: list, st: StringTable,
-                            date_granularity: int) -> list[dict]:
-    """Batched relations-group decode — same shape as
-    ``_decode_ways_batch``: one vectorized packed-varint pass per field
-    (keys/vals/roles/memids/types) across the whole group, per-relation
-    splits by terminator-byte counts, per-relation member-id prefix sums
-    from a single global cumsum. Unpacked-repeated encodings take the
-    per-relation slow path; outputs equal ``_decode_relation``'s
-    (pinned by the golden suite + wire tests)."""
-    n = len(rel_bufs)
-    metas: list[tuple | None] = []
-    slow: dict[int, dict] = {}
-    for i, buf in enumerate(rel_bufs):
-        rid = None
-        parts: tuple = ([], [], [], [], [])  # keys, vals, roles, memids, types
-        info_buf = None
-        scalar = False
-        field_slot = {2: 0, 3: 1, 8: 2, 9: 3, 10: 4}
-        for f, w, v in iter_fields(buf):
-            if f == 1 and w == 0:
-                rid = v
-            elif f == 4 and w == 2:
-                info_buf = v
-            elif f in field_slot:
-                if w == 2:
-                    parts[field_slot[f]].append(v)
-                else:
-                    scalar = True
-        if scalar:
-            slow[i] = _decode_relation(buf, st, date_granularity)
-            metas.append(None)
-        else:
-            metas.append((rid, parts, info_buf))
-
-    fast_idx = [i for i in range(n) if metas[i] is not None]
-
-    def batch(slot: int, signed: bool):
-        blobs = [b"".join(bytes(p) for p in metas[i][1][slot])
-                 for i in fast_idx]
-        data = b"".join(blobs)
-        arr = np.frombuffer(data, dtype=np.uint8)
-        lens = np.fromiter((len(b) for b in blobs), dtype=np.int64,
-                           count=len(blobs))
-        byte_offs = np.zeros(len(blobs) + 1, dtype=np.int64)
-        np.cumsum(lens, out=byte_offs[1:])
-        csum = np.zeros(arr.size + 1, dtype=np.int64)
-        np.cumsum(arr < 0x80, out=csum[1:])
-        counts = csum[byte_offs[1:]] - csum[byte_offs[:-1]]
-        vals = (decode_packed_sint64(data) if signed
-                else decode_packed_varints(data).astype(np.int64))
-        offs = np.zeros(len(blobs) + 1, dtype=np.int64)
-        np.cumsum(counts, out=offs[1:])
-        return vals, offs
-
-    key_ids, k_offs = batch(0, signed=False)
-    val_ids, v_offs = batch(1, signed=False)
-    role_ids, r_offs = batch(2, signed=False)
-    mem_deltas, m_offs = batch(3, signed=True)
-    type_ids, t_offs = batch(4, signed=False)
-    g = np.cumsum(mem_deltas)
-    starts = m_offs[:-1]
-    base = np.where(starts > 0, g[np.maximum(starts - 1, 0)], 0)
-    mem_flat = g - np.repeat(base, np.diff(m_offs))
-    keys_flat = st.take(key_ids)
-    vals_flat = st.take(val_ids)
-    roles_flat = st.take(role_ids)
-    types_flat = MEMBER_TYPES[type_ids]
-
-    out: list[dict | None] = [None] * n
-    for j, i in enumerate(fast_idx):
-        rid, _parts, info_buf = metas[i]
-        info = (_decode_info(info_buf, st, date_granularity) if info_buf
-                else {"version": None, "timestamp_ms": None,
-                      "changeset": None, "uid": None, "user": None,
-                      "visible": None})
-        out[i] = {"id": rid,
-                  "tag_keys": keys_flat[k_offs[j]:k_offs[j + 1]],
-                  "tag_vals": vals_flat[v_offs[j]:v_offs[j + 1]],
-                  "member_refs": mem_flat[m_offs[j]:m_offs[j + 1]],
-                  "member_roles": roles_flat[r_offs[j]:r_offs[j + 1]],
-                  "member_types": types_flat[t_offs[j]:t_offs[j + 1]],
-                  **info}
-    for i, d in slow.items():
-        out[i] = d
-    return out
-
-
-@dataclass
-class DecodedBlock:
-    granularity: int
-    lat_offset: int
-    lon_offset: int
-    date_granularity: int
-    string_table: StringTable
-    groups: list  # of DecodedGroup
+def _decode_group(buf, blk: DecodedBlock) -> DecodedGroup:
+    g = collect_one(buf, _GROUP)
+    if g["nodes"] and g["dense"] is not None:
+        # osmformat.proto: a PrimitiveGroup holds exactly one kind
+        raise PbfError("PrimitiveGroup mixes Node and DenseNodes")
+    if g["nodes"]:
+        return DecodedGroup("nodes", _plain_nodes(g["nodes"], blk))
+    if g["dense"] is not None:
+        return DecodedGroup("nodes", _dense_nodes(g["dense"], blk))
+    if g["ways"]:
+        return DecodedGroup("ways", _ways(g["ways"], blk))
+    if g["relations"]:
+        return DecodedGroup("relations", _relations(g["relations"], blk))
+    return DecodedGroup("empty", {"n": 0})
 
 
 def decode_primitive_block(buf: bytes) -> DecodedBlock:
@@ -735,69 +513,14 @@ def decode_primitive_block(buf: bytes) -> DecodedBlock:
     the reference emission order (lib/pbfParser.js:152-180); we record them
     as lineage indices so Spark-side parity sorts can reconstruct it.
     """
-    st = None
-    group_bufs = []
-    granularity = 100
-    lat_offset = 0
-    lon_offset = 0
-    date_granularity = 1000
-    for f, w, v in iter_fields(buf):
-        if f == 1 and w == 2:
-            st = StringTable.decode(v)
-        elif f == 2 and w == 2:
-            group_bufs.append(v)
-        elif f == 17 and w == 0:
-            granularity = v
-        elif f == 18 and w == 0:
-            date_granularity = v
-        elif f == 19 and w == 0:
-            lat_offset = v
-        elif f == 20 and w == 0:
-            lon_offset = v
-    if st is None:
+    b = collect_one(buf, _BLOCK)
+    if b["stringtable"] is None:
         raise PbfError("PrimitiveBlock missing StringTable")
-    groups = []
-    for gbuf in group_bufs:
-        dense_buf = None
-        way_bufs = []
-        rel_bufs = []
-        node_bufs = []
-        for f, w, v in iter_fields(gbuf):
-            if f == 1 and w == 2:
-                node_bufs.append(v)
-            elif f == 2 and w == 2:
-                dense_buf = v
-            elif f == 3 and w == 2:
-                way_bufs.append(v)
-            elif f == 4 and w == 2:
-                rel_bufs.append(v)
-        if node_bufs and dense_buf is not None:
-            # osmformat.proto: a PrimitiveGroup holds exactly one kind
-            raise PbfError("PrimitiveGroup mixes Node and DenseNodes")
-        if node_bufs:
-            # the reference refuses these (lib/pbfParser.js:269-271 'not
-            # supported yet'); we decode them — see _decode_plain_nodes.
-            groups.append(DecodedGroup(
-                "nodes",
-                nodes=_decode_plain_nodes(node_bufs, st, granularity,
-                                          lat_offset, lon_offset,
-                                          date_granularity)))
-        elif dense_buf is not None:
-            groups.append(DecodedGroup(
-                "nodes",
-                nodes=_decode_dense_nodes(dense_buf, st, granularity,
-                                          lat_offset, lon_offset,
-                                          date_granularity)))
-        elif way_bufs:
-            groups.append(DecodedGroup(
-                "ways",
-                ways=_decode_ways_batch(way_bufs, st, date_granularity)))
-        elif rel_bufs:
-            groups.append(DecodedGroup(
-                "relations",
-                relations=_decode_relations_batch(rel_bufs, st,
-                                                  date_granularity)))
-        else:
-            groups.append(DecodedGroup("empty"))
-    return DecodedBlock(granularity, lat_offset, lon_offset,
-                        date_granularity, st, groups)
+    blk = DecodedBlock(
+        granularity=100 if b["granularity"] is None else b["granularity"],
+        lat_offset=b["lat_offset"] or 0,
+        lon_offset=b["lon_offset"] or 0,
+        date_granularity=1000 if b["date_granularity"] is None else b["date_granularity"],
+        string_table=StringTable.decode(b["stringtable"]))
+    blk.groups = [_decode_group(g, blk) for g in b["groups"]]
+    return blk

@@ -4,13 +4,18 @@ The reference is a sequential callback pump (``visitNextBlock``,
 ``lib/pbfParser.js:55-90`` — block N+1 decoded only after block N emitted).
 Here each page row decodes independently inside ``mapInArrow`` — the only
 JVM↔Python crossing, amortized per Arrow batch — so a 1000-executor
-cluster decodes 10^12 pages with no coordination. Entity kinds get
-*separate* extraction functions so Catalyst's column pruning plays the role
-of the reference's callback-presence pruning (``pbfParser.js:161,168,175``):
-asking only for nodes never materializes way/relation columns.
+cluster decodes 10^12 pages with no coordination. Each entity kind is its
+own ``mapInArrow`` over one shared page → block → group walk. Every
+extraction decodes every group kind of every block
+(``decode_primitive_block`` has no kind filter); what an extraction
+skips is building the Arrow columns of the other kinds, and Catalyst
+prunes unused columns above the Python boundary. That is the analogue of
+the reference's callback-presence pruning (``pbfParser.js:161,168,175``),
+at the column level only.
 
-Decoded columns are assembled directly into Arrow arrays (MapArray /
-ListArray / StructArray) — no per-row Python objects on the hot path.
+Each decoded group becomes one Arrow batch built straight from its flat
+column arrays (MapArray / ListArray / StructArray) — no per-row Python
+objects on the hot path.
 """
 
 from __future__ import annotations
@@ -23,7 +28,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from .. import model
-from .decode import DecodedBlock, PbfError, decode_header_block, decode_primitive_block, inflate_blob, iter_file_blocks, split_file_blocks
+from .decode import PbfError, decode_header_block, decode_primitive_block, inflate_blob, iter_file_blocks, split_file_blocks
 
 __all__ = [
     "decode_page",
@@ -118,55 +123,51 @@ def _opt(arr, n: int, dtype) -> pa.Array:
     return pa.array(arr, type=dtype)
 
 
-class _NodeAccumulator:
-    """Accumulates decoded node groups into Arrow-ready column chunks."""
-
-    FIELDS = [f.name for f in model.NODE_SCHEMA.fields]
-
-    def __init__(self):
-        self.chunks: list[pa.RecordBatch] = []
-        self.n_rows = 0
-
-    def add_group(self, url: str, block_idx: int, group_idx: int, g: dict):
-        n = g["n"]
-        if n == 0:
-            return
-        ids = g["id"]
-        cols = [
-            pa.array(np.repeat(url, n), type=pa.string()),
-            pa.array(np.full(n, block_idx, dtype=np.int32)),
-            pa.array(np.full(n, group_idx, dtype=np.int32)),
-            pa.array(np.arange(n, dtype=np.int32)),
-            pa.array(ids, type=pa.int64()),
-            pa.array(ids.astype("U"), type=pa.string()),  # '' + id parity
-            pa.array(g["lat"], type=pa.float64()),
-            pa.array(g["lon"], type=pa.float64()),
-            _map_array(g["tag_offsets"], g["tag_keys"], g["tag_vals"]),
-            _opt(g["version"], n, pa.int32()),
-            _opt(g["timestamp_ms"], n, pa.int64()),
-            _opt(g["changeset"], n, pa.int64()),
-            _opt(g["uid"], n, pa.string()),
-            _opt(g["user"], n, pa.string()),
-            _opt(g["visible"], n, pa.bool_()),
-        ]
-        self.chunks.append(
-            pa.RecordBatch.from_arrays(cols, schema=_ARROW_NODE_SCHEMA)
-        )
-        self.n_rows += n
-
-    def flush(self) -> Iterator[pa.RecordBatch]:
-        yield from self.chunks
-        self.chunks = []
-        self.n_rows = 0
-
-
 # Arrow schemas are resolved lazily on the executor (model import is cheap).
-_ARROW_NODE_SCHEMA = model.to_arrow_schema(model.NODE_SCHEMA)
-_ARROW_WAY_SCHEMA = model.to_arrow_schema(model.WAY_SCHEMA)
-_ARROW_REL_SCHEMA = model.to_arrow_schema(model.RELATION_SCHEMA)
+_ARROW_SCHEMAS = {
+    "nodes": model.to_arrow_schema(model.NODE_SCHEMA),
+    "ways": model.to_arrow_schema(model.WAY_SCHEMA),
+    "relations": model.to_arrow_schema(model.RELATION_SCHEMA),
+}
 _ARROW_HEADER_SCHEMA = model.to_arrow_schema(model.HEADER_SCHEMA)
 _ARROW_TEXT_SCHEMA = model.to_arrow_schema(model.TEXT_SCHEMA)
 _ARROW_QUARANTINE_SCHEMA = model.to_arrow_schema(model.QUARANTINE_SCHEMA)
+
+
+def _group_batch(kind: str, url: str, block_idx: int, group_idx: int, g: dict) -> pa.RecordBatch:
+    """One decoded group → one Arrow batch in its kind's schema.
+
+    Schema columns named like a decoded column (id, lat, lon, the info
+    columns) are taken from it; center_lat/center_lon, which PBF lacks,
+    are null."""
+    n = g["n"]
+    cols = {
+        "url": pa.array(np.repeat(url, n), type=pa.string()),
+        "block_idx": pa.array(np.full(n, block_idx, dtype=np.int32)),
+        "group_idx": pa.array(np.full(n, group_idx, dtype=np.int32)),
+        "row_idx": pa.array(np.arange(n, dtype=np.int32)),
+        "id_str": pa.array(g["id"].astype("U"), type=pa.string()),  # '' + id parity
+        "tags": _map_array(g["tag_offsets"], g["tag_keys"], g["tag_vals"]),
+    }
+    if kind == "ways":
+        offsets = pa.array(g["ref_offsets"], type=pa.int32())
+        cols["node_refs"] = pa.ListArray.from_arrays(
+            offsets, pa.array(g["refs"], type=pa.int64()))
+        cols["node_refs_str"] = pa.ListArray.from_arrays(
+            offsets, pa.array(g["refs"].astype("U"), type=pa.string()))
+    elif kind == "relations":
+        members = pa.StructArray.from_arrays(
+            [pa.array(g["member_refs"].astype("U"), type=pa.string()),
+             pa.array(g["member_roles"], type=pa.string()),
+             pa.array(g["member_types"], type=pa.string())],
+            names=["ref", "role", "type"])
+        cols["members"] = pa.ListArray.from_arrays(
+            pa.array(g["member_offsets"], type=pa.int32()), members)
+    schema = _ARROW_SCHEMAS[kind]
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] if f.name in cols else _opt(g.get(f.name), n, f.type)
+         for f in schema],
+        schema=schema)
 
 
 def _iter_pages(batch: pa.RecordBatch):
@@ -177,120 +178,24 @@ def _iter_pages(batch: pa.RecordBatch):
 
 
 # The ``_*_fn`` decoders are mapInArrow functions; the public API binds
-# ``on_error`` with ``partial``. The streaming source uses ``_nodes_fn``
-# as is (raise mode).
+# ``kind`` and ``on_error`` with ``partial``. The streaming source uses
+# ``_nodes_fn`` as is (raise mode).
+def _entities_fn(it: Iterator[pa.RecordBatch], kind: str,
+                 on_error: str = "raise") -> Iterator[pa.RecordBatch]:
+    """The page → block → group walk: one batch per non-empty group of
+    ``kind``, in file order."""
+    for batch in it:
+        for url, html in _iter_pages(batch):
+            for block_idx, btype, decoded in _page_blocks(html, on_error):
+                if btype != "OSMData":
+                    continue
+                for group_idx, grp in enumerate(decoded.groups):
+                    if grp.kind == kind and grp.cols["n"]:
+                        yield _group_batch(kind, url, block_idx, group_idx, grp.cols)
+
+
 def _nodes_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
-    for batch in it:
-        acc = _NodeAccumulator()
-        for url, html in _iter_pages(batch):
-            for block_idx, btype, decoded in _page_blocks(html, on_error):
-                if btype != "OSMData":
-                    continue
-                for group_idx, grp in enumerate(decoded.groups):
-                    if grp.kind == "nodes":
-                        acc.add_group(url, block_idx, group_idx, grp.nodes)
-        yield from acc.flush()
-
-
-def _info_cols(rows: list[dict]):
-    n = len(rows)
-    return [
-        pa.array([r["version"] for r in rows], type=pa.int32()),
-        pa.array([r["timestamp_ms"] for r in rows], type=pa.int64()),
-        pa.array([r["changeset"] for r in rows], type=pa.int64()),
-        pa.array([r["uid"] for r in rows], type=pa.string()),
-        pa.array([r["user"] for r in rows], type=pa.string()),
-        pa.array([r["visible"] for r in rows], type=pa.bool_()),
-    ]
-
-
-def _ways_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
-    for batch in it:
-        rows = []
-        for url, html in _iter_pages(batch):
-            for block_idx, btype, decoded in _page_blocks(html, on_error):
-                if btype != "OSMData":
-                    continue
-                for group_idx, grp in enumerate(decoded.groups):
-                    if grp.kind != "ways":
-                        continue
-                    for row_idx, w in enumerate(grp.ways):
-                        rows.append({**w, "url": url, "block_idx": block_idx,
-                                     "group_idx": group_idx, "row_idx": row_idx})
-        if not rows:
-            continue
-        tag_offsets = np.zeros(len(rows) + 1, dtype=np.int64)
-        np.cumsum([len(r["tag_keys"]) for r in rows], out=tag_offsets[1:])
-        ref_offsets = np.zeros(len(rows) + 1, dtype=np.int64)
-        np.cumsum([len(r["refs"]) for r in rows], out=ref_offsets[1:])
-        flat_refs = (np.concatenate([r["refs"] for r in rows])
-                     if rows else np.empty(0, dtype=np.int64))
-        cols = [
-            pa.array([r["url"] for r in rows], type=pa.string()),
-            pa.array([r["block_idx"] for r in rows], type=pa.int32()),
-            pa.array([r["group_idx"] for r in rows], type=pa.int32()),
-            pa.array([r["row_idx"] for r in rows], type=pa.int32()),
-            pa.array([r["id"] for r in rows], type=pa.int64()),
-            pa.array([str(r["id"]) for r in rows], type=pa.string()),
-            _map_array(tag_offsets,
-                       np.concatenate([r["tag_keys"] for r in rows]) if rows else [],
-                       np.concatenate([r["tag_vals"] for r in rows]) if rows else []),
-            pa.ListArray.from_arrays(pa.array(ref_offsets, type=pa.int32()),
-                                     pa.array(flat_refs, type=pa.int64())),
-            pa.ListArray.from_arrays(pa.array(ref_offsets, type=pa.int32()),
-                                     pa.array(flat_refs.astype("U"), type=pa.string())),
-            *_info_cols(rows),
-            pa.nulls(len(rows), pa.float64()),  # center_lat: PBF has none
-            pa.nulls(len(rows), pa.float64()),
-        ]
-        yield pa.RecordBatch.from_arrays(cols, schema=_ARROW_WAY_SCHEMA)
-
-
-def _relations_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
-    for batch in it:
-        rows = []
-        for url, html in _iter_pages(batch):
-            for block_idx, btype, decoded in _page_blocks(html, on_error):
-                if btype != "OSMData":
-                    continue
-                for group_idx, grp in enumerate(decoded.groups):
-                    if grp.kind != "relations":
-                        continue
-                    for row_idx, r in enumerate(grp.relations):
-                        rows.append({**r, "url": url, "block_idx": block_idx,
-                                     "group_idx": group_idx, "row_idx": row_idx})
-        if not rows:
-            continue
-        tag_offsets = np.zeros(len(rows) + 1, dtype=np.int64)
-        np.cumsum([len(r["tag_keys"]) for r in rows], out=tag_offsets[1:])
-        mem_offsets = np.zeros(len(rows) + 1, dtype=np.int64)
-        np.cumsum([len(r["member_refs"]) for r in rows], out=mem_offsets[1:])
-        flat_refs = np.concatenate([r["member_refs"] for r in rows])
-        flat_roles = np.concatenate([r["member_roles"] for r in rows])
-        flat_types = np.concatenate([r["member_types"] for r in rows])
-        member_struct = pa.StructArray.from_arrays(
-            [
-                pa.array(flat_refs.astype("U"), type=pa.string()),
-                pa.array(flat_roles, type=pa.string()),
-                pa.array(flat_types, type=pa.string()),
-            ],
-            names=["ref", "role", "type"],
-        )
-        cols = [
-            pa.array([r["url"] for r in rows], type=pa.string()),
-            pa.array([r["block_idx"] for r in rows], type=pa.int32()),
-            pa.array([r["group_idx"] for r in rows], type=pa.int32()),
-            pa.array([r["row_idx"] for r in rows], type=pa.int32()),
-            pa.array([r["id"] for r in rows], type=pa.int64()),
-            pa.array([str(r["id"]) for r in rows], type=pa.string()),
-            _map_array(tag_offsets,
-                       np.concatenate([r["tag_keys"] for r in rows]),
-                       np.concatenate([r["tag_vals"] for r in rows])),
-            pa.ListArray.from_arrays(pa.array(mem_offsets, type=pa.int32()),
-                                     member_struct),
-            *_info_cols(rows),
-        ]
-        yield pa.RecordBatch.from_arrays(cols, schema=_ARROW_REL_SCHEMA)
+    return _entities_fn(it, "nodes", on_error)
 
 
 def _headers_fn(it: Iterator[pa.RecordBatch], on_error: str = "raise") -> Iterator[pa.RecordBatch]:
@@ -339,8 +244,8 @@ def render_text(decoded_blocks: list) -> str:
         if btype != "OSMData":
             continue
         for grp in decoded.groups:
+            g = grp.cols
             if grp.kind == "nodes":
-                g = grp.nodes
                 offs = g["tag_offsets"]
                 keys = g["tag_keys"]
                 vals = g["tag_vals"]
@@ -353,19 +258,19 @@ def render_text(decoded_blocks: list) -> str:
                             name = " " + vals[j]
                             break
                     lines.append(f"N {g['id'][i]} {lat_r[i]} {lon_r[i]}{name}")
-            elif grp.kind == "ways":
-                for w in grp.ways:
-                    refs = ",".join(str(r) for r in w["refs"].tolist())
-                    lines.append(f"W {w['id']} {refs}")
+                continue
+            if grp.kind == "ways":
+                letter, offs = "W", g["ref_offsets"].tolist()
+                items = [str(r) for r in g["refs"].tolist()]
             elif grp.kind == "relations":
-                for r in grp.relations:
-                    mem = ",".join(
-                        f"{t}:{ref}:{role}"
-                        for t, ref, role in zip(r["member_types"].tolist(),
-                                                r["member_refs"].tolist(),
-                                                r["member_roles"].tolist())
-                    )
-                    lines.append(f"R {r['id']} {mem}")
+                letter, offs = "R", g["member_offsets"].tolist()
+                items = [f"{t}:{ref}:{role}" for t, ref, role in zip(
+                    g["member_types"].tolist(), g["member_refs"].tolist(),
+                    g["member_roles"].tolist())]
+            else:
+                continue
+            for i, eid in enumerate(g["id"].tolist()):
+                lines.append(f"{letter} {eid} {','.join(items[offs[i]:offs[i + 1]])}")
     return "\n".join(lines)
 
 
@@ -399,11 +304,13 @@ def nodes_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:
 
 
 def ways_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:
-    return _pruned(pages).mapInArrow(partial(_ways_fn, on_error=on_error), model.WAY_SCHEMA)
+    return _pruned(pages).mapInArrow(
+        partial(_entities_fn, kind="ways", on_error=on_error), model.WAY_SCHEMA)
 
 
 def relations_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:
-    return _pruned(pages).mapInArrow(partial(_relations_fn, on_error=on_error), model.RELATION_SCHEMA)
+    return _pruned(pages).mapInArrow(
+        partial(_entities_fn, kind="relations", on_error=on_error), model.RELATION_SCHEMA)
 
 
 def headers_from_pages(pages: DataFrame, on_error: str = "raise") -> DataFrame:

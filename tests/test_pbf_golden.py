@@ -50,7 +50,7 @@ def test_three_groups_in_order(golden):
 
 def test_node0_pinned(golden):
     _, blk = golden
-    g = blk.groups[0].nodes
+    g = blk.groups[0].cols
     assert g["n"] == 6
     assert g["id"][0] == 319408586
     # exact double equality — pbfTest.js:116-118 via the literal formula
@@ -65,7 +65,7 @@ def test_node0_pinned(golden):
 
 def test_node1_pinned(golden):
     _, blk = golden
-    g = blk.groups[0].nodes
+    g = blk.groups[0].cols
     assert g["id"][1] == 319408587
     assert g["lat"][1] == 51.5074343
     assert g["lon"][1] == -0.1081264
@@ -73,7 +73,7 @@ def test_node1_pinned(golden):
 
 def test_node2_tags(golden):
     _, blk = golden
-    g = blk.groups[0].nodes
+    g = blk.groups[0].cols
     o = g["tag_offsets"]
     tags = dict(zip(g["tag_keys"][o[2]:o[3]], g["tag_vals"][o[2]:o[3]]))
     assert tags == {"name": "Jam's Sandwich Bar", "amenity": "cafe"}
@@ -81,7 +81,7 @@ def test_node2_tags(golden):
 
 def test_node5_empty_tags_not_null(golden):
     _, blk = golden
-    g = blk.groups[0].nodes
+    g = blk.groups[0].cols
     assert g["lat"][5] == 51.507406
     assert g["lon"][5] == -0.1083348
     o = g["tag_offsets"]
@@ -90,25 +90,30 @@ def test_node5_empty_tags_not_null(golden):
 
 def test_way_pinned(golden):
     _, blk = golden
-    w = blk.groups[1].ways[0]
-    assert w["id"] == 27776903
-    assert w["version"] == 3
-    assert w["timestamp_ms"] == 1243777155000
-    assert w["changeset"] == 1368552
-    assert w["user"] == "Matt"
-    assert w["uid"] == "70"
+    w = blk.groups[1].cols  # a group holding the one way
+    assert w["n"] == 1
+    assert w["id"][0] == 27776903
+    assert w["version"][0] == 3
+    assert w["timestamp_ms"][0] == 1243777155000
+    assert w["changeset"][0] == 1368552
+    assert w["user"][0] == "Matt"
+    assert w["uid"][0] == "70"
+    assert list(w["tag_offsets"]) == [0, 3]
     tags = dict(zip(w["tag_keys"], w["tag_vals"]))
     assert tags == {"access": "private", "highway": "service", "name": "üßé€"}
+    assert list(w["ref_offsets"]) == [0, 5]
     assert list(w["refs"]) == [304994979, 319408587, 319408586, 304994980, 304994981]
 
 
 def test_relation_pinned(golden):
     _, blk = golden
-    r = blk.groups[2].relations[0]
-    assert r["id"] == 56688
-    assert r["version"] == 28
-    assert r["changeset"] == 6947637
-    assert r["user"] == "kmvar"
+    r = blk.groups[2].cols  # a group holding the one relation
+    assert r["n"] == 1
+    assert r["id"][0] == 56688
+    assert r["version"][0] == 28
+    assert r["changeset"][0] == 6947637
+    assert r["user"][0] == "kmvar"
+    assert list(r["member_offsets"]) == [0, 2]
     tags = dict(zip(r["tag_keys"], r["tag_vals"]))
     assert tags == {"network": "VVW", "ref": "123", "route": "bus", "type": "route"}
     members = list(zip(r["member_types"], r["member_refs"], r["member_roles"]))
@@ -124,7 +129,7 @@ def test_many_nodes_3000(many_nodes_pbf):
         blk = decode_primitive_block(inflate_blob(blob))
         for g in blk.groups:
             if g.kind == "nodes":
-                total += g.nodes["n"]
+                total += g.cols["n"]
     assert total == 3000  # manyNodesTest.js:30-32
 
 
@@ -145,7 +150,7 @@ def test_raw_blob_decodes(golden_pbf):
     assert render_text(a) == render_text(b)
     ga = next(d for _, t, d in a if t == "OSMData")
     gb = next(d for _, t, d in b if t == "OSMData")
-    na, nb = ga.groups[0].nodes, gb.groups[0].nodes
+    na, nb = ga.groups[0].cols, gb.groups[0].cols
     assert list(na["id"]) == list(nb["id"])
     assert list(na["lat"]) == list(nb["lat"])
     assert list(na["tag_vals"]) == list(nb["tag_vals"])
@@ -181,7 +186,7 @@ def test_plain_nodes_parity_with_dense():
     )
     dense = decode_primitive_block(build_dense_nodes_block(**kw))
     plain = decode_primitive_block(build_plain_nodes_block(**kw))
-    gd, gp = dense.groups[0].nodes, plain.groups[0].nodes
+    gd, gp = dense.groups[0].cols, plain.groups[0].cols
     assert gp["n"] == gd["n"] == 3
     for col in ("id", "lat", "lon", "tag_offsets", "tag_keys", "tag_vals"):
         assert list(gp[col]) == list(gd[col]), col
@@ -190,7 +195,7 @@ def test_plain_nodes_parity_with_dense():
     # negative-coordinate zigzag and framing also survive a file round trip
     from osmspark.pbf.source import decode_page
     blocks = decode_page(build_file([build_plain_nodes_block(**kw)]))
-    assert blocks[1][2].groups[0].nodes["n"] == 3
+    assert blocks[1][2].groups[0].cols["n"] == 3
 
 
 def test_plain_nodes_without_info():
@@ -201,7 +206,7 @@ def test_plain_nodes_without_info():
     blk = decode_primitive_block(build_plain_nodes_block(
         ids=np.array([5], dtype=np.int64),
         lats_deg=np.array([0.5]), lons_deg=np.array([-0.5])))
-    g = blk.groups[0].nodes
+    g = blk.groups[0].cols
     assert g["version"] is None and g["user"] is None
     assert g["lat"][0] == 0.5 and g["lon"][0] == -0.5
 

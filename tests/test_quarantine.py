@@ -5,10 +5,13 @@ pages decode fully."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from osmspark import model
 from osmspark.pages import pages_pandas
+from osmspark.pbf.encode import (
+    _len_field, _packed_signed_field, _packed_unsigned_field, _varint_field, build_file)
 from osmspark.pbf.source import (
     decode_page_quarantine,
     nodes_from_pages,
@@ -41,6 +44,37 @@ def test_decode_page_quarantine_local():
     # clean page: no errors, identical blocks to decode_page
     blocks, errors = decode_page_quarantine(pdf.loc[2, "html"])
     assert errors == [] and len(blocks) == 2
+
+
+def _block(*group_msgs: bytes) -> bytes:
+    """PrimitiveBlock: a 2-entry string table, then one group per message."""
+    return (_len_field(1, _len_field(1, b"") + _len_field(1, b"k"))
+            + b"".join(_len_field(2, m) for m in group_msgs))
+
+
+_WAY = _len_field(3, _varint_field(1, 7) + _packed_signed_field(8, np.array([1, 1])))
+
+
+@pytest.mark.parametrize("block", [
+    pytest.param(_block(_WAY) + b"\x88", id="truncated-varint"),
+    pytest.param(_block(_WAY) + b"\x12\x64ab", id="field-past-buffer"),
+    pytest.param(_block(_WAY) + b"\x13", id="wire-type-3"),
+    pytest.param(_block(_len_field(3, _varint_field(1, 7)
+                                   + _packed_unsigned_field(2, np.array([5]))
+                                   + _packed_unsigned_field(3, np.array([1])))),
+                 id="string-index"),
+    pytest.param(_block(_len_field(4, _varint_field(1, 9)
+                                   + _packed_unsigned_field(8, np.array([1]))
+                                   + _packed_signed_field(9, np.array([3]))
+                                   + _packed_unsigned_field(10, np.array([3])))),
+                 id="member-type"),
+])
+def test_malformed_block_is_one_decode_record(block):
+    """Adversarial bytes inside a data blob become one typed
+    (block_idx, "decode", message) record, not an escaping exception."""
+    blocks, errors = decode_page_quarantine(build_file([block]))
+    assert [b[1] for b in blocks] == ["OSMHeader"]
+    assert len(errors) == 1 and errors[0][:2] == (1, "decode")
 
 
 def test_quarantine_job_succeeds_others_decode(spark):

@@ -16,7 +16,7 @@ def xml_doc(golden_xml):
 def pbf_doc(golden_pbf):
     blocks = split_file_blocks(golden_pbf)
     blk = decode_primitive_block(inflate_blob(blocks[1][1]))
-    g = blk.groups[0].nodes
+    g = blk.groups[0].cols
     o = g["tag_offsets"]
     nodes = [
         {
@@ -33,8 +33,13 @@ def pbf_doc(golden_pbf):
         }
         for i in range(g["n"])
     ]
-    w = blk.groups[1].ways[0]
-    r = blk.groups[2].relations[0]
+    # the way and relation groups hold one entity each: their flat
+    # columns are that entity's lists, scalar columns hold one value
+    lists = ("tag_keys", "tag_vals", "refs", "member_refs", "member_roles",
+             "member_types")
+    w, r = ({k: v if k in lists else v[0] for k, v in grp.cols.items()
+             if k != "n" and v is not None}
+            for grp in blk.groups[1:3])
     return {"nodes": nodes, "way": w, "relation": r}
 
 
