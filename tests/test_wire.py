@@ -5,7 +5,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as hs
 
-from osmspark.pbf.encode import _len_field, _varint_field, encode_packed_varints, zigzag_encode
+from osmspark.pbf.encode import (
+    _len_field, _string_table, _varint_field, encode_packed_varints, zigzag_encode)
 from osmspark.pbf.wire import (
     decode_packed_sint64,
     decode_packed_varints,
@@ -63,7 +64,7 @@ def test_empty_packed():
 
 
 # --------------------------------------------------------------------------
-# way/relation groups: decoded values equal what the builders encoded
+# way/relation groups: decoded values equal the values encoded
 # --------------------------------------------------------------------------
 
 ENCODINGS = ("packed", "unpacked", "split", "mixed")
@@ -111,7 +112,7 @@ def _decode_groups(strings, ways=(), relations=()):
     """A PrimitiveBlock with a ways group and/or a relations group."""
     from osmspark.pbf.decode import decode_primitive_block
 
-    block = _len_field(1, b"".join(_len_field(1, s.encode()) for s in strings))
+    block = _len_field(1, _string_table(strings))
     for tag, msgs in ((3, ways), (4, relations)):
         if msgs:
             block += _len_field(2, b"".join(_len_field(tag, m) for m in msgs))
