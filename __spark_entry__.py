@@ -4646,7 +4646,9 @@ def oracle_sql() -> dict[str, str]:
         # 1-based inclusive list slices mirror slice(arr, start, len)
         "chunks_12_6": """
           WITH t AS (
-            SELECT doc_id, string_split_regex(trim(text), ' +') AS arr
+            SELECT doc_id,
+                   list_filter(string_split_regex(trim(text), ' +'),
+                               w -> w <> '') AS arr
             FROM documents),
           k AS (
             SELECT doc_id, arr,
@@ -4660,9 +4662,9 @@ def oracle_sql() -> dict[str, str]:
                  CAST(chunk_idx * 6 AS BIGINT) AS start_tok,
                  CAST(len(arr[chunk_idx * 6 + 1 : chunk_idx * 6 + 12])
                       AS BIGINT) AS n_chunk_tokens,
-                 array_to_string(arr[chunk_idx * 6 + 1
-                                     : chunk_idx * 6 + 12], ' ')
-                   AS text_chunk
+                 coalesce(array_to_string(arr[chunk_idx * 6 + 1
+                                              : chunk_idx * 6 + 12], ' '),
+                          '') AS text_chunk
           FROM c ORDER BY doc_id, chunk_idx
         """,
         # per-(trip, fence) lead-window formulation vs the array path

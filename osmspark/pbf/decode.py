@@ -253,6 +253,9 @@ def inflate_blob(blob_buf: bytes) -> bytes:
     ``tests/test_pbf_golden.py::test_raw_blob_decodes``)."""
     blob = collect_one(blob_buf, _BLOB)
     raw_size = blob["raw_size"] or 0
+    if raw_size > MAX_ELEMENT_SIZE:
+        raise PbfError(f"raw_size {raw_size} exceeds maximum size {MAX_ELEMENT_SIZE}",
+                       kind="inflate")
     if blob["zlib_data"] is None:
         if blob["raw"] is not None:
             raw = bytes(blob["raw"])
@@ -262,10 +265,19 @@ def inflate_blob(blob_buf: bytes) -> bytes:
                     kind="inflate")
             return raw
         raise PbfError("Blob has no payload", kind="inflate")
+    # the format caps the inflated blob at 32 MiB too; stop one byte past
+    # it so a small compressed payload cannot inflate without bound
+    inflater = zlib.decompressobj()
     try:
-        out = zlib.decompress(blob["zlib_data"])
+        out = inflater.decompress(blob["zlib_data"], MAX_ELEMENT_SIZE + 1)
     except zlib.error as e:
         raise PbfError(f"zlib inflate failed: {e}", kind="inflate") from e
+    if len(out) > MAX_ELEMENT_SIZE:
+        raise PbfError(f"inflated blob exceeds maximum size {MAX_ELEMENT_SIZE}",
+                       kind="inflate")
+    if not inflater.eof:
+        raise PbfError("zlib inflate failed: incomplete or truncated stream",
+                       kind="inflate")
     if raw_size and len(out) != raw_size:
         raise PbfError(f"inflated size {len(out)} != raw_size {raw_size}",
                        kind="inflate")

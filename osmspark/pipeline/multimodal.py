@@ -3,8 +3,8 @@
 Images/audio/video ride as ``binary`` columns with a metadata struct —
 exactly how a 100 TB multimodal training table stores them (payload stays
 columnar, codecs run executor-side in Arrow-batched UDFs). The decode
-kernels here are STUBS behind import guards (no PIL/ffmpeg in this
-container — BASELINE "stub the decode step, make the Spark-side plumbing
+kernels here are STUBS (real media codecs such as PIL/ffmpeg are out
+of scope — BASELINE "stub the decode step, make the Spark-side plumbing
 real"): the deterministic fake decoder derives width/height/duration and a
 feature vector from the payload bytes, so partitioning, schema, UDF
 signatures and batch shapes are all real and tested.
@@ -37,16 +37,6 @@ META_OUT_SCHEMA = T.StructType(MEDIA_SCHEMA.fields + [
 ])
 
 _FEATURE_DIM = 16
-
-
-def _real_image_decode(payload: bytes):
-    """Real decoder — requires PIL, absent in this container."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "real image decode needs PIL; use the deterministic stub") from e
-    raise NotImplementedError("real decode path not wired in this sandbox")
 
 
 def _stub_dims(payload: bytes, kind: str):

@@ -130,7 +130,9 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 128,
             "stride > chunk_tokens would leave uncovered token gaps "
             "(the every-token-covered invariant needs stride <= "
             "chunk_tokens)")
-    toks = F.split(F.trim(F.col(text_col)), " +")
+    # an empty or all-space text splits to [""]: drop it so the
+    # document is one empty chunk, not a phantom one-token chunk
+    toks = F.array_remove(F.split(F.trim(F.col(text_col)), " +"), "")
     n = F.size(toks)
     extra = F.greatest(F.lit(0), n - F.lit(chunk_tokens))
     # K = ceil(extra / stride) as exact integer arithmetic

@@ -71,7 +71,7 @@ def test_chunk_documents_matches_python(spark):
     from osmspark.pipeline.packing import chunk_documents
     docs = [(0, " ".join(f"t{i}" for i in range(20))),   # 20 toks
             (1, "a b c"),                                # fits in one
-            (2, ""),                                     # empty → ['']
+            (2, ""),                                     # empty → one empty chunk
             (3, " ".join(f"u{i}" for i in range(8)))]    # exact chunk
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {(int(r.doc_id), int(r.chunk_idx)):
@@ -80,8 +80,7 @@ def test_chunk_documents_matches_python(spark):
                                     stride=4).collect()}
     exp = {}
     for d, t in docs:
-        toks = t.strip().split(" ") if True else []
-        toks = t.strip().split(" ")  # '' -> ['']
+        toks = t.split()
         n = len(toks)
         kk = (max(0, n - 8) + 3) // 4
         for i in range(kk + 1):

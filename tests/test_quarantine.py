@@ -5,14 +5,21 @@ pages decode fully."""
 
 from __future__ import annotations
 
+import zlib
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as hs
 
 from osmspark import model
-from osmspark.pages import pages_pandas
+from osmspark.pages import golden_pbf_bytes, many_nodes_pbf_bytes, pages_pandas
+from osmspark.pbf.decode import MAX_ELEMENT_SIZE, PbfError
 from osmspark.pbf.encode import (
-    _len_field, _packed_signed_field, _packed_unsigned_field, _varint_field, build_file)
+    _len_field, _packed_signed_field, _packed_unsigned_field, _varint_field, build_file,
+    recode_file_raw)
 from osmspark.pbf.source import (
+    decode_page,
     decode_page_quarantine,
     nodes_from_pages,
     quarantine_from_pages,
@@ -75,6 +82,67 @@ def test_malformed_block_is_one_decode_record(block):
     blocks, errors = decode_page_quarantine(build_file([block]))
     assert [b[1] for b in blocks] == ["OSMHeader"]
     assert len(errors) == 1 and errors[0][:2] == (1, "decode")
+
+
+def _with_data_blob(blob: bytes) -> bytes:
+    """A header-only file followed by one OSMData frame around ``blob``."""
+    header = _len_field(1, b"OSMData") + _varint_field(3, len(blob))
+    return build_file([]) + len(header).to_bytes(4, "big") + header + blob
+
+
+@pytest.mark.parametrize("make_page", [
+    # 32 KiB of zlib that inflates past the 32 MiB blob cap
+    pytest.param(lambda: build_file([_len_field(1, _len_field(1, b""))
+                                     + _len_field(15, b"\0" * (MAX_ELEMENT_SIZE + 1024))]),
+                 id="inflates-past-cap"),
+    pytest.param(lambda: _with_data_blob(_varint_field(2, MAX_ELEMENT_SIZE + 1)
+                                         + _len_field(3, zlib.compress(b""))),
+                 id="raw-size-past-cap"),
+    pytest.param(lambda: _with_data_blob(_len_field(3, zlib.compress(b"\0" * 64)[:-4])),
+                 id="truncated-zlib"),
+])
+def test_bad_inflate_is_one_inflate_record(make_page):
+    page = make_page()
+    with pytest.raises(PbfError) as e:
+        decode_page(page)
+    assert e.value.kind == "inflate"
+    blocks, errors = decode_page_quarantine(page)
+    assert [b[1] for b in blocks] == ["OSMHeader"]
+    assert len(errors) == 1 and errors[0][:2] == (1, "inflate")
+
+
+# the raw copies put the mutated bytes straight in front of the protobuf
+# decoder instead of behind a zlib checksum
+_FUZZ_SEEDS = [golden_pbf_bytes(), many_nodes_pbf_bytes()]
+_FUZZ_SEEDS += [recode_file_raw(b) for b in _FUZZ_SEEDS]
+
+
+@hs.composite
+def _mutated_page(draw) -> bytes:
+    page = bytearray(draw(hs.sampled_from(_FUZZ_SEEDS)))
+    how = draw(hs.sampled_from(["flip", "truncate", "set"]))
+    if how == "flip":
+        bits = hs.lists(hs.integers(0, 8 * len(page) - 1), min_size=1, max_size=4, unique=True)
+        for bit in draw(bits):
+            page[bit // 8] ^= 1 << (bit % 8)
+    elif how == "truncate":
+        del page[draw(hs.integers(0, len(page) - 1)):]
+    else:
+        page[draw(hs.integers(0, len(page) - 1))] = draw(hs.sampled_from([0x00, 0x7F, 0x80, 0xFF]))
+    return bytes(page)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_mutated_page())
+def test_mutated_page_fails_only_with_pbf_error(page):
+    """Bit flips, truncation and boundary bytes anywhere in a real page:
+    raise mode fails with PbfError or not at all, and quarantine mode
+    never raises."""
+    try:
+        decode_page(page)
+    except PbfError:
+        pass
+    decode_page_quarantine(page)
 
 
 def test_quarantine_job_succeeds_others_decode(spark):
