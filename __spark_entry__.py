@@ -45,7 +45,7 @@ _EVENT_POINTS_SQL = """
 
 def _s2_tiles_oracle_sql(level: int) -> str:
     """DuckDB oracle for S2 tile aggregation — the full published S2
-    encode (osmspark/grid/s2.py: sphere → cube face → quadratic ST →
+    encode (osmspark/grid/s2_sql.py: sphere → cube face → quadratic ST →
     leaf (i,j) → 30-round Hilbert walk → cell id) re-expressed in ANSI
     SQL with a recursive CTE for the Hilbert iteration. Bit-parity notes:
     sqrt/divide are IEEE-exact in both engines; sin/cos may differ in the
@@ -257,10 +257,10 @@ def _simhash_oracle_sql(max_hamming: int) -> str:
     Hamming join — so a hash-exact match also proves the engine's
     pigeonhole chunk bucketing is COMPLETE at this threshold.
 
-    Degenerate-doc convention (matches _shingle_hashes): an empty /
+    Degenerate-doc convention (dedup._batch_gram_hashes): an empty /
     whitespace-only doc gets ONE sentinel hash 0 (not FNV of the ''
-    token) — the UNION ALL branch reproduces the engine's zeros(1)
-    sentinel so such docs sign to 0 on both sides."""
+    token) — the UNION ALL branch reproduces that sentinel so such docs
+    sign to 0 on both sides."""
     fnv = _FNV_LIST_SQL.format(col="tok")
     return f"""
       WITH toks AS (
@@ -300,10 +300,10 @@ def _minhash_lsh_oracle_sql(bands: int = 16, n_hashes: int = 64,
     (string_agg key), so the engine's xxhash64 band hash is verified
     semantically: same buckets ⟺ same slices (collisions aside).
 
-    Degenerate-doc convention (matches _shingle_hashes): a doc with no
+    Degenerate-doc convention (dedup._batch_gram_hashes): a doc with no
     3-gram shingle (empty, or < 3 tokens) gets ONE sentinel hash 0
-    instead of being dropped — the UNION ALL branch reproduces the
-    engine's zeros(1) sentinel, so two such docs share identical
+    instead of being dropped — the UNION ALL branch reproduces that
+    sentinel, so two such docs share identical
     signatures and surface as candidates on both sides."""
     return f"""
       WITH {_minhash_band_ctes(bands, n_hashes, seed)}

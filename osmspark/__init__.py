@@ -7,7 +7,8 @@ idiomatic Spark engine:
 * ``osmspark.pbf``      — vectorized (NumPy/Arrow) OSM PBF blob decode
 * ``osmspark.xml``      — OSM XML decode to the same schemas (parity)
 * ``osmspark.pages``    — deterministic Common-Crawl-style input table
-* ``osmspark.grid``     — S2 cell ids + hex grid (H3 semantics) in NumPy
+* ``osmspark.grid``     — hex grid (H3 semantics), S2 and geohash cell ids
+  as Spark SQL expressions
 * ``osmspark.spatial``  — point-in-polygon join, kNN, tile aggregation
 * ``osmspark.pipeline`` — dedup / similarity / text-quality operators
 * ``osmspark.state``    — per-partition lineage + resume

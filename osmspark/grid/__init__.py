@@ -1,1 +1,1 @@
-from . import hexgrid, s2
+from . import hexgrid

@@ -27,13 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = [
-    "geohash_col",
-    "geohash_counts",
-    "geohash_decode",
-    "geohash_neighbors",
-    "geohash_kring_smooth",
-]
+__all__ = ["geohash_col", "geohash_counts", "geohash_kring_smooth"]
 
 _B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
@@ -47,19 +41,6 @@ def _spread_bits(x: Column) -> Column:
     x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
     x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(0x3333333333333333))
     x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(0x5555555555555555))
-    return x
-
-
-def _compact_bits(x: Column) -> Column:
-    """Inverse of :func:`_spread_bits`: bit 2i of x moves to bit i.
-
-    The standard Morton compaction magic numbers, 64-bit flavor."""
-    x = x.bitwiseAND(F.lit(0x5555555555555555))
-    x = x.bitwiseOR(F.shiftrightunsigned(x, 1)).bitwiseAND(F.lit(0x3333333333333333))
-    x = x.bitwiseOR(F.shiftrightunsigned(x, 2)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-    x = x.bitwiseOR(F.shiftrightunsigned(x, 4)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-    x = x.bitwiseOR(F.shiftrightunsigned(x, 8)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-    x = x.bitwiseOR(F.shiftrightunsigned(x, 16)).bitwiseAND(F.lit(0x00000000FFFFFFFF))
     return x
 
 
@@ -84,25 +65,6 @@ def _gh_from_q(lon_q: Column, lat_q: Column, precision: int) -> Column:
     return _gh_from_morton(morton, precision)
 
 
-def _q_from_gh(gh: Column, precision: int) -> tuple[Column, Column]:
-    """(lon_q, lat_q) quantized cell coordinates from a geohash string.
-
-    Exact inverse of :func:`_gh_from_q`: base32 chars → Morton code →
-    compact the even/odd bit planes back out. Pure codegen integer ops
-    — ``position`` over the 32-char alphabet plus shift/mask rounds."""
-    nbits, _, _ = _check_precision(precision)
-    morton = _morton_from_gh(gh, precision)
-    if nbits % 2 == 1:
-        # encode used: morton = spread(lon) | spread(lat)<<1
-        lon_q = _compact_bits(morton)
-        lat_q = _compact_bits(F.shiftrightunsigned(morton, 1))
-    else:
-        # encode used: morton = spread(lon)<<1 | spread(lat)
-        lon_q = _compact_bits(F.shiftrightunsigned(morton, 1))
-        lat_q = _compact_bits(morton)
-    return lon_q, lat_q
-
-
 def geohash_col(lat: Column, lon: Column, precision: int = 7) -> Column:
     """Base32 geohash string of ``precision`` chars, pure SQL."""
     nbits, nlon, nlat = _check_precision(precision)
@@ -115,28 +77,6 @@ def geohash_col(lat: Column, lon: Column, precision: int = 7) -> Column:
     lon_q = F.greatest(F.lit(0), lon_q)
     lat_q = F.greatest(F.lit(0), lat_q)
     return _gh_from_q(lon_q, lat_q, precision)
-
-
-def geohash_decode(df: DataFrame, precision: int, col: str = "geohash",
-                   ) -> DataFrame:
-    """Decode geohash strings back to cell bounds + center, pure SQL.
-
-    Adds ``lon_min/lat_min/lon_max/lat_max/lon_c/lat_c`` double columns.
-    The cell edges are exact doubles (cell widths 360/2^nlon, 180/2^nlat
-    are dyadic·45, so the products round-trip bit-exactly), making the
-    output safe to hash-compare across engines."""
-    _, nlon, nlat = _check_precision(precision)
-    lon_q, lat_q = _q_from_gh(F.col(col), precision)
-    lon_w = 360.0 / float(1 << nlon)
-    lat_w = 180.0 / float(1 << nlat)
-    lon_min = lon_q * F.lit(lon_w) - F.lit(180.0)
-    lat_min = lat_q * F.lit(lat_w) - F.lit(90.0)
-    return (df.withColumn("lon_min", lon_min)
-            .withColumn("lat_min", lat_min)
-            .withColumn("lon_max", lon_min + F.lit(lon_w))
-            .withColumn("lat_max", lat_min + F.lit(lat_w))
-            .withColumn("lon_c", lon_min + F.lit(lon_w / 2.0))
-            .withColumn("lat_c", lat_min + F.lit(lat_w / 2.0)))
 
 
 def _morton_from_gh(gh: Column, precision: int) -> Column:
@@ -223,21 +163,6 @@ def _morton_neighbor_cands(m: Column, precision: int,
                 nb = F.when(lat_plane != F.lit(0), nb)
             cands.append(nb)
     return cands
-
-
-def geohash_neighbors(gh: Column, precision: int,
-                      include_self: bool = False) -> Column:
-    """Array of the ≤8 adjacent same-precision geohashes, pure SQL.
-
-    base32 → Morton code, then ±1 per axis *in Morton space* (masked
-    add/subtract — see :func:`_axis_step`), then re-encode. Longitude
-    wraps across the antimeridian (mod 2^nlon); latitude clamps — cells
-    on the pole rows have no north/south neighbor and simply emit fewer
-    entries, so downstream focal sums stay correct at the poles."""
-    m = _morton_from_gh(gh, precision)
-    cands = [F.when(c.isNotNull(), _gh_from_morton(c, precision))
-             for c in _morton_neighbor_cands(m, precision, include_self)]
-    return F.filter(F.array(*cands), lambda x: x.isNotNull())
 
 
 def geohash_kring_smooth(cells: DataFrame, precision: int,

@@ -26,8 +26,8 @@ _OFFSET = 1 << 29
 _SQRT3 = np.sqrt(3.0)
 _APERTURE = np.sqrt(7.0)
 
-__all__ = ["edge_deg", "cell_id", "cell_to_center", "parent", "k_ring",
-           "resolution_of", "qr_of", "pack", "neighbors"]
+__all__ = ["edge_deg", "cell_id", "cell_to_center", "k_ring",
+           "resolution_of", "qr_of", "pack"]
 
 
 def edge_deg(res: int) -> float:
@@ -97,17 +97,6 @@ def cell_to_center(ids: np.ndarray):
     return lat, lon
 
 
-def parent(ids: np.ndarray, res: int) -> np.ndarray:
-    """Ancestor at coarser ``res``: the hex containing this cell's center.
-
-    Like real H3, hex hierarchies are center-containment (a child can
-    straddle its parent's boundary) — deterministic and consistent:
-    parent(cell(p, r), r-1) == cell(center(cell(p, r)), r-1).
-    """
-    lat, lon = cell_to_center(ids)
-    return cell_id(lat, lon, res)
-
-
 def k_ring(ids: np.ndarray, k: int) -> np.ndarray:
     """All cells within hex-distance k → (n, ring_size) int64 matrix.
 
@@ -126,20 +115,3 @@ def k_ring(ids: np.ndarray, k: int) -> np.ndarray:
     dr_arr = np.array(dr_list, dtype=np.int64)
     return pack(res[:, None], q[:, None] + dq_arr[None, :],
                 r[:, None] + dr_arr[None, :])
-
-
-def neighbors(ids: np.ndarray) -> np.ndarray:
-    """The 6 adjacent hexes (k=1 ring minus self)."""
-    ring = k_ring(ids, 1)
-    ids = np.asarray(ids, dtype=np.int64)
-    mask = ring != ids[:, None]
-    return ring[mask].reshape(len(ids), 6)
-
-
-def hex_distance(id_a: np.ndarray, id_b: np.ndarray) -> np.ndarray:
-    """Hex grid distance between same-resolution cells."""
-    qa, ra = qr_of(id_a)
-    qb, rb = qr_of(id_b)
-    dq = qa - qb
-    dr = ra - rb
-    return (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2

@@ -19,9 +19,7 @@ from pyspark.sql import Column, functions as F
 
 from . import hexgrid
 
-__all__ = ["hex_qr_cols", "hex_pack_col", "hex_cell_col",
-           "hex_cell_col_multires", "hex_center_cols", "hex_parent_col",
-           "hex_kring_array_col", "hex_kring_explode"]
+__all__ = ["hex_qr_cols", "hex_pack_col", "hex_cell_col", "hex_center_cols"]
 
 _OFFSET = hexgrid._OFFSET
 _SQRT3_3 = float(hexgrid._SQRT3) / 3.0  # identical double to the numpy constant
@@ -73,51 +71,6 @@ def hex_cell_col(lat: Column, lon: Column, res: int) -> Column:
     return hex_pack_col(res, q, r)
 
 
-def hex_cell_col_multires(lat: Column, lon: Column, res_col: Column,
-                          res_values: list[int]) -> Column:
-    """Cell id where the resolution is a per-row COLUMN (restricted to
-    ``res_values``) — ONE encode expression serves a mixed-resolution
-    scan. Edge sizes resolve through a literal CASE chain carrying the
-    exact ``edge_deg`` float64 constants (a pow() here could differ in
-    the last ulp from NumPy and flip a cube-round), and the res bits
-    pack via a wrapping shift — ids stay bit-identical to the fixed-res
-    ``hex_cell_col`` for every value in ``res_values``.
-
-    Why this is kept: a single-scan multi-resolution encode — explode a
-    G-element literal res array, then encode once with this column-res
-    form — stays in codegen where ``explode(array(<G encode
-    expressions>))`` fell out of it (160M rows: minutes instead of
-    seconds). The final kNN design went a different way (per-level
-    fixed-res ``hex_cell_col`` union branches, spatial/knn.py), so no
-    production path calls this today; it remains the measured
-    alternative for engines that want one scan instead of ≤G, pinned
-    bit-identical to ``hex_cell_col`` by its test.
-    """
-    size = None
-    for rv in res_values:
-        branch = F.lit(hexgrid.edge_deg(rv))
-        size = (F.when(res_col == rv, branch) if size is None
-                else size.when(res_col == rv, branch))
-    qf = (F.lit(_SQRT3_3) * lon - lat / F.lit(3.0)) / size
-    rf = (F.lit(2.0 / 3.0) * lat) / size
-    sf = -qf - rf
-    q = _rint(qf)
-    r = _rint(rf)
-    s = _rint(sf)
-    dq = F.abs(q - qf)
-    dr = F.abs(r - rf)
-    ds = F.abs(s - sf)
-    fix_q = (dq > dr) & (dq > ds)
-    fix_r = (~fix_q) & (dr > ds)
-    q2 = F.when(fix_q, -r - s).otherwise(q)
-    r2 = F.when(fix_r, -q - s).otherwise(r)
-    # shiftleft wraps for res ≥ 8 exactly like the numpy int64 pack;
-    # fields are disjoint so + == | (matches hex_pack_col)
-    return (F.shiftleft(res_col.cast("long"), 60)
-            + (q2.cast("long") + F.lit(_OFFSET)) * F.lit(1 << 30)
-            + (r2.cast("long") + F.lit(_OFFSET)))
-
-
 def hex_center_cols(cell: Column) -> tuple[Column, Column]:
     """Cell id → (lat, lon) hex-center Columns — mirrors
     hexgrid.cell_to_center op-for-op: per-res edge sizes resolve through
@@ -137,60 +90,3 @@ def hex_center_cols(cell: Column) -> tuple[Column, Column]:
     lon = size * F.lit(float(hexgrid._SQRT3)) * (q + r / F.lit(2.0))
     lat = size * F.lit(1.5) * r
     return lat, lon
-
-
-def hex_parent_col(cell: Column, parent_res: int) -> Column:
-    """Ancestor cell id at ``parent_res``, pure SQL — center containment
-    exactly like hexgrid.parent (decode center, re-encode coarser), so
-    rollups never leave whole-stage codegen. == hexgrid.parent bit-for-
-    bit (pinned by tests/test_grid.py).
-
-    PLAN-SIZE CAVEAT: this single-Column form inlines the center CASE
-    trees into every reference inside the encode — fine in a one-off
-    select, but in a pipeline stage the Catalyst substitution cost grows
-    multiplicatively (s2_sql.py:40-52 landmine). Production rollups
-    stage the centers as columns first (see spatial/tiles.py rollup)."""
-    lat, lon = hex_center_cols(cell)
-    return hex_cell_col(lat, lon, parent_res)
-
-
-def _kring_offsets(k: int) -> list[tuple[int, int]]:
-    return [(dq, dr)
-            for dq in range(-k, k + 1)
-            for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1)]
-
-
-def hex_kring_array_col(lat: Column, lon: Column, res: int, k: int) -> Column:
-    """Array of all 3k(k+1)+1 cell ids within hex-distance k — pure SQL.
-
-    WARNING: duplicates the cube-round expression tree per element —
-    fine for k ≤ 2; for larger rings use ``hex_kring_explode`` (the array
-    form sent a ring-9 plan into minutes of Catalyst analysis).
-    """
-    q, r = hex_qr_cols(lat, lon, res)
-    cells = []
-    for dq, dr in _kring_offsets(k):
-        cells.append(hex_pack_col(res, q + F.lit(float(dq)),
-                                  r + F.lit(float(dr))))
-    return F.array(*cells)
-
-
-def hex_kring_explode(df, lat_col: str, lon_col: str, res: int, k: int,
-                      out: str = "cell"):
-    """Explode each row to its 3k(k+1)+1 k-ring cells — pure SQL, O(plan)
-    independent of k: (q, r) are projected once per row, the ring is a
-    literal offset array exploded after, and the pack runs post-explode.
-
-    Used on the *small* (query) side of the kNN candidate join, so even
-    the k-ring expansion never leaves the JVM.
-    """
-    q, r = hex_qr_cols(F.col(lat_col), F.col(lon_col), res)
-    off = F.array(*[
-        F.struct(F.lit(float(dq)).alias("dq"), F.lit(float(dr)).alias("dr"))
-        for dq, dr in _kring_offsets(k)])
-    return (df.withColumn("_q", q).withColumn("_r", r)
-            .withColumn("_off", F.explode(off))
-            .withColumn(out, hex_pack_col(
-                res, F.col("_q") + F.col("_off.dq"),
-                F.col("_r") + F.col("_off.dr")))
-            .drop("_q", "_r", "_off"))

@@ -1,11 +1,12 @@
 """S2 cell-id encode as pure Spark SQL expressions (JVM-side codegen).
 
-Same algorithm as :mod:`osmspark.grid.s2` (sphere → cube face → quadratic
-ST → leaf (i,j) → Hilbert walk → 64-bit cell id) expressed as Column
-expressions, so the S2 tiling hot path — like the hex path in
-:mod:`hexgrid_sql` — runs inside whole-stage codegen with NO Python
-worker or Arrow hop. The DuckDB oracle (`__spark_entry__._s2_tiles_oracle_sql`)
-re-states the identical arithmetic (values are bit-identical either way).
+The published S2 design (sphere → cube face → quadratic ST → leaf (i,j)
+→ Hilbert walk → 64-bit cell id of 3 face bits, 2·level position bits
+and one trailing '1' sentinel) expressed as Column expressions, so the
+S2 tiling hot path — like the hex path in :mod:`hexgrid_sql` — runs
+inside whole-stage codegen with NO Python worker or Arrow hop. The
+DuckDB oracle (`__spark_entry__._s2_tiles_oracle_sql`) re-states the
+identical arithmetic (values are bit-identical either way).
 
 Hilbert walk, r2 → r3 redesign. The r2 version batched the 30-level
 orientation recursion into 8 table-lookup rounds of
@@ -16,8 +17,8 @@ seconds of interpreted warm-up (and the per-round ANSI bounds machinery
 kept steady-state ~5x slower than the hex path).
 
 This version packs each 16-entry traversal table (4 orientations x 4
-(i,j) sub-cells, 2-bit entries — s2.py:23-35) into ONE 32-bit integer
-literal and looks entries up with a shift-and-mask::
+(i,j) sub-cells, 2-bit entries — ``_IJ_TO_POS`` below) into ONE 32-bit
+integer literal and looks entries up with a shift-and-mask::
 
     idx      = (orient << 2) | (i_bit << 1) | j_bit      # 0..15
     sub_pos  = (0x361e9cb4 >> (idx*2)) & 3               # _IJ_TO_POS
@@ -50,29 +51,33 @@ BENCH/host_calibration.json provenance and VERDICT r2):
   O(levels^2) and the encode is safe under joins/filters on ``cell``.
 
 Float semantics: sin/cos/sqrt run on java.lang.Math here vs NumPy's libm
-in ``s2.py`` — both claim ≤ 1 ulp; a disagreement only matters for a
-point within ~1e-16 of a cell boundary (probability ~1e-7 per point,
-absent on the pinned test data — the same caveat the DuckDB oracle
-documents).
+in the tests' NumPy oracle — both claim ≤ 1 ulp; a disagreement only
+matters for a point within ~1e-16 of a cell boundary (probability
+~1e-7 per point, absent on the pinned test data — the same caveat the
+DuckDB oracle documents).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from . import s2 as _s2
-
 __all__ = ["with_s2_cell_sql", "s2_parent_col"]
 
-_MAX_LEVEL = _s2.MAX_LEVEL
+_MAX_LEVEL = 30
+
+# Hilbert sub-cell traversal tables (public S2 constants), indexed
+# [orientation][(i_bit << 1) | j_bit]; orientation bits: 1 = swap i/j,
+# 2 = invert both.
+_IJ_TO_POS = ((0, 1, 3, 2), (0, 3, 1, 2), (2, 3, 1, 0), (2, 1, 3, 0))
+_POS_TO_ORIENTATION = (1, 0, 0, 3)
 
 
 def s2_parent_col(cell: Column, level: int) -> Column:
     """Ancestor at ``level``, pure SQL: the standard S2 lsb arithmetic
     (mask off finer position bits, set the level sentinel). uint64 bit
-    ops == int64 bit ops on the same bit pattern, so this matches
-    s2.parent exactly (pinned by tests/test_grid.py)."""
-    lsb = int(_s2.lsb_for_level(level))
+    ops == int64 bit ops on the same bit pattern, so this matches the
+    uint64 arithmetic exactly (pinned by tests/test_grid.py)."""
+    lsb = 1 << (2 * (_MAX_LEVEL - level))
     mask = ~(lsb - 1) & ((1 << 64) - 1)
     if mask >= 1 << 63:
         mask -= 1 << 64
@@ -87,8 +92,8 @@ def _pack_table() -> int:
     lit = 0
     for o in range(4):
         for ij in range(4):
-            sub = int(_s2._IJ_TO_POS[o, ij])
-            nxt = o ^ int(_s2._POS_TO_ORIENTATION[sub])
+            sub = _IJ_TO_POS[o][ij]
+            nxt = o ^ _POS_TO_ORIENTATION[sub]
             lit |= ((sub << 2) | nxt) << (((o << 2) | ij) * 4)
     return lit
 
@@ -106,8 +111,8 @@ def with_s2_cell_sql(df: DataFrame, level: int, lat_col: str = "lat",
                      lon_col: str = "lon", out: str = "cell") -> DataFrame:
     """Append the S2 cell id at ``level`` as a pure-SQL column.
 
-    Bit-identical to ``s2.cell_id(...).astype(int64)`` (pinned by
-    tests/test_grid.py parity test); returns the input columns + ``out``.
+    Bit-identical to the NumPy S2 encoder the tests keep as its oracle
+    (tests/test_grid.py parity test); returns the input columns + ``out``.
     """
     if not 0 <= level <= _MAX_LEVEL:
         raise ValueError(f"level must be in [0, {_MAX_LEVEL}]")
@@ -190,8 +195,8 @@ def with_s2_cell_sql(df: DataFrame, level: int, lat_col: str = "lat",
     # [3b face][2·level bits pos][1 sentinel][zeros]: _pos holds the top
     # 2*level bits; placing them at bit 2*(30-level)+1 and setting the
     # sentinel lsb reproduces exactly (leaf & -lsb) | lsb of the full
-    # 30-level pack (s2.parent semantics), bit-identical to
-    # s2.cell_id(...) at this level.
+    # 30-level pack (the S2 parent rule), bit-identical to the leaf
+    # id's ancestor at this level.
     lsb = 1 << (2 * (_MAX_LEVEL - level))
     cell = (F.shiftleft(F.col("_face").cast("long"), 61)
             .bitwiseOR(F.shiftleft(F.col("_pos"),

@@ -22,7 +22,6 @@ __all__ = [
     "PbfError",
     "read_varint",
     "read_field",
-    "iter_fields",
     "decode_packed_varints",
     "zigzag_decode",
     "decode_packed_sint64",
@@ -110,16 +109,6 @@ def read_field(mv: memoryview, pos: int):
     if wire_type != 2:
         value = int.from_bytes(value, "little")
     return key >> 3, wire_type, value, start, end
-
-
-def iter_fields(buf):
-    """Yield ``(field_no, wire_type, value)`` for a message buffer
-    (``value`` as in ``read_field``)."""
-    mv = memoryview(buf)
-    pos = 0
-    while pos < len(mv):
-        field_no, wire_type, value, _, pos = read_field(mv, pos)
-        yield field_no, wire_type, value
 
 
 def decode_packed_varints(buf) -> np.ndarray:

@@ -37,7 +37,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["hll_registers", "hll_merge", "hll_estimate", "hll_distinct",
+__all__ = ["hll_registers", "hll_estimate", "hll_distinct",
            "M_REGS", "RHO_MAX", "ALPHA_M2_P55"]
 
 M_REGS = 64          # registers; standard error 1.04/sqrt(64) ~ 13%
@@ -83,15 +83,6 @@ def hll_registers(df: DataFrame, group_cols: list[str], value_col: str,
                       _rho(F.shiftright(h, 6)).alias("rho"))
             .groupBy(*group_cols, "j")
             .agg(F.max("rho").alias("m")))
-
-
-def hll_merge(*reg_dfs: DataFrame) -> DataFrame:
-    """Union partial sketches (different partitions / days / clusters)
-    into one: register-wise max. Output schema == hll_registers."""
-    group_cols = [c for c in reg_dfs[0].columns if c not in ("j", "m")]
-    allr = reduce(lambda a, b: a.unionByName(b), reg_dfs)
-    return (allr.groupBy(*group_cols, "j")
-            .agg(F.max("m").alias("m")))
 
 
 def hll_estimate(regs: DataFrame, group_cols: list[str]) -> DataFrame:

@@ -158,22 +158,14 @@ def _spread_for_udf(df: DataFrame, spread: bool | None = None) -> DataFrame:
     return df
 
 
-def _shingle_hashes(text: str, n: int) -> np.ndarray:
-    """Distinct token n-grams → uint64 base hashes (FNV-1a, from-scratch)."""
-    toks = text.split()
-    grams = {" ".join(toks[i:i + n]) for i in range(max(0, len(toks) - n + 1))}
-    if not grams:
-        return np.zeros(1, dtype=np.uint64)
-    return _fnv1a_batch([g.encode("utf-8") for g in grams])
-
-
 def _batch_gram_hashes(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
     """Whole-batch shingle hashing: one FNV pass over every doc's distinct
     n-grams instead of one small pass per doc (the per-doc loop spent most
     of its time in Python call overhead, not hashing). Returns the flat
-    uint64 hash array plus per-doc gram counts; a doc with no grams
-    contributes one sentinel hash 0 — bit-identical to
-    ``_shingle_hashes``'s ``zeros(1)`` (the DuckDB oracles reproduce it)."""
+    uint64 hash array plus per-doc gram counts. A degenerate doc (fewer
+    than ``n`` tokens, so no n-gram) contributes exactly one gram whose
+    hash is the sentinel 0 — the DuckDB oracles reproduce that
+    convention."""
     grams_all: list[bytes] = []
     counts = np.empty(len(texts), dtype=np.int64)
     sentinel_idx: list[int] = []

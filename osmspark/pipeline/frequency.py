@@ -32,11 +32,9 @@ graft adds on the webtext axis, same as dedup/ANN/HLL/Bloom.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["cms_positions", "cms_build", "cms_merge", "cms_point_query"]
+__all__ = ["cms_positions", "cms_build", "cms_point_query"]
 
 
 def _cms_j(value: Column, r: int, width: int, seed: int) -> Column:
@@ -76,15 +74,6 @@ def cms_build(df: DataFrame, group_cols: list[str], value_col: str,
     return (rows.groupBy(*group_cols, F.col("_p.r").alias("r"),
                          F.col("_p.j").alias("j"))
             .agg(F.sum("_w").alias("c")))
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Counter-wise sum of partial sketches built with the SAME
-    (depth, width, seed). Output schema == cms_build."""
-    group_cols = [c for c in sketches[0].columns if c not in ("r", "j", "c")]
-    alls = reduce(lambda a, b: a.unionByName(b), sketches)
-    return (alls.groupBy(*group_cols, "r", "j")
-            .agg(F.sum("c").alias("c")))
 
 
 def cms_point_query(probes: DataFrame, sketch: DataFrame, value_col: str,

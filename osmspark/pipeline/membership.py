@@ -40,7 +40,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["bloom_positions", "bloom_build", "bloom_merge",
+__all__ = ["bloom_positions", "bloom_build",
            "bloom_might_contain", "bloom_stats"]
 
 
@@ -70,17 +70,6 @@ def bloom_build(df: DataFrame, group_cols: list[str], value_col: str,
                     F.explode(bloom_positions(F.col(value_col), m, k,
                                               seed)).alias("_pos")))
     return (rows.groupBy(*group_cols)
-            .agg(F.array_sort(F.collect_set("_pos")).alias("bits")))
-
-
-def bloom_merge(*filters: DataFrame) -> DataFrame:
-    """Bitwise-OR partial filters (different partitions / days /
-    clusters) built with the SAME (m, k, seed): union of set positions
-    per group. Output schema == bloom_build."""
-    group_cols = [c for c in filters[0].columns if c != "bits"]
-    allf = reduce(lambda a, b: a.unionByName(b), filters)
-    return (allf.select(*group_cols, F.explode("bits").alias("_pos"))
-            .groupBy(*group_cols)
             .agg(F.array_sort(F.collect_set("_pos")).alias("bits")))
 
 

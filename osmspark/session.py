@@ -65,12 +65,22 @@ def without_inferred_join_key_filters(spark: SparkSession):
                     spark.conf.set(key, _infer_saved)
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical memory, capped at 24g: a local-mode driver
+    heap sized past the host (the old literal 24g on a 15 GB host) lets
+    the JVM grow until the host kills it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(24 << 10, phys // 4 >> 20))}m"
+
+
 def get_spark(app: str = "osmspark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Session with AQE, Arrow, and sane local-mode memory settings.
 
     On a real cluster these configs ride through spark-submit unchanged;
     shuffle partitions default to cluster parallelism (AQE coalesces down).
+    The driver heap is ``OSMSPARK_DRIVER_MEM`` when set (a deployment
+    setting), else a quarter of physical memory capped at 24g.
     """
     master = master or os.environ.get("OSMSPARK_MASTER", "local[*]")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -92,7 +102,8 @@ def get_spark(app: str = "osmspark", master: str | None = None,
         # big Arrow batches: Python-UDF cost is per-batch fixed overhead +
         # per-row work; 4k batches made the PIP refine 5× slower than 64k
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("OSMSPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("OSMSPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
     )

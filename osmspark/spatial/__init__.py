@@ -1,9 +1,4 @@
-from .knn import (
-    knn_broadcast,
-    knn_bruteforce,
-    knn_join,
-    write_points_bucketed,
-)
+from .knn import knn_broadcast, knn_join
 from .geometry import (
     EARTH_RADIUS_M,
     assemble_from_exploded_refs,
@@ -19,12 +14,7 @@ from .geometry import (
     with_way_length_m,
     write_way_join_bucketed,
 )
-from .layout import (
-    dequantize_points,
-    quantize_points,
-    read_points_fixedpoint,
-    write_points_fixedpoint,
-)
+from .layout import dequantize_points, quantize_points
 from .pip import pip_join, pip_join_bbox, polygon_cover_cells, ray_cast_contains
 from .dwithin import dwithin_join, dwithin_meters_join
 from .ripley import ripleys_k
@@ -38,10 +28,8 @@ from .mapmatch import explode_segments, nearest_segment_join
 from .polygon import polygon_metrics
 from .polyfill import polyfill_raster
 from .tiles import (
-    hex_to_raster,
     kring_smooth,
     raster_tile_counts,
-    raster_to_points,
     rollup,
     tile_counts,
     tile_mode,

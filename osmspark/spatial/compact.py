@@ -1,8 +1,7 @@
 """Quadtree tile-set compaction (H3 ``compact`` / S2 ``CellUnion.
 Normalize`` analogue for web-mercator tiles): replace every complete
 4-sibling set by its parent, recursively, producing the MINIMAL
-mixed-zoom cell set covering exactly the same leaf area — and the
-inverse ``uncompact_tiles`` back to a uniform zoom.
+mixed-zoom cell set covering exactly the same leaf area.
 
 Why it matters at 100 TB: AOI masks rasterized by
 ``polyfill.polyfill_raster`` are dense contiguous blobs — a country at
@@ -33,7 +32,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["compact_tiles", "uncompact_tiles"]
+__all__ = ["compact_tiles"]
 
 
 def compact_tiles(tiles: DataFrame, zoom: int, x_col: str = "tile_x",
@@ -43,9 +42,10 @@ def compact_tiles(tiles: DataFrame, zoom: int, x_col: str = "tile_x",
     ``tiles``: cells at uniform ``zoom`` (duplicates tolerated — the
     first step distincts). A parent is promoted iff ALL 4 children are
     present (count == 4 after distinct); promotion recurses to zoom 0.
-    Output invariants (pinned by tests): ``uncompact_tiles(compact, z)``
-    reproduces the input set exactly; no output cell is an ancestor of
-    another; no 4 output siblings share a parent.
+    Output invariants (pinned by tests): expanding each output cell to
+    its zoom-``zoom`` descendants reproduces the input set exactly; no
+    output cell is an ancestor of another; no 4 output siblings share a
+    parent.
     """
     if zoom < 0:
         raise ValueError("zoom must be >= 0")
@@ -68,24 +68,3 @@ def compact_tiles(tiles: DataFrame, zoom: int, x_col: str = "tile_x",
     out = reduce(DataFrame.unionByName, outs)
     return out.select("zoom", F.col("x").alias("tile_x"),
                       F.col("y").alias("tile_y"))
-
-
-def uncompact_tiles(cells: DataFrame, zoom: int) -> DataFrame:
-    """Expand a mixed-zoom cell set back to uniform ``zoom`` leaves.
-
-    Each (z, x, y) cell emits its 4^(zoom−z) descendants via two
-    sequence explodes — pure codegen, no Python. Cells deeper than
-    ``zoom`` are rejected up front (they have no cover at that zoom).
-    """
-    side = F.expr(f"shiftleft(CAST(1 AS BIGINT), {zoom} - zoom)")
-    bad = cells.filter(F.col("zoom") > zoom)
-    if bad.take(1):
-        raise ValueError(f"cells deeper than zoom {zoom} cannot uncompact")
-    return (cells
-            .withColumn("_s", side)
-            .withColumn("_dx", F.explode(F.sequence(F.lit(0), F.col("_s") - 1)))
-            .withColumn("_dy", F.explode(F.sequence(F.lit(0), F.col("_s") - 1)))
-            .select((F.col("tile_x") * F.col("_s") + F.col("_dx"))
-                    .alias("tile_x"),
-                    (F.col("tile_y") * F.col("_s") + F.col("_dy"))
-                    .alias("tile_y")))

@@ -40,10 +40,8 @@ expensive job runs once, the tiny resolved/failed summary and the
 caller's own actions read the materialized partitions, and cleanup is
 automatic when the DataFrame is garbage-collected (no leaked ``.cache()``).
 
-At warehouse scale, store the point table partitioned/bucketed by a
-coarse cell prefix and pass a prebuilt ``density_sample``: the candidate
-pass then prunes partitions via the broadcast cell set and the only
-full-table cost is the one scan.
+At warehouse scale, pass a prebuilt ``density_sample``: the only
+full-table cost is then the one candidate scan.
 
 ``knn_broadcast`` (exact, O(|P|·|Q|) work but map-only): queries ride to
 every partition in the UDF closure; each Arrow batch emits a superset of
@@ -51,9 +49,6 @@ its local top-k (ties at the k-th distance kept, so the global merge is
 exact); a final window over the tiny union picks the true top-k. No
 shuffle of points, near-perfect scaling — the right tool when |Q| is
 small or the density sketch can't place a query.
-
-``knn_bruteforce`` (crossJoin + window) stays as the oracle-shaped
-reference implementation for small inputs.
 
 Distance = squared planar degrees, written with identical expression
 shape in Spark SQL and the oracle SQL so float64 results agree
@@ -71,8 +66,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..grid import hexgrid
 from ..grid.hexgrid_sql import hex_cell_col
 
-__all__ = ["knn_join", "knn_broadcast", "knn_bruteforce", "density_sample",
-           "write_points_bucketed"]
+__all__ = ["knn_join", "knn_broadcast", "density_sample"]
 
 _OUT_SCHEMA = "q_id long, p_id long, dist2 double"
 
@@ -99,22 +93,6 @@ def _topk_window(cand: DataFrame, k: int) -> DataFrame:
 
 def _empty_result(spark) -> DataFrame:
     return spark.createDataFrame([], _OUT_SCHEMA + ", rank int")
-
-
-def knn_bruteforce(points: DataFrame, queries: DataFrame, k: int,
-                   point_id: str = "id") -> DataFrame:
-    """Exact kNN by cross join + window — the oracle-shaped baseline.
-
-    O(|P|·|Q|) rows through a window sort: only for small inputs; the
-    scale paths are ``knn_join`` / ``knn_broadcast``."""
-    p = points.select(F.col(point_id).alias("p_id"),
-                      F.col("lat").alias("p_lat"), F.col("lon").alias("p_lon"))
-    q = queries.select(F.col("q_id"), F.col("lat").alias("q_lat"),
-                       F.col("lon").alias("q_lon"))
-    joined = q.crossJoin(p).withColumn(
-        "dist2", _dist2(F.col("q_lat"), F.col("q_lon"),
-                        F.col("p_lat"), F.col("p_lon")))
-    return _topk_window(joined, k)
 
 
 def knn_broadcast(points: DataFrame, queries_pdf: pd.DataFrame, k: int,
@@ -167,48 +145,6 @@ def knn_broadcast(points: DataFrame, queries_pdf: pd.DataFrame, k: int,
                         F.col("lon").alias("p_lon"))
     local = pts.mapInPandas(local_topk, _OUT_SCHEMA)
     return _topk_window(local, k)
-
-
-def write_points_bucketed(points: DataFrame, path: str, part_res: int = 3,
-                          lat_col: str = "lat", lon_col: str = "lon",
-                          part_col: str = "part_cell") -> None:
-    """Write the point table Hive-partitioned by its coarse hex cell —
-    the warehouse layout the module docstring prescribes (store the
-    table partitioned by a coarse cell prefix so the candidate pass
-    prunes partitions via the broadcast cell set).
-
-    ``part_res`` picks the directory granularity: at 10^12 rows choose
-    it so a partition is O(1 GB) (every √7× finer res splits each cell
-    ~7×). The repartition keys output files to their partition dir (one
-    shuffle; without it every task writes a file into every dir). Pass
-    the SAME ``part_res`` to :func:`knn_join` when reading this layout —
-    each candidate branch then adds a coarse-cover IN-filter that Spark
-    turns into static partition pruning (scan reads only the covered
-    directories)."""
-    df = points.withColumn(part_col,
-                           hex_cell_col(F.col(lat_col), F.col(lon_col),
-                                        part_res))
-    (df.repartition(F.col(part_col))
-     .write.mode("overwrite").partitionBy(part_col).parquet(path))
-
-
-def _coarse_cover(q_lat: np.ndarray, q_lon: np.ndarray, r: int, ring: int,
-                  part_res: int) -> list[int]:
-    """Coarse cells whose partitions can hold ANY candidate of a branch
-    at res ``r`` — the partition-pruning set.
-
-    A candidate point has its res-r cell in the queries' k-ring, so it
-    lies within R_max = (√3·ring + 2)·edge(r) of some query (ring-n
-    centers are ≤ n·√3·edge apart, plus one circumradius on each end).
-    By the k-ring containment guarantee ((1.5n − 0.5)·edge covers the
-    ball), every point within R_max has its part_res cell inside the
-    coarse k-ring with n_c = ceil((R_max/edge(part_res) + 0.5)/1.5).
-    Conservative in both constants — completeness of the pruned scan is
-    pinned by test_knn_bucketed_matches_bruteforce."""
-    r_max = (math.sqrt(3.0) * ring + 2.0) * hexgrid.edge_deg(r)
-    n_c = max(1, math.ceil((r_max / hexgrid.edge_deg(part_res) + 0.5) / 1.5))
-    cover = hexgrid.k_ring(hexgrid.cell_id(q_lat, q_lon, part_res), n_c)
-    return [int(c) for c in np.unique(cover.ravel())]
 
 
 def density_sample(points: DataFrame, point_id: str = "id",
@@ -329,9 +265,8 @@ def _nearest_sample_d2_spark(spark, q_pdf: pd.DataFrame,
 def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
              k: int,
              res: int = 9, ring: int = 1, point_id: str = "id",
-             sample: pd.DataFrame | None = None, sample_rate: float = 1.0,
-             part_res: int | None = None,
-             part_col: str = "part_cell") -> DataFrame:
+             sample: pd.DataFrame | None = None, sample_rate: float = 1.0
+             ) -> DataFrame:
     """Exact kNN via one mixed-resolution k-ring candidate pass.
 
     ``res`` is the FINEST resolution considered (pick it near your
@@ -340,11 +275,8 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
     (1.5·ring − 0.5)·edge_deg(level) should hold ≥ 3k points per the
     density sketch, with ``SAFETY``× radius margin. ``sample``/
     ``sample_rate`` inject a prebuilt ``density_sample`` (skips the
-    sketch scan). When ``points`` was written by
-    :func:`write_points_bucketed`, pass its ``part_res``: each candidate
-    branch adds the coarse-cover IN-filter on ``part_col`` and the scan
-    statically prunes to the covered partition directories. See the
-    module docstring for the full design and the exactness argument.
+    sketch scan). See the module docstring for the full design and the
+    exactness argument.
     """
     spark = points.sparkSession
     if isinstance(queries, pd.DataFrame):
@@ -459,8 +391,7 @@ def knn_join(points: DataFrame, queries: DataFrame | pd.DataFrame,
         # the pushed-down OR-chain knocked the parquet reader out of its
         # vectorized path and ran slower than the plain scans)
         topk, resolved_set = _candidate_pass(
-            points, pending, assigned, k, ring, factor, point_id,
-            part_res, part_col)
+            points, pending, assigned, k, ring, factor, point_id)
         if resolved_set:
             parts.append(topk.filter(F.col("n_cand") >= k)
                          .select("q_id", "p_id", "dist2", "rank"))
@@ -542,8 +473,7 @@ def _quantize_levels(r_est: np.ndarray, max_groups: int,
 
 def _candidate_pass(points: DataFrame, q_pdf: pd.DataFrame,
                     assigned: np.ndarray, k: int, ring: int, factor: float,
-                    point_id: str, part_res: int | None = None,
-                    part_col: str = "part_cell") -> tuple[DataFrame, set]:
+                    point_id: str) -> tuple[DataFrame, set]:
     """One mixed-resolution candidate join + fused top-k/completeness
     window. Returns (checkpointed topk with n_cand, resolved q_id set)."""
     spark = points.sparkSession
@@ -562,8 +492,7 @@ def _candidate_pass(points: DataFrame, q_pdf: pd.DataFrame,
     # G ≤ MAX_GROUPS keeps it bounded.
     pts = points.select(F.col(point_id).alias("p_id"),
                         F.col("lat").alias("p_lat"),
-                        F.col("lon").alias("p_lon"),
-                        *([part_col] if part_res is not None else []))
+                        F.col("lon").alias("p_lon"))
     branches = []
     for r in res_used:
         mask = assigned == r
@@ -571,14 +500,6 @@ def _candidate_pass(points: DataFrame, q_pdf: pd.DataFrame,
                                ring)
         n_ring = cells.shape[1]
         g = factor * hexgrid.edge_deg(r)
-        branch_pts = pts
-        if part_res is not None:
-            # bucketed layout: the branch scan reads ONLY the partition
-            # directories whose coarse cell can hold a candidate —
-            # static partition pruning from the driver-computed cover
-            cover = _coarse_cover(q_lat[mask], q_lon[mask], r, ring,
-                                  part_res)
-            branch_pts = pts.filter(F.col(part_col).isin(cover))
         # per-query candidate ball: the level's guarantee radius, capped
         # by the query's own clamp (completeness holds for ANY radius ≤
         # the guarantee radius — see knn_join's clamp comment)
@@ -595,11 +516,10 @@ def _candidate_pass(points: DataFrame, q_pdf: pd.DataFrame,
             "q_lon": np.repeat(q_lon[mask], n_ring),
             "g2": np.repeat(g_q * g_q, n_ring)}))
         branches.append(
-            branch_pts
+            pts
             .withColumn("cell",
                         hex_cell_col(F.col("p_lat"), F.col("p_lon"), r))
-            .join(F.broadcast(q_cells), "cell", "inner")
-            .drop(part_col))
+            .join(F.broadcast(q_cells), "cell", "inner"))
     joined = branches[0]
     for b in branches[1:]:
         joined = joined.unionByName(b)

@@ -16,11 +16,13 @@ Why bother at 100 TB: the (lat, lon) pair shrinks 16 → 8 bytes before
 encoding, and scan-heavy stages (tile encode, PIP prefilter, kNN candidate
 scan) are bandwidth-bound at high core counts — on this host the hex-tile
 scan-agg saturates DRAM near 16 threads (BENCH/host_calibration.json), so
-halving bytes directly lifts the multi-core ceiling. ``cluster_res``
-additionally range-partitions + sorts by a coarse hex cell: spatially
-local rows give parquet's int codecs small deltas (the bare scan measured
-~2× faster again) and make the per-partition min/max cell statistics tight
-so cell-range predicates prune row groups.
+halving bytes directly lifts the multi-core ceiling.
+``write_points_zordered`` additionally range-partitions + sorts by a
+Z-order key: spatially local rows give parquet's int codecs small deltas
+and make the per-row-group min/max statistics tight, so a bbox predicate
+(``read_bbox``) prunes row groups.
+``with_hilbert_key`` is the locality-optimal sort key for the same
+layout; ``write_events_day_partitioned`` is the time-axis layout.
 """
 
 from __future__ import annotations
@@ -28,11 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..grid.geohash_sql import _spread_bits
-from ..grid.hexgrid_sql import hex_cell_col
 
 __all__ = ["quantize_points", "dequantize_points",
-           "hilbert_level_sql", "with_hilbert_key", "write_points_hilbert",
-           "write_points_fixedpoint", "read_points_fixedpoint",
+           "hilbert_level_sql", "with_hilbert_key",
            "zorder_col", "write_points_zordered", "read_bbox",
            "write_events_day_partitioned", "read_events_range"]
 
@@ -62,49 +62,6 @@ def dequantize_points(df: DataFrame, lat_col: str = "lat",
         (F.col("lon_q").cast("double") / F.lit(_SCALE)).alias(lon_col))
 
 
-def write_points_fixedpoint(points: DataFrame, path: str,
-                            cluster_res: int | None = None,
-                            partitions: int | None = None,
-                            lat_col: str = "lat",
-                            lon_col: str = "lon",
-                            row_group_bytes: int | None = None) -> None:
-    """Write the fixed-point layout; ``cluster_res`` sorts spatially.
-
-    Clustering is one range-shuffle at write time — paid once, amortized
-    over every later scan (smaller files, tighter row-group stats for
-    cell-range predicates). CAVEAT measured at 320M rows: clustering
-    CONCENTRATES downstream per-region compute (a PIP refine's candidate
-    rows all land in the few partitions covering the polygons — 2.2×
-    slower than the unsorted layout on a polygon-heavy mix), so default
-    to unclustered unless scans are dominated by cell-range pruning.
-    ``row_group_bytes`` caps parquet row-group size so split planning can
-    slice files finer than one row group (the default 128 MiB group makes
-    a ~30 MiB compressed file one indivisible split)."""
-    q = quantize_points(points, lat_col, lon_col)
-    if cluster_res is not None:
-        cell = hex_cell_col(F.col("lat_q").cast("double") / F.lit(_SCALE),
-                            F.col("lon_q").cast("double") / F.lit(_SCALE),
-                            cluster_res)
-        q = q.withColumn("_cell", cell)
-        n = partitions or q.sparkSession.sparkContext.defaultParallelism * 4
-        q = (q.repartitionByRange(n, "_cell")
-             .sortWithinPartitions("_cell")
-             .drop("_cell"))
-    elif partitions is not None:
-        q = q.repartition(partitions)
-    writer = q.write.mode("overwrite")
-    if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(path)
-
-
-def read_points_fixedpoint(spark: SparkSession, path: str,
-                           lat_col: str = "lat",
-                           lon_col: str = "lon") -> DataFrame:
-    """Scan the layout back as (…, lat, lon) doubles."""
-    return dequantize_points(spark.read.parquet(path), lat_col, lon_col)
-
-
 def zorder_col(lat_q: Column, lon_q: Column) -> Column:
     """Morton (Z-order) sort key over the fixed-point coordinates.
 
@@ -124,7 +81,7 @@ def write_points_zordered(points: DataFrame, path: str,
                           row_group_bytes: int | None = None) -> None:
     """Fixed-point layout range-partitioned + sorted by Z-order key.
 
-    Why next to ``cluster_res`` (1-D sort by one hex cell id): the
+    Why Z-order rather than a 1-D sort by one hex cell id: the
     Z-curve bounds BOTH axes in every file/row group, so parquet min/max
     stats on the RAW ``lat_q``/``lon_q`` columns are simultaneously
     tight — an arbitrary pushed-down bbox predicate
@@ -271,25 +228,3 @@ def with_hilbert_key(df: DataFrame, lat_col: str = "lat",
                          F.expr(y2).cast("long").alias("_hy"),
                          F.expr(d2).cast("long").alias("_hd"))
     return out.select(*keep, F.col("_hd").alias(out_col))
-
-
-def write_points_hilbert(points: DataFrame, path: str,
-                         partitions: int | None = None,
-                         lat_col: str = "lat", lon_col: str = "lon",
-                         order: int = 16,
-                         row_group_bytes: int | None = None) -> None:
-    """Fixed-point layout range-partitioned + sorted by Hilbert key —
-    ``write_points_zordered`` with the locality-optimal curve. Same
-    single range shuffle at write time; same pruning contract
-    (``read_bbox`` pushes ``lat_q``/``lon_q`` bounds onto the parquet
-    row-group stats, which Hilbert segments keep even tighter)."""
-    q = with_hilbert_key(points, lat_col, lon_col, order, out_col="_h")
-    q = quantize_points(q, lat_col, lon_col)
-    n = partitions or q.sparkSession.sparkContext.defaultParallelism * 4
-    q = (q.repartitionByRange(n, "_h")
-         .sortWithinPartitions("_h")
-         .drop("_h"))
-    writer = q.write.mode("overwrite")
-    if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(path)

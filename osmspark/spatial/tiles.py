@@ -23,8 +23,7 @@ from ..grid.hexgrid_sql import hex_cell_col
 
 __all__ = ["with_hex_cell", "with_s2_cell", "tile_counts", "rollup",
            "raster_tile_counts", "tile_pyramid", "kring_smooth",
-           "hex_to_raster", "raster_to_points", "with_quadkey",
-           "tile_mode"]
+           "with_quadkey", "tile_mode"]
 
 
 def with_hex_cell(df: DataFrame, res: int, lat_col: str = "lat",
@@ -37,7 +36,7 @@ def with_hex_cell(df: DataFrame, res: int, lat_col: str = "lat",
 def with_s2_cell(df: DataFrame, level: int, lat_col: str = "lat",
                  lon_col: str = "lon", out: str = "cell") -> DataFrame:
     """S2 encode as pure SQL expressions — whole-stage codegen, no
-    Python worker (bit-identical to s2.cell_id; pinned by tests)."""
+    Python worker (bit-identical to the NumPy S2 oracle; pinned by tests)."""
     from ..grid.s2_sql import with_s2_cell_sql
     return with_s2_cell_sql(df, level, lat_col, lon_col, out)
 
@@ -82,8 +81,8 @@ def rollup(tiles: DataFrame, parent_res: int, grid: str = "hex") -> DataFrame:
     """Re-aggregate per-cell counts to a coarser resolution.
 
     Operates on the tile table, not raw points; parent ids are pure SQL
-    expressions (hex: decode-center → re-encode, the same center
-    containment as hexgrid.parent; s2: lsb mask arithmetic) — no Python
+    expressions (hex: decode-center → re-encode, i.e. center
+    containment, like H3; s2: lsb mask arithmetic) — no Python
     worker even when the tile table itself is big. Counts sum exactly
     (child counts partition parent counts — pinned by tests)."""
     if grid == "hex":
@@ -201,36 +200,6 @@ def kring_smooth(tiles: DataFrame, ring: int = 1,
             .groupBy("cell")
             .agg(F.sum(value_col).alias("n_smooth"))
             .withColumn("ring", F.lit(ring)))
-
-
-def hex_to_raster(tiles: DataFrame, zoom: int) -> DataFrame:
-    """Vector→raster: map each hex cell's centroid into a z/x/y tile and
-    re-aggregate counts (classic rasterization of a vector layer). Cell
-    centers are pure SQL (hex_center_cols) — no Python worker."""
-    from ..grid.hexgrid_sql import hex_center_cols
-    c_lat, c_lon = hex_center_cols(F.col("cell"))
-    pts = tiles.select(c_lat.alias("lat"), c_lon.alias("lon"),
-                       F.col("n_points"))
-    n = float(1 << zoom)
-    lat = F.greatest(F.lit(-85.05112878), F.least(F.lit(85.05112878), F.col("lat")))
-    lat_rad = F.radians(lat)
-    x = F.floor((F.col("lon") + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long")
-    y = F.floor((F.lit(1.0) - F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad))
-                 / F.lit(float(np.pi))) / F.lit(2.0) * F.lit(n)).cast("long")
-    return (pts.withColumn("tile_x", x).withColumn("tile_y", y)
-            .groupBy("tile_x", "tile_y")
-            .agg(F.sum("n_points").alias("n_points"))
-            .withColumn("zoom", F.lit(zoom)))
-
-
-def raster_to_points(raster: DataFrame, zoom: int) -> DataFrame:
-    """Raster→vector: tile centers as weighted points (inverse mercator)."""
-    n = float(1 << zoom)
-    lon = (F.col("tile_x") + F.lit(0.5)) / F.lit(n) * F.lit(360.0) - F.lit(180.0)
-    yy = F.lit(float(np.pi)) * (F.lit(1.0) - F.lit(2.0) * (F.col("tile_y") + F.lit(0.5)) / F.lit(n))
-    lat = F.degrees(F.atan(F.sinh(yy)))
-    return raster.select(lat.alias("lat"), lon.alias("lon"),
-                         F.col("n_points").alias("weight"))
 
 
 def with_quadkey(df: DataFrame, zoom: int) -> DataFrame:

@@ -1,3 +1,2 @@
 from .sink import make_windowed_sink_batch_writer, sink_windowed_tiles
-from .source import (stream_dedup_pages, stream_nodes, stream_pages,
-                     stream_tile_counts, stream_windowed_tile_counts)
+from .source import stream_nodes, stream_pages, stream_windowed_tile_counts

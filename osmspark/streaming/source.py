@@ -6,7 +6,8 @@ at block granularity (``lib/pbfParser.js:55-103``, SURVEY.md §2.4 C1/C2).
 The Spark-native equivalent: a file-source ``readStream`` over the pages
 directory with ``maxFilesPerTrigger`` (bounded in-flight work = the
 pause/resume analogue; micro-batch boundaries = block boundaries), decode
-in the same Arrow UDFs as batch, and windowed/stateful sinks downstream.
+in the same Arrow UDF as batch, and event-time windowed tile counts with
+a watermark, written by the lineage-tracked sink in ``sink.py``.
 ``endDocument`` ≙ query termination after draining available input.
 """
 
@@ -17,8 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import model
 from ..pbf.source import _nodes_fn
 
-__all__ = ["stream_pages", "stream_nodes", "stream_tile_counts",
-           "stream_windowed_tile_counts", "stream_dedup_pages"]
+__all__ = ["stream_pages", "stream_nodes", "stream_windowed_tile_counts"]
 
 
 def stream_pages(spark: SparkSession, path: str,
@@ -35,21 +35,6 @@ def stream_nodes(pages_stream: DataFrame) -> DataFrame:
     """Streaming decode — identical UDF as the batch path."""
     return (pages_stream.select("url", "html")
             .mapInArrow(_nodes_fn, model.NODE_SCHEMA))
-
-
-def stream_tile_counts(nodes_stream: DataFrame, res: int = 7) -> DataFrame:
-    """Streaming per-cell counts (update/complete mode downstream) —
-    running totals per cell; state grows with the number of distinct
-    cells. For bounded state with event-time semantics use
-    ``stream_windowed_tile_counts``."""
-    from pyspark.sql import functions as F
-
-    from ..grid.hexgrid_sql import hex_cell_col
-
-    return (nodes_stream
-            .withColumn("cell", hex_cell_col(F.col("lat"), F.col("lon"), res))
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n_points")))
 
 
 def stream_windowed_tile_counts(nodes_stream: DataFrame, res: int = 7,
@@ -75,22 +60,3 @@ def stream_windowed_tile_counts(nodes_stream: DataFrame, res: int = 7,
             .select(F.col("window.start").alias("window_start"),
                     F.col("window.end").alias("window_end"),
                     "cell", "n_points"))
-
-
-def stream_dedup_pages(pages_stream: DataFrame,
-                       watermark: str = "30 minutes",
-                       keys: tuple[str, ...] = ("url",)) -> DataFrame:
-    """Streaming seen-set dedup over the crawl stream — the re-fetch
-    suppressor a rolling crawl runs before any downstream work: the
-    first page per ``keys`` within the event-time horizon passes, later
-    duplicates are dropped, and ``dropDuplicatesWithinWatermark``
-    EVICTS each key's state once the watermark passes it — state is
-    bounded by the horizon's key arrival rate, not crawl history (the
-    unbounded-history variant is the batch exact-dedup / the Bloom
-    seen-set sketch; this is the streaming member of that family).
-
-    Works in append mode; ``warc_ts`` must carry the event time.
-    """
-    return (pages_stream
-            .withWatermark("warc_ts", watermark)
-            .dropDuplicatesWithinWatermark(list(keys)))

@@ -1,12 +1,12 @@
-"""S2 cell ids in pure NumPy, from the published S2 geometry design.
+"""S2 cell ids in pure NumPy — the test oracle for the SQL encoder.
 
-Implements the public algorithm (S2 paper / s2geometry docs: sphere →
-cube-face projection → quadratic ST transform → leaf (i,j) → Hilbert-curve
-position → 64-bit cell id). No external s2 library exists in this
-environment (SURVEY.md §7.0), so this is a from-scratch vectorized
-implementation; correctness is anchored by structural invariants
-(bijective round-trip through cell centers, hierarchical containment,
-Hilbert adjacency) in tests/test_grid.py plus pinned regression ids.
+A from-scratch vectorized implementation of the published S2 design
+(sphere → cube-face projection → quadratic ST transform → leaf (i,j) →
+Hilbert-curve position → 64-bit cell id); no s2 library exists in this
+environment. ``osmspark.grid.s2_sql`` must match ``cell_id`` and
+``parent`` bit for bit (tests/test_grid.py), and this module is itself
+anchored by structural invariants (round-trip through cell centers,
+hierarchical containment, Hilbert adjacency) plus pinned regression ids.
 
 Cell id layout (standard S2): 3 face bits, 2·level position bits, one
 trailing '1' sentinel, zero-padded to 64 bits. MAX_LEVEL = 30.
@@ -195,12 +195,3 @@ def range_min_max(ids: np.ndarray):
     ids = np.asarray(ids, dtype=np.uint64)
     lsb = ids & (~ids + np.uint64(1))
     return ids - lsb + np.uint64(1), ids + lsb - np.uint64(1)
-
-
-def token(ids: np.ndarray) -> list[str]:
-    """Canonical hex token (trailing zeros stripped) — debugging aid."""
-    out = []
-    for v in np.asarray(ids, dtype=np.uint64):
-        t = format(int(v), "016x").rstrip("0")
-        out.append(t or "X")
-    return out

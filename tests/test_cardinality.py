@@ -1,5 +1,5 @@
-"""HLL distinct sketch: accuracy envelope, mergeability, partitioning
-invariance, NumPy register parity."""
+"""HLL distinct sketch: accuracy envelope, partitioning invariance,
+NumPy register parity."""
 
 from __future__ import annotations
 
@@ -9,8 +9,7 @@ import numpy as np
 import pandas as pd
 
 from osmspark.pipeline.cardinality import (
-    ALPHA_M2_P55, M_REGS, RHO_MAX, hll_distinct, hll_estimate,
-    hll_merge, hll_registers)
+    ALPHA_M2_P55, M_REGS, RHO_MAX, hll_distinct, hll_registers)
 
 
 def _py_registers(values, seed=1):
@@ -57,20 +56,6 @@ def test_duplicates_do_not_move_registers(spark):
     once = hll_distinct(_df(spark, vals), ["g"], "v").collect()[0]
     many = hll_distinct(_df(spark, vals * 7), ["g"], "v").collect()[0]
     assert once["s_num"] == many["s_num"] and once["est"] == many["est"]
-
-
-def test_merge_equals_whole(spark):
-    vals = [f"m-{i}" for i in range(800)]
-    whole = hll_registers(_df(spark, vals), ["g"], "v")
-    part1 = hll_registers(_df(spark, vals[:500]), ["g"], "v")
-    part2 = hll_registers(_df(spark, vals[300:]), ["g"], "v")
-    merged = hll_merge(part1, part2)
-    w = {r["j"]: r["m"] for r in whole.collect()}
-    m = {r["j"]: r["m"] for r in merged.collect()}
-    assert w == m
-    ew = hll_estimate(whole, ["g"]).collect()[0]
-    em = hll_estimate(merged, ["g"]).collect()[0]
-    assert (ew["s_num"], ew["est"]) == (em["s_num"], em["est"])
 
 
 def test_partitioning_invariance(spark):

@@ -1,7 +1,8 @@
 """Tile-set compaction — osmspark/spatial/compact.py.
 
 Pins: hand-computed compaction of a known blob, the round-trip identity
-uncompact(compact(S), z) == S on random dense regions, minimality (no
+uncompact(compact(S), z) == S on random dense regions (``_uncompact``
+expands a cell to its leaves in Python), minimality (no
 complete sibling quad survives, no ancestor/descendant pair), duplicate
 tolerance, and full-square collapse to a single ancestor cell.
 """
@@ -9,15 +10,22 @@ tolerance, and full-square collapse to a single ancestor cell.
 from __future__ import annotations
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
-from osmspark.spatial.compact import compact_tiles, uncompact_tiles
+from osmspark.spatial.compact import compact_tiles
 
 
 def _df(spark, cells, zoom=None):
     return spark.createDataFrame(
         [(int(x), int(y)) for x, y in cells], "tile_x long, tile_y long")
+
+
+def _uncompact(cells, zoom):
+    """{(x, y)} at ``zoom``: every (z, x, y) cell's 4^(zoom−z) leaves."""
+    out = set()
+    for z, x, y in cells:
+        s = 1 << (zoom - z)
+        out |= {(x * s + dx, y * s + dy) for dx in range(s) for dy in range(s)}
+    return out
 
 
 def test_hand_example(spark):
@@ -50,9 +58,7 @@ def test_roundtrip_and_minimality(spark):
     assert len(comp) < len(cells)
     assert any(zz < z for zz, _, _ in comp)
     # round-trip identity
-    back = {(r.tile_x, r.tile_y)
-            for r in uncompact_tiles(compact, z).collect()}
-    assert back == cells
+    assert _uncompact(comp, z) == cells
     # minimality: no 4 siblings at one zoom share a parent
     from collections import Counter
     sib = Counter((zz, x >> 1, y >> 1) for zz, x, y in comp)
@@ -70,10 +76,3 @@ def test_duplicates_tolerated(spark):
     got = {(r.zoom, r.tile_x, r.tile_y)
            for r in compact_tiles(_df(spark, cells), 2).collect()}
     assert got == {(1, 0, 0)}
-
-
-def test_uncompact_rejects_too_deep(spark):
-    deep = spark.createDataFrame([(5, 1, 1)],
-                                 "zoom int, tile_x long, tile_y long")
-    with pytest.raises(ValueError):
-        uncompact_tiles(deep, 3)

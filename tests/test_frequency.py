@@ -1,14 +1,12 @@
 """Count-min sketch — osmspark/pipeline/frequency.py.
 
 Pins the CMS contract: estimates NEVER underestimate, exact-match on a
-collision-free width, partial-sketch merge == whole-corpus sketch,
-weighted build == exploded build, NULLs skipped.
+collision-free width, weighted build == exploded build, NULLs skipped.
 """
 
 from pyspark.sql import functions as F
 
-from osmspark.pipeline.frequency import (cms_build, cms_merge,
-                                         cms_point_query)
+from osmspark.pipeline.frequency import cms_build, cms_point_query
 
 
 def _corpus(spark):
@@ -54,19 +52,6 @@ def test_wide_sketch_is_exact(spark):
     assert est[("g2", "omega")] == 25
     assert est[("g2", "beta")] == 0
     assert est[("g1", "missing")] == 0
-
-
-def test_merge_equals_whole(spark):
-    df = _corpus(spark)
-    a = cms_build(df.filter(F.md5(F.col("v")).startswith("a") == False),  # noqa: E712
-                  ["grp"], "v", depth=4, width=64)
-    b = cms_build(df.filter(F.md5(F.col("v")).startswith("a")),
-                  ["grp"], "v", depth=4, width=64)
-    whole = cms_build(df, ["grp"], "v", depth=4, width=64)
-    merged = cms_merge(a, b)
-    w = {(r["grp"], r["r"], r["j"]): r["c"] for r in whole.collect()}
-    m = {(r["grp"], r["r"], r["j"]): r["c"] for r in merged.collect()}
-    assert w == m
 
 
 def test_weighted_build_equals_exploded(spark):

@@ -11,9 +11,7 @@ from pyspark.sql import functions as F
 from osmspark.grid.geohash_sql import (
     geohash_col,
     geohash_counts,
-    geohash_decode,
     geohash_kring_smooth,
-    geohash_neighbors,
 )
 
 _B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -84,12 +82,11 @@ def test_counts_partition_points(spark):
 
 
 # ---------------------------------------------------------------------------
-# decode / neighbors / k-ring
+# reference decode / neighbors; k-ring smoothing
 # ---------------------------------------------------------------------------
 
 def _ref_decode(gh: str) -> tuple[float, float, float, float]:
-    """Interval-bisection decode (lon_lo, lat_lo, lon_hi, lat_hi) —
-    independent of the Morton-compact SQL path."""
+    """Interval-bisection decode → (lon_lo, lat_lo, lon_hi, lat_hi)."""
     lat_lo, lat_hi = -90.0, 90.0
     lon_lo, lon_hi = -180.0, 180.0
     even = True
@@ -107,36 +104,25 @@ def _ref_decode(gh: str) -> tuple[float, float, float, float]:
     return lon_lo, lat_lo, lon_hi, lat_hi
 
 
-@pytest.mark.parametrize("precision", [1, 4, 5, 9])
-def test_decode_matches_bisection(spark, precision):
-    rng = np.random.default_rng(21)
-    pdf = pd.DataFrame({"lat": rng.uniform(-89.9, 89.9, 120),
-                        "lon": rng.uniform(-179.9, 179.9, 120)})
-    pdf["geohash"] = [_ref_geohash(la, lo, precision)
-                      for la, lo in zip(pdf["lat"], pdf["lon"])]
-    out = geohash_decode(
-        spark.createDataFrame(pdf[["geohash"]]), precision).toPandas()
-    for row in out.itertuples():
-        lon_lo, lat_lo, lon_hi, lat_hi = _ref_decode(row.geohash)
-        assert row.lon_min == lon_lo and row.lon_max == lon_hi
-        assert row.lat_min == lat_lo and row.lat_max == lat_hi
-        assert row.lon_c == (lon_lo + lon_hi) / 2
-        assert row.lat_c == (lat_lo + lat_hi) / 2
-
-
 @pytest.mark.parametrize("precision", [2, 5, 8])
 def test_encode_decode_roundtrip(spark, precision):
-    """encode(center(decode(gh))) == gh for every cell present."""
+    """encode(center(decode(gh))) == gh for every cell present, with
+    the reference bisection decode."""
     rng = np.random.default_rng(22)
     pdf = pd.DataFrame({"lat": rng.uniform(-89.9, 89.9, 200),
                         "lon": rng.uniform(-179.9, 179.9, 200)})
-    df = spark.createDataFrame(pdf).select(
-        geohash_col(F.col("lat"), F.col("lon"), precision).alias("geohash"))
-    out = (geohash_decode(df, precision)
-           .select("geohash",
-                   geohash_col(F.col("lat_c"), F.col("lon_c"), precision)
-                   .alias("gh2")).toPandas())
-    assert (out["geohash"] == out["gh2"]).all()
+    ghs = [r.geohash for r in spark.createDataFrame(pdf).select(
+        geohash_col(F.col("lat"), F.col("lon"), precision)
+        .alias("geohash")).collect()]
+    centers = []
+    for gh in ghs:
+        lon_lo, lat_lo, lon_hi, lat_hi = _ref_decode(gh)
+        centers.append(((lat_lo + lat_hi) / 2, (lon_lo + lon_hi) / 2))
+    out = spark.createDataFrame(
+        pd.DataFrame(centers, columns=["lat_c", "lon_c"])).select(
+        geohash_col(F.col("lat_c"), F.col("lon_c"), precision)
+        .alias("gh2")).toPandas()
+    assert out["gh2"].tolist() == ghs
 
 
 def _ref_neighbors(gh: str, precision: int,
@@ -160,36 +146,6 @@ def _ref_neighbors(gh: str, precision: int,
                 lo -= 360.0
             out.append(_ref_geohash(la, lo, precision))
     return out
-
-
-@pytest.mark.parametrize("precision", [1, 3, 6])
-def test_neighbors_match_reference(spark, precision):
-    rng = np.random.default_rng(23)
-    pdf = pd.DataFrame({"lat": rng.uniform(-89.9, 89.9, 80),
-                        "lon": rng.uniform(-179.9, 179.9, 80)})
-    pdf["geohash"] = [_ref_geohash(la, lo, precision)
-                      for la, lo in zip(pdf["lat"], pdf["lon"])]
-    out = (spark.createDataFrame(pdf[["geohash"]])
-           .select("geohash",
-                   geohash_neighbors(F.col("geohash"), precision)
-                   .alias("nb")).toPandas())
-    for row in out.itertuples():
-        assert sorted(row.nb) == sorted(_ref_neighbors(row.geohash,
-                                                       precision))
-
-
-def test_neighbors_pole_and_antimeridian(spark):
-    # north-pole row cell and an antimeridian-adjacent cell at p=2
-    df = spark.createDataFrame(pd.DataFrame(
-        {"lat": [89.99, 0.01], "lon": [0.01, -179.99]}))
-    pdf = df.select(
-        geohash_col(F.col("lat"), F.col("lon"), 2).alias("geohash"),
-        geohash_neighbors(F.col("geohash"), 2).alias("nb")).toPandas()
-    pole_nb, anti_nb = pdf["nb"][0], pdf["nb"][1]
-    assert len(pole_nb) == 5  # no row above the pole
-    assert len(anti_nb) == 8  # wraps across ±180 instead of clipping
-    exp_anti = _ref_neighbors(pdf["geohash"][1], 2)
-    assert sorted(anti_nb) == sorted(exp_anti)
 
 
 def test_kring_smooth_equals_gather(spark):

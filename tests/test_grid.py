@@ -1,14 +1,15 @@
-"""Grid encoder invariants: S2 round-trip/hierarchy/Hilbert adjacency +
-hexgrid hierarchy/k-ring, plus pinned regression ids (our determinism
-contract — SURVEY.md §7.4), all without Spark; and the square-lattice
-offset sets, checked through one Spark scatter."""
+"""Grid encoder invariants: S2 round-trip/hierarchy/Hilbert adjacency
+(on the NumPy S2 oracle in s2_reference.py) + hexgrid round-trip/k-ring,
+plus pinned regression ids (our determinism contract — SURVEY.md §7.4),
+all without Spark; the SQL encoders bit-identical to the NumPy ones; and
+the square-lattice offset sets, checked through one Spark scatter."""
 
 import numpy as np
 import pytest
+import s2_reference as S
 
 from osmspark.grid import hexgrid as H
 from osmspark.grid import lattice as L
-from osmspark.grid import s2 as S
 
 
 def _haversine_m(lat1, lng1, lat2, lng2):
@@ -84,8 +85,14 @@ def test_hex_roundtrip_and_hierarchy():
         clat, clon = H.cell_to_center(c)
         assert np.array_equal(H.cell_id(clat, clon, res), c)
         assert np.abs(clat - lat).max() < H.edge_deg(res) * 1.2
-        p = H.parent(c, res - 1)
-        assert np.array_equal(p, H.cell_id(clat, clon, res - 1))
+
+
+def _hex_distance(id_a, id_b):
+    """Hex grid distance between same-resolution cells (cube metric)."""
+    qa, ra = H.qr_of(id_a)
+    qb, rb = H.qr_of(id_b)
+    dq, dr = qa - qb, ra - rb
+    return (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2
 
 
 def test_hex_kring_and_neighbors():
@@ -93,9 +100,10 @@ def test_hex_kring_and_neighbors():
     c = H.cell_id(rng.uniform(-60, 60, 100), rng.uniform(-170, 170, 100), 7)
     ring = H.k_ring(c, 2)
     assert ring.shape == (100, 19)  # 3k(k+1)+1
-    assert np.all(H.hex_distance(np.repeat(c, 19), ring.ravel()) <= 2)
-    nb = H.neighbors(c)
-    assert np.all(H.hex_distance(np.repeat(c, 6), nb.ravel()) == 1)
+    d = _hex_distance(np.repeat(c, 19), ring.ravel()).reshape(100, 19)
+    assert np.all(d <= 2)
+    # 1 + 6 + 12 cells at distance 0, 1, 2 (the 6 neighbours at 1)
+    assert np.all((d == 1).sum(axis=1) == 6)
     # self always in own ring
     assert np.all((ring == c[:, None]).sum(axis=1) == 1)
 
@@ -131,13 +139,12 @@ def test_hex_pinned_regression():
 
 
 def test_hex_sql_expr_matches_numpy(spark):
-    """hex_cell_col / hex_kring_array_col are bit-identical to the numpy
-    kernels — the production encode path is the SQL expression."""
+    """hex_cell_col is bit-identical to the numpy kernel — the
+    production encode path is the SQL expression."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from osmspark.grid import hexgrid as H
-    from osmspark.grid.hexgrid_sql import hex_cell_col, hex_kring_array_col
+    from osmspark.grid.hexgrid_sql import hex_cell_col
 
     rng = np.random.default_rng(99)
     lat = rng.uniform(-89.9, 89.9, 5000)
@@ -147,11 +154,6 @@ def test_hex_sql_expr_matches_numpy(spark):
         got = np.array([r[0] for r in df.select(
             hex_cell_col(F.col("lat"), F.col("lon"), res)).collect()])
         assert np.array_equal(got, H.cell_id(lat, lon, res)), res
-    for res, k in ((7, 1), (9, 2)):
-        got = np.array([r[0] for r in df.limit(200).select(
-            hex_kring_array_col(F.col("lat"), F.col("lon"), res, k)).collect()])
-        want = H.k_ring(H.cell_id(lat[:200], lon[:200], res), k)
-        assert np.array_equal(np.sort(got, axis=1), np.sort(want, axis=1))
 
 
 def test_s2_sql_expr_matches_numpy(spark):
@@ -159,7 +161,6 @@ def test_s2_sql_expr_matches_numpy(spark):
     production S2 tiling path is the SQL expression (no Python worker)."""
     import pandas as pd
 
-    from osmspark.grid import s2 as S
     from osmspark.grid.s2_sql import with_s2_cell_sql
 
     rng = np.random.default_rng(77)
@@ -173,53 +174,17 @@ def test_s2_sql_expr_matches_numpy(spark):
         assert np.array_equal(got["cell"].to_numpy(), want), level
 
 
-def test_hex_multires_matches_fixed_res(spark):
-    """hex_cell_col_multires (column resolution) is bit-identical to the
-    fixed-res encode for every resolution in its value set — the kNN
-    mixed-resolution scan depends on this."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from osmspark.grid import hexgrid as H
-    from osmspark.grid.hexgrid_sql import hex_cell_col_multires
-
-    rng = np.random.default_rng(13)
-    res_values = [12, 9, 7, 3]
-    lat = rng.uniform(-89.9, 89.9, 4000)
-    lon = rng.uniform(-180, 180, 4000)
-    pdf = pd.DataFrame({"lat": lat, "lon": lon,
-                        "res": np.array(res_values * 1000)})
-    df = spark.createDataFrame(pdf)
-    got = (df.withColumn("cell", hex_cell_col_multires(
-               F.col("lat"), F.col("lon"), F.col("res"), res_values))
-           .toPandas())
-    want = np.empty(len(got), dtype=np.int64)
-    for rv in res_values:
-        m = got["res"].to_numpy() == rv
-        want[m] = H.cell_id(got["lat"].to_numpy()[m],
-                            got["lon"].to_numpy()[m], rv)
-    assert np.array_equal(got["cell"].to_numpy(), want)
-
-
 def test_sql_parent_cols_match_numpy(spark):
-    """hex_parent_col / s2_parent_col (the rollup path, now pure SQL) are
-    bit-identical to hexgrid.parent / s2.parent across res pairs."""
+    """s2_parent_col (the S2 rollup path, pure SQL) is bit-identical to
+    the NumPy S2 parent across level pairs."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from osmspark.grid.hexgrid_sql import hex_parent_col
     from osmspark.grid.s2_sql import s2_parent_col
 
     rng = np.random.default_rng(123)
     lat = rng.uniform(-89.9, 89.9, 5000)
     lon = rng.uniform(-180, 180, 5000)
-    for child, parent in ((7, 6), (9, 5), (12, 11), (3, 0)):
-        cells = H.cell_id(lat, lon, child)
-        df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
-        got = np.array([r[0] for r in
-                        df.select(hex_parent_col(F.col("cell"), parent))
-                        .collect()])
-        assert np.array_equal(got, H.parent(cells, parent)), (child, parent)
     for child, parent in ((10, 8), (14, 6), (30, 10)):
         cells = S.cell_id(lat, lon, child).astype(np.int64)
         df = spark.createDataFrame(pd.DataFrame({"cell": cells}))

@@ -1,6 +1,5 @@
-"""with_hilbert_key / write_points_hilbert: Python xy2d oracle,
-Hilbert adjacency (the locality property Z-order lacks), pruning
-parity with the zordered layout, staged-plan sanity."""
+"""with_hilbert_key: Python xy2d oracle, Hilbert adjacency (the
+locality property Z-order lacks), staged-plan sanity."""
 
 from __future__ import annotations
 
@@ -9,8 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from osmspark.spatial.layout import (hilbert_level_sql, with_hilbert_key,
-                                     write_points_hilbert)
+from osmspark.spatial.layout import hilbert_level_sql, with_hilbert_key
 
 
 def xy2d(order: int, x: int, y: int) -> int:
@@ -78,25 +76,6 @@ def test_full_curve_is_hamiltonian_order3(spark):
     for k in range(n * n - 1):
         (x1, y1), (x2, y2) = bykey[k], bykey[k + 1]
         assert abs(x1 - x2) + abs(y1 - y2) == 1
-
-
-def test_layout_roundtrip_and_pruning(spark, tmp_path):
-    random.seed(11)
-    pts = [(i, random.uniform(0.0, 40.0), random.uniform(0.0, 40.0))
-           for i in range(20000)]
-    df = spark.createDataFrame(pts, "id long, lat double, lon double")
-    path = str(tmp_path / "hilbert_pts")
-    write_points_hilbert(df, path, partitions=8,
-                         row_group_bytes=64 * 1024)
-    from osmspark.spatial.layout import read_bbox
-    got = read_bbox(spark, path, int(10e7), int(15e7),
-                    int(10e7), int(15e7))
-    exp = [p for p in pts if 10.0 <= round(p[1] * 1e7) / 1e7 <= 15.0
-           and 10.0 <= round(p[2] * 1e7) / 1e7 <= 15.0]
-    assert got.count() == len(exp)
-    # pushed predicate reaches the parquet scan
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "lat_q" in plan and "PushedFilters" in plan
 
 
 def test_no_python_no_shuffle(spark):

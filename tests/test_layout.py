@@ -1,4 +1,5 @@
-"""Fixed-point point layout: lossless round-trip for OSM-decoded data."""
+"""Fixed-point point layout: lossless round-trip for OSM-decoded data,
+Z-order bbox pruning, day-partitioned event ranges."""
 
 from __future__ import annotations
 
@@ -6,8 +7,19 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from osmspark.spatial import (
-    read_points_fixedpoint, tile_counts, write_points_fixedpoint)
+from osmspark.spatial import dequantize_points, quantize_points
+
+
+def _write_fixedpoint(points, path, partitions=None):
+    """quantize_points → parquet, optionally repartitioned (unsorted)."""
+    q = quantize_points(points)
+    if partitions is not None:
+        q = q.repartition(partitions)
+    q.write.mode("overwrite").parquet(path)
+
+
+def _read_fixedpoint(spark, path):
+    return dequantize_points(spark.read.parquet(path))
 
 
 def _golden_nodes(spark, golden_pbf):
@@ -25,8 +37,8 @@ def test_fixedpoint_roundtrip_bit_exact_on_golden(spark, golden_pbf, tmp_path):
     rounded."""
     nodes = _golden_nodes(spark, golden_pbf)
     path = str(tmp_path / "fp")
-    write_points_fixedpoint(nodes, path)
-    back = read_points_fixedpoint(spark, path)
+    _write_fixedpoint(nodes, path)
+    back = _read_fixedpoint(spark, path)
     joined = (nodes.alias("a")
               .join(back.alias("b"), "id")
               .select(F.col("a.lat").alias("la"), F.col("b.lat").alias("lb"),
@@ -41,8 +53,8 @@ def test_fixedpoint_roundtrip_bit_exact_on_golden(spark, golden_pbf, tmp_path):
 def test_fixedpoint_many_nodes_bit_exact(spark, many_nodes_pbf, tmp_path):
     nodes = _golden_nodes(spark, many_nodes_pbf)
     path = str(tmp_path / "fp_many")
-    write_points_fixedpoint(nodes, path)
-    back = read_points_fixedpoint(spark, path)
+    _write_fixedpoint(nodes, path)
+    back = _read_fixedpoint(spark, path)
     a = nodes.select("id", "lat", "lon").toPandas().set_index("id").sort_index()
     b = back.select("id", "lat", "lon").toPandas().set_index("id").sort_index()
     assert (a["lat"].to_numpy() == b["lat"].to_numpy()).all()
@@ -52,32 +64,10 @@ def test_fixedpoint_many_nodes_bit_exact(spark, many_nodes_pbf, tmp_path):
 def test_fixedpoint_schema_is_int32(spark, golden_pbf, tmp_path):
     nodes = _golden_nodes(spark, golden_pbf)
     path = str(tmp_path / "fp_schema")
-    write_points_fixedpoint(nodes, path)
+    _write_fixedpoint(nodes, path)
     raw = spark.read.parquet(path)
     dt = dict(raw.dtypes)
     assert dt["lat_q"] == "int" and dt["lon_q"] == "int"
-
-
-def test_fixedpoint_clustered_same_rows_and_tiles(spark, tmp_path):
-    """cluster_res reorders rows only — same multiset, identical hex-tile
-    aggregation as the unclustered layout."""
-    rng = np.random.default_rng(11)
-    pdf = pd.DataFrame({
-        "id": np.arange(20_000),
-        "lat": np.concatenate([51.5 + rng.normal(0, 0.05, 10_000),
-                               48.85 + rng.normal(0, 0.05, 10_000)]),
-        "lon": np.concatenate([-0.12 + rng.normal(0, 0.05, 10_000),
-                               2.35 + rng.normal(0, 0.05, 10_000)])})
-    pts = spark.createDataFrame(pdf)
-    plain, clustered = str(tmp_path / "plain"), str(tmp_path / "clustered")
-    write_points_fixedpoint(pts, plain)
-    write_points_fixedpoint(pts, clustered, cluster_res=6, partitions=8)
-    a = read_points_fixedpoint(spark, plain)
-    b = read_points_fixedpoint(spark, clustered)
-    ta = tile_counts(a, 7, grid="hex").toPandas().set_index("cell").sort_index()
-    tb = tile_counts(b, 7, grid="hex").toPandas().set_index("cell").sort_index()
-    assert (ta["n_points"].to_numpy() == tb["n_points"].to_numpy()).all()
-    assert a.count() == b.count() == 20_000
 
 
 # ---------------------------------------------------------------------------
@@ -122,13 +112,12 @@ def test_zorder_prunes_row_groups(spark, tmp_path):
     """Z-ordered layout: >80% of row groups have min/max stats disjoint
     from a 5°×5° bbox; the same data written unsorted prunes ~nothing
     (every row group spans the world)."""
-    from osmspark.spatial.layout import (write_points_fixedpoint,
-                                         write_points_zordered)
+    from osmspark.spatial.layout import write_points_zordered
 
     pts = spark.createDataFrame(_uniform_points())
     zpath, ppath = str(tmp_path / "z"), str(tmp_path / "plain")
     write_points_zordered(pts, zpath, partitions=32)
-    write_points_fixedpoint(pts, ppath, partitions=32)
+    _write_fixedpoint(pts, ppath, partitions=32)
     zfrac = _overlap_frac(_rowgroup_stats(zpath), BBOX_Q)
     pfrac = _overlap_frac(_rowgroup_stats(ppath), BBOX_Q)
     assert zfrac < 0.2, f"z-order overlap {zfrac}"

@@ -1,5 +1,5 @@
-"""Bloom membership sketch: Python position parity, OR-mergeability,
-no-false-negatives, FPP envelope, partitioning invariance, NULLs."""
+"""Bloom membership sketch: Python position parity, no-false-negatives,
+FPP envelope, partitioning invariance, NULLs."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from osmspark.pipeline.membership import (
-    bloom_build, bloom_merge, bloom_might_contain, bloom_stats)
+    bloom_build, bloom_might_contain, bloom_stats)
 
 M, K = 256, 3
 
@@ -36,17 +36,6 @@ def test_bits_match_python(spark):
     got = bloom_build(_df(spark, vals), ["g"], "v", m=M, k=K).collect()
     assert len(got) == 1
     assert list(got[0]["bits"]) == _py_bits(vals)
-
-
-def test_merge_equals_build_over_union(spark):
-    a = [f"u-{i}" for i in range(150)]
-    b = [f"u-{i}" for i in range(100, 250)]  # overlapping halves
-    fa = bloom_build(_df(spark, a), ["g"], "v", m=M, k=K)
-    fb = bloom_build(_df(spark, b), ["g"], "v", m=M, k=K)
-    merged = bloom_merge(fa, fb).collect()[0]["bits"]
-    full = bloom_build(_df(spark, sorted(set(a) | set(b))), ["g"], "v",
-                       m=M, k=K).collect()[0]["bits"]
-    assert list(merged) == list(full)
 
 
 def test_no_false_negatives_and_fpp_envelope(spark):

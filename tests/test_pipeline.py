@@ -1,5 +1,5 @@
 """Pipeline operator tests: dedup (exact/Jaccard/MinHash-LSH/SimHash/
-cosine), ANN (brute force / LSH / IVF), multimodal plumbing.
+cosine), ANN (brute force / LSH / IVF), text statistics.
 
 Strategy mirrors the driver oracle: every approximate operator is pinned
 against a brute-force reference computed on the same synthetic corpus —
@@ -194,35 +194,6 @@ def test_ann_lsh_recall_floor(emb, queries):
     lsh = ann_lsh_topk(emb, queries, 10, dim=32)
     rec = ann_recall_vs_bruteforce(emb, queries, 10, lsh).collect()[0]
     assert rec.recall >= 0.8
-
-
-# --------------------------------------------------------------------------
-# multimodal plumbing
-# --------------------------------------------------------------------------
-
-def test_media_features_feed_ann(spark):
-    from osmspark.pipeline.multimodal import extract_features, synthesize_media
-    media = synthesize_media(spark, 30)
-    feats = extract_features(media).select(
-        F.col("media_id").alias("vec_id"),
-        F.col("features").cast("array<double>").alias("embedding"))
-    qs = feats.filter(F.col("vec_id") < 3)
-    out = ann_bruteforce_topk(feats, qs, 4).toPandas()
-    assert len(out) == 12
-    norms = feats.select(
-        F.aggregate(F.transform("embedding", lambda x: x * x),
-                    F.lit(0.0), lambda a, v: a + v).alias("n2")).toPandas()
-    assert np.allclose(norms["n2"], 1.0, atol=1e-5)
-
-
-def test_frame_sampling_counts(spark):
-    from osmspark.pipeline.multimodal import decode_media_metadata, sample_frames, synthesize_media
-    media = synthesize_media(spark, 30)
-    meta = decode_media_metadata(media).filter(F.col("kind") == "video").toPandas()
-    frames = sample_frames(media, every_ms=5000).toPandas()
-    expected = int((meta["duration_ms"] // 5000 + 1).sum())
-    assert len(frames) == expected
-    assert (frames["frame_ts_ms"] % 5000 == 0).all()
 
 
 # --------------------------------------------------------------------------

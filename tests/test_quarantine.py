@@ -14,16 +14,18 @@ from hypothesis import strategies as hs
 
 from osmspark import model
 from osmspark.pages import golden_pbf_bytes, many_nodes_pbf_bytes, pages_pandas
-from osmspark.pbf.decode import MAX_ELEMENT_SIZE, PbfError
+from osmspark.pbf.decode import (
+    MAX_ELEMENT_SIZE, PbfError, inflate_blob, split_file_blocks)
 from osmspark.pbf.encode import (
-    _len_field, _packed_signed_field, _packed_unsigned_field, _varint_field, build_file,
-    recode_file_raw)
+    _file_block, _len_field, _packed_signed_field, _packed_unsigned_field, _varint,
+    _varint_field, build_file, recode_file_raw)
 from osmspark.pbf.source import (
     decode_page,
     decode_page_quarantine,
     nodes_from_pages,
     quarantine_from_pages,
 )
+from osmspark.pbf.wire import read_field, read_varint
 
 
 def _corrupted_pages_pdf(n_pages: int = 6, nodes_per_page: int = 50):
@@ -117,10 +119,95 @@ _FUZZ_SEEDS = [golden_pbf_bytes(), many_nodes_pbf_bytes()]
 _FUZZ_SEEDS += [recode_file_raw(b) for b in _FUZZ_SEEDS]
 
 
+def _blob_header(blob_type: str, datasize: int) -> bytes:
+    return _len_field(1, blob_type.encode()) + _varint_field(3, datasize)
+
+
+def _frame(header: bytes, blob: bytes) -> bytes:
+    """One file block: 4-byte header length, BlobHeader, Blob."""
+    return len(header).to_bytes(4, "big") + header + blob
+
+
+def _varint_sites(buf: bytes):
+    """(varints, payloads) of ``buf`` read as a message — every key,
+    varint value and length prefix as (start, end), every non-empty
+    length-delimited payload as (prefix_start, start, end) — or, if it is
+    not a message, its varints read as a packed array (no payloads)."""
+    mv = memoryview(buf)
+    try:
+        varints, payloads, pos = [], [], 0
+        while pos < len(buf):
+            _, key_end = read_varint(mv, pos)
+            _, wire, _, start, end = read_field(mv, pos)
+            varints.append((pos, key_end))
+            if wire == 0:
+                varints.append((start, end))
+            elif wire == 2:
+                varints.append((key_end, start))
+                if end > start:
+                    payloads.append((key_end, start, end))
+            pos = end
+        return varints, payloads
+    except PbfError:
+        pass
+    try:
+        varints, pos = [], 0
+        while pos < len(buf):
+            _, end = read_varint(mv, pos)
+            varints.append((pos, end))
+            pos = end
+        return varints, []
+    except PbfError:
+        return [], []
+
+
+def _overlong(draw, buf: bytes) -> bytes:
+    """``buf`` with one varint re-encoded with redundant 0x80 continuation
+    bytes — 10 bytes at most (still valid) or an 11th byte (invalid) —
+    possibly inside a nested payload, whose length prefixes are then
+    re-encoded to fit."""
+    varints, payloads = _varint_sites(buf)
+    if payloads and (not varints or draw(hs.booleans())):
+        pre, start, end = draw(hs.sampled_from(payloads))
+        inner = _overlong(draw, buf[start:end])
+        return buf[:pre] + _varint(len(inner)) + inner + buf[end:]
+    if not varints:
+        return buf
+    start, end = draw(hs.sampled_from(varints))
+    n = draw(hs.integers(end - start + 1, 11))
+    v = bytearray(buf[start:end])
+    v[-1] |= 0x80
+    v += b"\x80" * (n - len(v) - 1) + b"\x00"
+    return buf[:start] + bytes(v) + buf[end:]
+
+
 @hs.composite
 def _mutated_page(draw) -> bytes:
     page = bytearray(draw(hs.sampled_from(_FUZZ_SEEDS)))
-    how = draw(hs.sampled_from(["flip", "truncate", "set"]))
+    how = draw(hs.sampled_from(["flip", "truncate", "set", "datasize", "overlong"]))
+    if how in ("datasize", "overlong"):
+        blocks = split_file_blocks(bytes(page))
+        i = draw(hs.integers(0, len(blocks) - 1))
+        frames = [_frame(_blob_header(fb.type, len(blob)), blob)
+                  for fb, blob in blocks]
+        fb, blob = blocks[i]
+        if how == "datasize":
+            # a BlobHeader that lies about its Blob's size
+            lie = draw(hs.sampled_from([0, len(blob) - 1, len(blob) + 1,
+                                        len(page), 2**32 - 1]))
+            frames[i] = _frame(_blob_header(fb.type, lie), blob)
+        else:
+            layer = draw(hs.sampled_from(["header", "blob", "block"]))
+            if layer == "header":
+                header = _overlong(draw, _blob_header(fb.type, len(blob)))
+                frames[i] = _frame(header, blob)
+            elif layer == "blob":
+                blob = _overlong(draw, blob)
+                frames[i] = _frame(_blob_header(fb.type, len(blob)), blob)
+            else:
+                frames[i] = _file_block(fb.type, _overlong(draw, inflate_blob(blob)),
+                                        compress=draw(hs.booleans()))
+        return b"".join(frames)
     if how == "flip":
         bits = hs.lists(hs.integers(0, 8 * len(page) - 1), min_size=1, max_size=4, unique=True)
         for bit in draw(bits):
@@ -135,9 +222,9 @@ def _mutated_page(draw) -> bytes:
 @settings(max_examples=300, deadline=None)
 @given(_mutated_page())
 def test_mutated_page_fails_only_with_pbf_error(page):
-    """Bit flips, truncation and boundary bytes anywhere in a real page:
-    raise mode fails with PbfError or not at all, and quarantine mode
-    never raises."""
+    """Bit flips, truncation, boundary bytes, a lying BlobHeader datasize
+    and overlong varints anywhere in a real page: raise mode fails with
+    PbfError or not at all, and quarantine mode never raises."""
     try:
         decode_page(page)
     except PbfError:

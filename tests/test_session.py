@@ -3,7 +3,12 @@ exclusion."""
 
 from __future__ import annotations
 
-from osmspark.session import INFER_FILTERS_RULE, without_inferred_join_key_filters
+import os
+
+import pytest
+
+from osmspark.session import (INFER_FILTERS_RULE, _default_driver_memory,
+                              without_inferred_join_key_filters)
 
 
 def _get(spark, key):
@@ -16,6 +21,17 @@ def _get(spark, key):
 def test_ansi_mode_pinned(spark):
     """Integer overflow must raise, whatever the deployment default."""
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+
+@pytest.mark.parametrize("phys_gib, want", [
+    (15, "3840m"),       # a quarter of the host
+    (256, "24576m"),     # capped at 24g
+    (2, "512m"),
+])
+def test_default_driver_memory_fits_host(monkeypatch, phys_gib, want):
+    sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib << 18}
+    monkeypatch.setattr(os, "sysconf", sizes.__getitem__)
+    assert _default_driver_memory() == want
 
 
 def test_rule_excluded_inside_scope_and_restored(spark):

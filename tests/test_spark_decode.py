@@ -12,7 +12,12 @@ from osmspark.pbf.source import (
     relations_from_pages,
     ways_from_pages,
 )
-from osmspark.xml.source import bounds_from_xml_pages, nodes_from_xml_pages
+from osmspark.xml.source import (
+    bounds_from_xml_pages,
+    nodes_from_xml_pages,
+    relations_from_xml_pages,
+    ways_from_xml_pages,
+)
 
 GOLDEN_URL = "https://fixture.test/doc/0"
 
@@ -95,6 +100,20 @@ def test_xml_pbf_parity_via_spark(spark, golden_xml, pages_df):
                  .filter(F.col("url") == GOLDEN_URL).orderBy("row_idx"))
     pn = [tuple(r[c] for c in common) for r in pbf_nodes.select(common).collect()]
     assert xn == pn
+
+    info = ["id", "id_str", "tags", "version", "timestamp_ms", "changeset",
+            "uid", "user"]
+    for xml_fn, pbf_fn, cols in (
+            (ways_from_xml_pages, ways_from_pages,
+             info + ["node_refs", "node_refs_str"]),
+            (relations_from_xml_pages, relations_from_pages,
+             info + ["members"])):
+        xe = [tuple(r) for r in
+              xml_fn(xml_pages).orderBy("row_idx").select(cols).collect()]
+        pe = [tuple(r) for r in
+              pbf_fn(pages_df).filter(F.col("url") == GOLDEN_URL)
+              .orderBy("row_idx").select(cols).collect()]
+        assert xe == pe and len(xe) == 1, xml_fn.__name__
 
     b = bounds_from_xml_pages(xml_pages).collect()[0]
     assert abs(b.minlat - 51.5073601795557) < 1e-12

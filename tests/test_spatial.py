@@ -6,7 +6,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from osmspark.spatial import (
-    knn_bruteforce,
     knn_join,
     pip_join,
     pip_join_bbox,
@@ -17,6 +16,23 @@ from osmspark.spatial import (
 )
 
 N = 8000
+
+
+def knn_bruteforce(points, queries, k):
+    """Exact kNN oracle: cross join + one window, the same squared
+    planar-degree distance and (dist2, p_id) tie order as knn_join."""
+    from pyspark.sql import Window
+
+    p = points.select(F.col("id").alias("p_id"),
+                      F.col("lat").alias("p_lat"), F.col("lon").alias("p_lon"))
+    q = queries.select("q_id", F.col("lat").alias("q_lat"),
+                       F.col("lon").alias("q_lon"))
+    d2 = ((F.col("q_lat") - F.col("p_lat")) * (F.col("q_lat") - F.col("p_lat"))
+          + (F.col("q_lon") - F.col("p_lon")) * (F.col("q_lon") - F.col("p_lon")))
+    w = Window.partitionBy("q_id").orderBy("dist2", "p_id")
+    return (q.crossJoin(p).withColumn("dist2", d2)
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
 
 
 @pytest.fixture(scope="module")
@@ -235,63 +251,3 @@ def test_density_sample_one_scan_exact_rate(spark, pts, tmp_path_factory):
     # target above the table size: full keep, rate exactly 1
     pdf_all, rate_all = density_sample(scan, target=10 * N)
     assert len(pdf_all) == N and rate_all == 1.0
-
-
-def test_knn_bucketed_matches_bruteforce(spark, pts, tmp_path_factory):
-    """write_points_bucketed + knn_join(part_res=...) is still exact:
-    the coarse-cover partition pruning must never drop a candidate,
-    including for boundary queries sitting on coarse-cell edges."""
-    from osmspark.spatial import knn_bruteforce, write_points_bucketed
-
-    df, _, _ = pts
-    path = str(tmp_path_factory.mktemp("bucketed") / "points")
-    write_points_bucketed(df, path, part_res=2)
-    bucketed = spark.read.parquet(path)
-    rng = np.random.default_rng(11)
-    queries = spark.createDataFrame(pd.DataFrame({
-        "q_id": np.arange(32),
-        # half dense-cluster queries, half spread across the world (some
-        # land in sparse/empty coarse cells -> retry & fallback paths)
-        "lat": np.concatenate([51.5 + rng.normal(0, 0.05, 16),
-                               rng.uniform(-60, 70, 16)]),
-        "lon": np.concatenate([-0.12 + rng.normal(0, 0.05, 16),
-                               rng.uniform(-179, 179, 16)])}))
-    bf = {tuple(r) for r in
-          knn_bruteforce(df, queries, 5).select("q_id", "p_id", "rank").collect()}
-    kb = {tuple(r) for r in
-          knn_join(bucketed, queries, 5, res=6, ring=1, part_res=2)
-          .select("q_id", "p_id", "rank").collect()}
-    assert bf == kb
-
-
-def test_knn_bucketed_scan_prunes_partitions(spark, pts, tmp_path_factory):
-    """The coarse-cover IN-filter must reach the scan as a PARTITION
-    filter (static directory pruning), and execution must actually read
-    fewer files than the full layout holds."""
-    from osmspark.spatial import write_points_bucketed
-    from osmspark.spatial.knn import _coarse_cover
-
-    df, _, _ = pts
-    path = str(tmp_path_factory.mktemp("bucketed_plan") / "points")
-    write_points_bucketed(df, path, part_res=2)
-    bucketed = spark.read.parquet(path)
-    n_files_total = len(bucketed.inputFiles())
-
-    # the exact filter shape _candidate_pass builds for a branch
-    cover = _coarse_cover(np.array([51.5]), np.array([-0.12]), r=6, ring=1,
-                          part_res=2)
-    pruned = bucketed.filter(F.col("part_cell").isin(cover))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "part_cell" in plan.split(
-        "PartitionFilters", 1)[1][:400]
-
-    files_read = (pruned.select(F.input_file_name().alias("f"))
-                  .distinct().count())
-    assert 0 < files_read < n_files_total
-    # and the pruned scan still returns every point in the cover
-    expect = (df.withColumn(
-        "part_cell",
-        __import__("osmspark.grid.hexgrid_sql", fromlist=["hex_cell_col"])
-        .hex_cell_col(F.col("lat"), F.col("lon"), 2))
-        .filter(F.col("part_cell").isin(cover)).count())
-    assert pruned.count() == expect

@@ -286,49 +286,3 @@ def test_streaming_watermark_drops_late_rows(spark, tmp_path):
               and r.window_start.hour == 0]
     assert len(closed) == 1 and closed[0].n_points == 5
     assert dropped == 2
-
-
-def test_streaming_dedup_suppresses_refetches(spark, tmp_path):
-    """stream_dedup_pages: first fetch per url passes, an in-horizon
-    re-fetch is dropped, and a NEW url after the watermark advanced
-    still passes (state is horizon-bounded, not history-bounded)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from osmspark.streaming import stream_dedup_pages, stream_pages
-
-    src = tmp_path / "pages_stream"
-    ckpt = tmp_path / "ckpt_dedup"
-    base = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
-
-    def write(rows):
-        pdf = pd.DataFrame(rows, columns=["url", "warc_ts", "html",
-                                          "text", "lang"])
-        (spark.createDataFrame(pdf)
-         .coalesce(1).write.mode("append").parquet(str(src)))
-
-    def page(url, minute):
-        return (url, base + dt.timedelta(minutes=minute),
-                b"<html>x</html>", "x", "en")
-
-    # batch 1: a, b, and a duplicate of a inside the 30 min horizon
-    write([page("http://a/", 0), page("http://b/", 1),
-           page("http://a/", 5)])
-
-    dedup = stream_dedup_pages(stream_pages(spark, str(src)),
-                               watermark="30 minutes")
-    q = (dedup.writeStream.format("memory").queryName("dedup_pages")
-         .outputMode("append").option("checkpointLocation", str(ckpt))
-         .start())
-    try:
-        q.processAllAvailable()
-        # batch 2: re-fetch of a (still duplicate vs in-state key) and
-        # a brand-new url far later (advances the watermark)
-        write([page("http://a/", 10), page("http://c/", 120)])
-        q.processAllAvailable()
-        out = spark.sql("SELECT url FROM dedup_pages").collect()
-    finally:
-        q.stop()
-    urls = sorted(r.url for r in out)
-    assert urls == ["http://a/", "http://b/", "http://c/"]

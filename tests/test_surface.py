@@ -1,0 +1,154 @@
+"""Every top-level def in ``osmspark/`` has a caller outside the tests.
+
+A module-aware AST scan (no Spark, no imports of the scanned code) over
+``osmspark/``, ``__spark_entry__.py``, ``perfbench/`` and ``tools/``:
+
+* ``from m import f`` and ``import m as a`` / ``a.f`` resolve to the
+  def's home module, through package ``__init__`` re-exports;
+* a bare name counts inside the module that defines or imports it;
+* a package ``__init__``'s re-export and an ``__all__`` entry are not
+  references — they are how a def is exported, not a use of it.
+
+A def that nothing references is library surface no query, job or
+benchmark calls. The only exceptions are in ``KEEP``: defs that stand
+for a reference-API entry, each with its SURVEY §2 row.
+"""
+
+from __future__ import annotations
+
+import ast
+import functools
+import pathlib
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+SCANNED = ["osmspark", "__spark_entry__.py", "perfbench", "tools"]
+
+# reference-API entry points (SURVEY §2 operator rows) that no query,
+# job or benchmark op calls; each is pinned by its own tests
+KEEP = {
+    "osmspark.dispatch.parse": "S1",
+    "osmspark.xml.source.nodes_from_xml_pages": "S8",
+    "osmspark.xml.source.ways_from_xml_pages": "S8",
+    "osmspark.xml.source.relations_from_xml_pages": "S8",
+    "osmspark.xml.source.bounds_from_xml_pages": "S8",
+    "osmspark.xml.http.xml_pages_from_http": "S9",
+    "osmspark.xml.http.xml_pages_from_http_distributed": "S9",
+    "osmspark.streaming.sink.sink_windowed_tiles": "S10",
+    "osmspark.pbf.source.bounds_from_pages": "F2",
+    "osmspark.streaming.source.stream_pages": "C2",
+    "osmspark.streaming.source.stream_nodes": "C2",
+    "osmspark.streaming.source.stream_windowed_tile_counts": "C2",
+}
+
+
+def _modname(path: pathlib.Path) -> str:
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _files() -> list[pathlib.Path]:
+    out = []
+    for entry in SCANNED:
+        p = ROOT / entry
+        out.extend(sorted(p.rglob("*.py")) if p.is_dir() else [p])
+    return out
+
+
+def _absolute(mod: str, is_pkg: bool, node: ast.ImportFrom) -> str:
+    if not node.level:
+        return node.module or ""
+    base = mod.split(".")
+    base = base[:len(base) - node.level + (1 if is_pkg else 0)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+class _Module:
+    def __init__(self, path: pathlib.Path):
+        self.name = _modname(path)
+        self.is_pkg = path.name == "__init__.py"
+        self.tree = ast.parse(path.read_text(), str(path))
+        self.defs = {n.name for n in self.tree.body
+                     if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
+        # local name -> dotted target ("pkg.mod" for a module alias,
+        # "pkg.mod.f" for an imported def); function-local imports may bind
+        # one name twice, so every import's target is also kept in a list
+        self.aliases: dict[str, str] = {}
+        self.imported: list[str] = []
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.asname:
+                        self.aliases[a.asname] = a.name
+                    else:
+                        head = a.name.split(".")[0]
+                        self.aliases.setdefault(head, head)
+                    self.imported.append(a.name)
+            elif isinstance(node, ast.ImportFrom):
+                src = _absolute(self.name, self.is_pkg, node)
+                for a in node.names:
+                    self.aliases[a.asname or a.name] = f"{src}.{a.name}"
+                    self.imported.append(f"{src}.{a.name}")
+
+
+@functools.cache
+def _scan() -> tuple[set[str], set[str]]:
+    """(every osmspark top-level def by dotted name, referenced names)."""
+    mods = {m.name: m for m in map(_Module, _files())}
+
+    def resolve(target: str, seen=()) -> str:
+        # follow a package __init__ re-export to the def's home module
+        mod, _, attr = target.rpartition(".")
+        m = mods.get(mod)
+        if m is not None and m.is_pkg and attr in m.aliases \
+                and target not in seen:
+            return resolve(m.aliases[attr], seen + (target,))
+        return target
+
+    defs = {f"{m.name}.{name}" for m in mods.values()
+            if m.name.startswith("osmspark") for name in m.defs}
+    used: set[str] = set()
+    for m in mods.values():
+        for node in ast.walk(m.tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                if node.id in m.defs:
+                    used.add(f"{m.name}.{node.id}")
+                elif node.id in m.aliases:
+                    used.add(resolve(m.aliases[node.id]))
+            elif isinstance(node, ast.Attribute):
+                parts = []
+                base = node
+                while isinstance(base, ast.Attribute):
+                    parts.append(base.attr)
+                    base = base.value
+                if isinstance(base, ast.Name) and base.id in m.aliases:
+                    dotted = [m.aliases[base.id]] + parts[::-1]
+                    # a.b.c.f: try every prefix as a module path
+                    for i in range(len(dotted), 0, -1):
+                        used.add(resolve(".".join(dotted[:i])))
+        # a package's own re-exports are its export list, not a use;
+        # a name imported anywhere else counts
+        if not m.is_pkg:
+            used.update(resolve(t) for t in m.imported)
+    return defs, used
+
+
+def test_every_library_def_has_a_non_test_caller():
+    defs, used = _scan()
+    dead = sorted(d for d in defs if d not in used and d not in KEEP)
+    assert not dead, (
+        "top-level defs in osmspark/ that nothing in osmspark/, "
+        "__spark_entry__.py, perfbench/ or tools/ calls — delete them, or "
+        "list a reference-API def in KEEP with its SURVEY §2 row:\n  "
+        + "\n  ".join(dead))
+
+
+def test_keep_names_existing_defs_with_a_survey_row():
+    defs, used = _scan()
+    survey = (ROOT / "SURVEY.md").read_text()
+    inventory = survey[survey.index("## 2. "):survey.index("## 3. ")]
+    for name, row in KEEP.items():
+        assert name in defs, f"KEEP lists {name}, which is not a def"
+        assert name not in used, f"{name} has a caller; drop it from KEEP"
+        assert f"| {row} |" in inventory, f"{name}: no SURVEY §2 row {row}"

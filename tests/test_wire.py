@@ -10,7 +10,7 @@ from osmspark.pbf.encode import (
 from osmspark.pbf.wire import (
     decode_packed_sint64,
     decode_packed_varints,
-    iter_fields,
+    read_field,
     read_varint,
     zigzag_decode,
 )
@@ -52,9 +52,12 @@ def test_read_varint_scalar():
 
 
 def test_iter_fields_mixed():
-    # field 1 varint=5, field 2 bytes='abc'
+    # field 1 varint=5, field 2 bytes='abc', walked with read_field
     buf = b"\x08\x05\x12\x03abc"
-    fields = [(f, w, bytes(v) if w == 2 else v) for f, w, v in iter_fields(buf)]
+    fields, pos = [], 0
+    while pos < len(buf):
+        f, w, v, _, pos = read_field(memoryview(buf), pos)
+        fields.append((f, w, bytes(v) if w == 2 else v))
     assert fields == [(1, 0, 5), (2, 2, b"abc")]
 
 

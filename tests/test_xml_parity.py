@@ -123,6 +123,31 @@ def test_unknown_format_detection():
         get_file_type("map.csv")
 
 
+def test_parse_dispatches_by_path_or_format(golden_pbf, golden_xml):
+    """parse() picks the decoder from the path extension, and an
+    explicit format= wins over the path (main.js:14-25)."""
+    from osmspark.dispatch import parse, parse_pbf
+
+    pbf = parse(golden_pbf, path="data/map.pbf")
+    assert pbf == parse_pbf(golden_pbf)
+    assert [len(pbf[k]) for k in ("nodes", "ways", "relations")] == [6, 1, 1]
+    xml = parse_osm_xml(golden_xml)
+    assert parse(golden_xml, path="data/map.osm.xml") == xml
+    assert [len(xml[k]) for k in ("nodes", "ways", "relations")] == [6, 1, 1]
+    assert parse(golden_xml, path="map.pbf", format="xml") == xml
+
+
+@pytest.mark.parametrize("kwargs, match", [
+    ({}, "format= or path="),
+    ({"format": "csv"}, "unsupported format 'csv'"),
+], ids=["neither", "unknown-format"])
+def test_parse_rejects(golden_xml, kwargs, match):
+    from osmspark.dispatch import parse
+
+    with pytest.raises(ValueError, match=match):
+        parse(golden_xml, **kwargs)
+
+
 @pytest.fixture(scope="module")
 def http_server():
     """Local http server over the fixtures dir — mirrors the reference's
