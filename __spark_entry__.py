@@ -4152,7 +4152,10 @@ def _nearest_segment_oracle_sql() -> str:
 
 def _hits_oracle_sql(n_iter: int = 4, mass: int = 10 ** 9) -> str:
     """The hits_mass integer recurrence unrolled as chained CTEs —
-    DuckDB HUGEINT products mirror the engine's decimal(38,0)."""
+    DuckDB HUGEINT products mirror the engine's decimal(38,0). Each
+    round's a/h CTE is read twice by the next round, so it is
+    MATERIALIZED: inlined, the plan doubles per round (n_iter 3 took
+    15 s to plan, n_iter 4 about 10 minutes)."""
     parts = [f"""WITH e AS (
       SELECT DISTINCT doc_id % 101 AS src, (doc_id * 31 + 7) % 101 AS dst
       FROM documents
@@ -4168,7 +4171,7 @@ def _hits_oracle_sql(n_iter: int = 4, mass: int = 10 ** 9) -> str:
     ar{i} AS (SELECT e.dst AS node, sum(h{i - 1}.s) AS raw
              FROM e JOIN h{i - 1} ON h{i - 1}.node = e.src GROUP BY 1),
     at{i} AS (SELECT sum(raw) AS tot FROM ar{i}),
-    a{i} AS (SELECT n.node,
+    a{i} AS MATERIALIZED (SELECT n.node,
                   CASE WHEN tot > 0
                        THEN CAST((CAST(coalesce(raw, 0) AS HUGEINT)
                                   * {mass}) // tot AS BIGINT)
@@ -4178,7 +4181,7 @@ def _hits_oracle_sql(n_iter: int = 4, mass: int = 10 ** 9) -> str:
     hr{i} AS (SELECT e.src AS node, sum(a{i}.s) AS raw
              FROM e JOIN a{i} ON a{i}.node = e.dst GROUP BY 1),
     ht{i} AS (SELECT sum(raw) AS tot FROM hr{i}),
-    h{i} AS (SELECT n.node,
+    h{i} AS MATERIALIZED (SELECT n.node,
                   CASE WHEN tot > 0
                        THEN CAST((CAST(coalesce(raw, 0) AS HUGEINT)
                                   * {mass}) // tot AS BIGINT)

@@ -27,7 +27,7 @@ layout; ``write_events_day_partitioned`` is the time-axis layout.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..grid.geohash_sql import _spread_bits
 

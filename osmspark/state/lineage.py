@@ -18,7 +18,6 @@ units — verified by tests/test_state.py.
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 import time

@@ -6,7 +6,6 @@ moments vs a NumPy float reference, and the degenerate NULL cases.
 """
 
 import numpy as np
-import pytest
 
 from osmspark.spatial.autocorr import morans_i
 

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from osmspark.spatial.layout import hilbert_level_sql, with_hilbert_key

@@ -9,8 +9,6 @@ duplicates), and quantization parity with the layout round rule.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-import pytest
 
 from osmspark.spatial.hull import convex_hull_edges
 

@@ -11,7 +11,6 @@ broadcast-batch join shape.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from osmspark.pipeline.dedup import (band_frame, incremental_filter,
                                      minhash_signatures)

@@ -2,7 +2,6 @@
 parity, and the no-cartesian plan pin."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from osmspark.spatial.mapmatch import explode_segments, nearest_segment_join
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from osmspark.pipeline.membership import (
     bloom_build, bloom_might_contain, bloom_stats)

@@ -2,8 +2,6 @@
 (pipeline/textstats.py) — crafted-value pins.
 """
 
-import pytest
-
 from osmspark.pipeline.textstats import top_collocations
 from osmspark.spatial import tile_mode
 

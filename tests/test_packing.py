@@ -8,7 +8,6 @@ all partitioned by bucket; only the per-bucket-totals window is global.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from osmspark.pipeline.packing import pack_sequences, prefix_sum
 

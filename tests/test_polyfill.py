@@ -6,9 +6,6 @@ ids), the center-in rule (tiny polygon → empty set), concavity (notch
 tiles excluded), and pole clamping.
 """
 
-import pytest
-from pyspark.sql import functions as F
-
 from osmspark.spatial.polyfill import polyfill_raster
 from osmspark.spatial.tiles import raster_tile_counts
 

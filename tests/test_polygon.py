@@ -5,7 +5,6 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from osmspark.spatial.polygon import polygon_metrics
 

@@ -4,7 +4,6 @@ refinement identity, negative-index correctness, bounded-explode plan."""
 from __future__ import annotations
 
 from collections import defaultdict
-from fractions import Fraction
 
 import pytest
 

@@ -3,8 +3,6 @@ ordered-pair convention, K-hat formula."""
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 import pytest

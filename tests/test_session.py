@@ -23,6 +23,11 @@ def test_ansi_mode_pinned(spark):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
 
 
+def test_call_site_capture_pinned_off(spark):
+    """No py4j round trips per Column call to record the Python call site."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 @pytest.mark.parametrize("phys_gib, want", [
     (15, "3840m"),       # a quarter of the host
     (256, "24576m"),     # capped at 24g

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from osmspark.spatial.simplify import _dp_keep, simplify_polylines
 

@@ -10,7 +10,6 @@ exchange — map-side combine, same pin as lines.py's census).
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from osmspark.pipeline.substrings import (dup_span_stats,
                                           explode_token_windows,

@@ -12,6 +12,11 @@ A module-aware AST scan (no Spark, no imports of the scanned code) over
 A def that nothing references is library surface no query, job or
 benchmark calls. The only exceptions are in ``KEEP``: defs that stand
 for a reference-API entry, each with its SURVEY §2 row.
+
+A second scan over ``osmspark/``, ``tests/``, ``tools/`` and
+``__spark_entry__.py`` fails on a module-level import whose name the
+module never reads. Package ``__init__`` re-exports and ``__all__``
+names are exports, not debris.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 SCANNED = ["osmspark", "__spark_entry__.py", "perfbench", "tools"]
+LINTED = ["osmspark", "tests", "tools", "__spark_entry__.py"]
 
 # reference-API entry points (SURVEY §2 operator rows) that no query,
 # job or benchmark op calls; each is pinned by its own tests
@@ -48,9 +54,9 @@ def _modname(path: pathlib.Path) -> str:
     return ".".join(parts)
 
 
-def _files() -> list[pathlib.Path]:
+def _files(entries: list[str] = SCANNED) -> list[pathlib.Path]:
     out = []
-    for entry in SCANNED:
+    for entry in entries:
         p = ROOT / entry
         out.extend(sorted(p.rglob("*.py")) if p.is_dir() else [p])
     return out
@@ -64,11 +70,16 @@ def _absolute(mod: str, is_pkg: bool, node: ast.ImportFrom) -> str:
     return ".".join(base + ([node.module] if node.module else []))
 
 
+@functools.cache
+def _tree(path: pathlib.Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
 class _Module:
     def __init__(self, path: pathlib.Path):
         self.name = _modname(path)
         self.is_pkg = path.name == "__init__.py"
-        self.tree = ast.parse(path.read_text(), str(path))
+        self.tree = _tree(path)
         self.defs = {n.name for n in self.tree.body
                      if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
         # local name -> dotted target ("pkg.mod" for a module alias,
@@ -152,3 +163,29 @@ def test_keep_names_existing_defs_with_a_survey_row():
         assert name in defs, f"KEEP lists {name}, which is not a def"
         assert name not in used, f"{name} has a caller; drop it from KEEP"
         assert f"| {row} |" in inventory, f"{name}: no SURVEY §2 row {row}"
+
+
+def _unused_imports(path: pathlib.Path) -> list[str]:
+    tree = _tree(path)
+    bound = {}
+    for node in tree.body:
+        if isinstance(node, ast.Import) or (
+                isinstance(node, ast.ImportFrom) and node.module != "__future__"):
+            for a in node.names:
+                bound[a.asname or a.name.split(".")[0]] = node.lineno
+    read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets):
+            read.update(e.value for e in node.value.elts)
+    rel = path.relative_to(ROOT)
+    return [f"{rel}:{line} {name}" for name, line in bound.items()
+            if name not in read]
+
+
+def test_no_unused_module_imports():
+    unused = [u for f in _files(LINTED) if f.name != "__init__.py"
+              for u in _unused_imports(f)]
+    assert not unused, (
+        "module-level imports nothing in the module reads — delete them:\n  "
+        + "\n  ".join(unused))

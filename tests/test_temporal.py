@@ -6,7 +6,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from osmspark.pipeline.temporal import asof_join, session_stats, sessionize
 

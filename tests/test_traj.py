@@ -6,8 +6,6 @@ tick emission (on-grid points emit once), exact-lerp endpoints, and
 empty-segment guards.
 """
 
-import pytest
-
 from osmspark.spatial.traj import resample_trips, speed_filter
 
 

@@ -7,8 +7,6 @@ random-graph cross-check vs a brute-force itertools enumeration.
 
 import itertools
 
-import pytest
-
 from osmspark.graph import triangle_counts
 
 

@@ -11,7 +11,6 @@ import sys
 
 import duckdb
 import numpy as np
-import pandas as pd
 
 sys.path.insert(0, ".")
 
