@@ -3169,13 +3169,18 @@ def _q_radius_gyration(spark, sf_dir):
 
 def _q_od_matrix_cells(spark, sf_dir):
     """Origin→destination trip-flow matrix (osmspark/spatial/
-    mobility.py:od_matrix), 0.5° cells: endpoints are min/max of the
+    flows.py:od_matrix), 0.5° cells: endpoints are min/max of the
     lexicographic (ts, id, cell) struct — deterministic under
     timestamp ties — then one integer-only cell-pair census. The
     oracle re-derives endpoints by asc/desc row_number windows."""
-    from osmspark.spatial.mobility import od_matrix
+    from osmspark.spatial.flows import od_matrix
     pts = _trip_points(spark, sf_dir, 40)
-    return od_matrix(pts).orderBy("o_cx", "o_cy", "d_cx", "d_cy")
+    return (od_matrix(pts)
+            .select(F.col("o_cell_x").alias("o_cx"),
+                    F.col("o_cell_y").alias("o_cy"),
+                    F.col("d_cell_x").alias("d_cx"),
+                    F.col("d_cell_y").alias("d_cy"), "n_trips")
+            .orderBy("o_cx", "o_cy", "d_cx", "d_cy"))
 
 
 def _q_location_diversity(spark, sf_dir):

@@ -1,10 +1,24 @@
 """The fixpoint driver shared by the signature-checked iterative operators.
 
-Connected components, SCC min-reach propagation, DAG layering and the
-raster hydrology loops all have the same outer shape: apply one
-DataFrame-to-DataFrame round until the state stops changing, and fail
-loudly when a round budget runs out. :func:`iterate` owns that shape
-once; each operator supplies only its round body.
+Connected components, SCC min-reach propagation, DAG layering, the
+raster hydrology loops and the frontier relaxations all have the same
+outer shape: apply one DataFrame-to-DataFrame round until the state
+stops changing, and fail loudly when a round budget runs out.
+:func:`iterate` owns that shape once; each operator supplies only its
+round body. Callers: ``graph/cc.py:cc_labels`` (and ``dedup_clusters``
+through it), ``graph/scc.py`` (min-reach and topo levels),
+``spatial/hydro.py`` (fill, accumulation, watershed) and
+``graph/sssp.py:_relax`` — weighted SSSP, and with unit weights the
+BFS behind ``shortest_hops``, ``multi_source_hops``,
+``closeness_centrality`` and ``harmonic_centrality``.
+
+Two loops stay outside on purpose. The peel loop of ``scc_labels``
+(one phase per peeled SCC batch, each running two ``iterate`` calls)
+would pay a confirming phase on ``iterate``: a prototype of it took
+283 Spark jobs against 215 on the ``tests/test_scc.py`` fixture
+(local[4]). The kcore, hits and pagerank loops run a fixed ``n_iter``
+count, so both engines stay bit-identical even before convergence; a
+convergence stop would change their output.
 
 Per round the driver lazily ``localCheckpoint``s the new state, so
 lineage never grows with the round number, and runs ONE aggregation

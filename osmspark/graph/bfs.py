@@ -2,9 +2,11 @@
 
 The unweighted shortest-path primitive (reachability with distance):
 :func:`osmspark.graph.centrality.multi_source_hops` from a one-row
-roots frame. Rounds = eccentricity of the source + one confirming
-round; the edge list is treated as UNDIRECTED (both directions
-expanded) — pass a pre-oriented list for directed semantics.
+roots frame — the unit-weight relaxation of :mod:`osmspark.graph.sssp`
+on :func:`osmspark.fixpoint.iterate`. Rounds = eccentricity of the
+source + one confirming round; the edge list is treated as UNDIRECTED
+(both directions expanded) — pass a pre-oriented list for directed
+semantics.
 """
 
 from __future__ import annotations

@@ -5,15 +5,16 @@ reference's decoded entities feed (the same edge tables pagerank.py and
 bfs.py consume; reference scope ends at entity decode —
 lib/pbfParser.js — so this is consumer-side graph analytics).
 
-Multi-source BFS carries (root, node) STATE through the same frontier
-discipline as a single-source BFS — one edge equi-join per round,
-first-settle-wins layers, localCheckpoint as both materialization
-barrier and convergence probe — but expands ALL roots simultaneously:
-rounds = max eccentricity over the roots, not |roots|·ecc sequential
-sweeps. State size is O(|roots|·reach), which is exactly the scale
-lever: exact closeness for every node is O(n·m) on ANY engine, so at
-web scale you pass a sampled/landmark root set (the standard
-pivot-closeness estimator) and the operator is linear in |roots|.
+Multi-source BFS is the unit-weight case of the keyed relaxation in
+:mod:`osmspark.graph.sssp`: (root, node) STATE on
+:func:`osmspark.fixpoint.iterate`, one edge equi-join per round from
+the nodes that improved last round — but it expands ALL roots
+simultaneously: rounds = max eccentricity over the roots, not
+|roots|·ecc sequential sweeps. State size is O(|roots|·reach), which
+is exactly the scale lever: exact closeness for every node is O(n·m)
+on ANY engine, so at web scale you pass a sampled/landmark root set
+(the standard pivot-closeness estimator) and the operator is linear in
+|roots|.
 
 Exactness: distances are int hops; ``n_reached`` and ``sum_dist`` are
 exact int64 aggregates (order-insensitive), and ``closeness`` =
@@ -28,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .sssp import _relax
+
 __all__ = ["multi_source_hops", "closeness_centrality",
            "harmonic_centrality"]
 
@@ -41,38 +44,18 @@ def multi_source_hops(edges: DataFrame, roots: DataFrame,
     semantics); unreachable (root, node) pairs are absent.
 
     ``roots``: single-column DataFrame of root ids (deduplicated here).
-    Rounds = max root eccentricity + one round that settles nothing,
-    so ``max_rounds`` must exceed the largest eccentricity; raises
+    Rounds = max root eccentricity + one confirming round, so
+    ``max_rounds`` must exceed the largest eccentricity; raises
     ``RuntimeError`` otherwise instead of returning partial distances.
     """
-    both = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    arcs = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
             .union(edges.select(F.col(dst).alias("u"),
                                 F.col(src).alias("v")))
             .filter(F.col("u") != F.col("v"))
-            .distinct())
-
-    settled = (roots.toDF("root").distinct()
-               .select("root", F.col("root").alias("node"),
-                       F.lit(0).cast("int").alias("dist")))
-    settled = settled.localCheckpoint()
-    frontier = settled
-    for r in range(1, max_rounds + 1):
-        nxt = (both.join(frontier.withColumnRenamed("node", "u"),
-                         "u")
-               .select("root", F.col("v").alias("node"))
-               .distinct()
-               .join(settled.select("root", "node"),
-                     ["root", "node"], "left_anti")
-               .withColumn("dist", F.lit(r).cast("int")))
-        # one action per round: materializes the frontier AND detects
-        # convergence
-        nxt = nxt.localCheckpoint()
-        if nxt.count() == 0:
-            return settled
-        settled = settled.union(nxt).localCheckpoint()
-        frontier = nxt
-    raise RuntimeError(
-        f"multi_source_hops did not converge in {max_rounds} rounds")
+            .withColumn("w", F.lit(1)))
+    hops = _relax("multi_source_hops", arcs, roots.toDF("root"),
+                  max_rounds)
+    return hops.withColumn("dist", F.col("dist").cast("int"))
 
 
 def closeness_centrality(edges: DataFrame, roots: DataFrame,

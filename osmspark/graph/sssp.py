@@ -9,17 +9,19 @@ non-negative INTEGER weights, so every tentative distance is an exact
 int64 and the result is bit-identical under any partitioning — the
 same exactness discipline as the integer-mass PageRank.
 
-Frontier-pruned Bellman-Ford: only nodes whose distance IMPROVED last
-round re-relax their out-edges (delta-stepping's work-skipping without
-its bucket ordering — ordering is irrelevant here because rounds are
-synchronous joins, not a priority queue). Each round is one equi-join
-(frontier × edges, frontier is the small side) + one combinable
-``min`` aggregate + an anti-improvement filter against the settled
-map; the loop stops when a round improves nothing. Round count = max
-hop count over all optimal paths (≤ V−1 in theory; small for
-real networks where heavy detours don't win); a run that exhausts
-``max_rounds`` with a non-empty frontier raises. The settled table is
-checkpointed per round, so lineage never grows with the round number.
+Frontier-pruned Bellman-Ford on :func:`osmspark.fixpoint.iterate`:
+only nodes whose distance IMPROVED last round (``hot``) re-relax their
+out-edges (delta-stepping's work-skipping without its bucket ordering
+— ordering is irrelevant here because rounds are synchronous joins,
+not a priority queue). Each round is one equi-join (hot rows × arcs)
+and one combinable ``min(struct(dist, f))`` aggregate over the
+candidates and the old state, so a node turns hot again only on a
+strict improvement. The same relaxation, keyed by a root column and
+run with unit weights, is the multi-source BFS behind
+:mod:`osmspark.graph.centrality`. Round count = max hop count over all
+optimal paths (≤ V−1 in theory; small for real networks where heavy
+detours don't win) plus one confirming round; a run that exhausts
+``max_rounds`` first raises.
 
 Weights must be NON-NEGATIVE integers (validated per-row inside the
 relaxation expression: a negative weight poisons the run with an
@@ -30,7 +32,42 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..fixpoint import iterate
+
 __all__ = ["shortest_paths"]
+
+
+def _relax(name: str, arcs: DataFrame, roots: DataFrame,
+           max_rounds: int) -> DataFrame:
+    """(root, node, dist) — least total ``w`` over the ``(u, v, w)``
+    arcs from each distinct root to every node it reaches (the root
+    itself at dist 0). A path of L arcs needs ``max_rounds >= L + 1``;
+    raises ``RuntimeError("<name> did not converge in N rounds")``
+    otherwise."""
+    # seed ``node`` with the type the first round's union widens it to,
+    # so an unchanged state also hashes unchanged
+    node_t = roots.union(arcs.select("v")).schema[0].dataType
+    state = (roots.distinct()
+             .select("root", F.col("root").cast(node_t).alias("node"),
+                     F.lit(0).cast("long").alias("dist"),
+                     F.lit(True).alias("hot")))
+
+    def step(s: DataFrame) -> DataFrame:
+        cand = (s.filter("hot")
+                .select("root", F.col("node").alias("u"), "dist")
+                .join(arcs, "u")
+                .select("root", F.col("v").alias("node"),
+                        (F.col("dist") + F.col("w")).alias("dist"),
+                        F.lit(1).alias("f")))
+        best = (s.select("root", "node", "dist", F.lit(0).alias("f"))
+                .union(cand)
+                .groupBy("root", "node")
+                .agg(F.min(F.struct("dist", "f")).alias("m")))
+        return best.select("root", "node", "m.dist",
+                           (F.col("m.f") == 1).alias("hot"))
+
+    return iterate(name, state, step, ("root", "node", "dist"),
+                   max_rounds).drop("hot")
 
 
 def shortest_paths(edges: DataFrame, source, src: str = "src",
@@ -55,28 +92,5 @@ def shortest_paths(edges: DataFrame, source, src: str = "src",
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"),
                      w.alias("w")))
     both = both.filter(F.col("u") != F.col("v"))
-
-    spark = edges.sparkSession
-    settled = spark.createDataFrame([(source, 0)], ["node", "dist"]) \
-        .withColumn("dist", F.col("dist").cast("long"))
-    frontier = settled
-    for _ in range(max_rounds):
-        cand = (both.join(frontier.withColumnRenamed("node", "u"), "u")
-                .select(F.col("v").alias("node"),
-                        (F.col("dist") + F.col("w")).alias("nd"))
-                .groupBy("node").agg(F.min("nd").alias("nd")))
-        improved = (cand.join(settled, "node", "left")
-                    .filter(F.col("dist").isNull()
-                            | (F.col("nd") < F.col("dist")))
-                    .select("node", F.col("nd").alias("dist")))
-        # one action per round: materializes the frontier AND detects
-        # convergence (no separate count job)
-        improved = improved.localCheckpoint()
-        if improved.count() == 0:
-            return settled
-        settled = (settled.union(improved)
-                   .groupBy("node").agg(F.min("dist").alias("dist"))
-                   .localCheckpoint())
-        frontier = improved
-    raise RuntimeError(
-        f"shortest_paths did not converge in {max_rounds} rounds")
+    seed = edges.sparkSession.createDataFrame([(source,)], ["root"])
+    return _relax("shortest_paths", both, seed, max_rounds).drop("root")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..graph.cc import cc_labels
+from .ann import _bucket_udf, _cosine_cols, _hyperplanes
 
 __all__ = ["exact_dedup", "ngram_jaccard_pairs", "minhash_signatures",
            "lsh_candidate_pairs", "simhash_signatures", "simhash_pairs",
@@ -137,20 +138,16 @@ def _is_bare_scan(df: DataFrame) -> bool:
         return False
 
 
-def _spread_for_udf(df: DataFrame, spread: bool | None = None) -> DataFrame:
+def _spread_for_udf(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the input is narrower than the
     cluster: the signature UDFs are CPU-bound, and a source that arrived
     as one small file (common for tiny dims / test fixtures) would pin
     the whole batch on one core. A warehouse-scale input already has
     ≥ parallelism partitions and passes through untouched — no shuffle.
 
-    ``spread=None`` (default) applies the heuristic only to bare-scan
-    inputs, where the partition-count probe is cheap; pass ``True`` to
-    force the spread on a derived input (you know it's narrow) or
-    ``False`` to skip the probe entirely."""
-    if spread is False:
-        return df
-    if spread is None and not _is_bare_scan(df):
+    Applies only to bare-scan inputs, where the partition-count probe
+    is cheap; a derived input passes through unprobed."""
+    if not _is_bare_scan(df):
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
@@ -188,13 +185,12 @@ def _batch_gram_hashes(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
 
 def minhash_signatures(df: DataFrame, n_hashes: int = 64, ngram: int = 3,
                        text_col: str = "text", id_col: str = "doc_id",
-                       seed: int = 42, spread: bool | None = None
-                       ) -> DataFrame:
+                       seed: int = 42) -> DataFrame:
     """(id, signature array<long>) via vectorized universal hashing:
-    min over shingles of ((a·h + b) mod 2^61−1). ``spread`` is forwarded
-    to :func:`_spread_for_udf` (None = spread bare scans only)."""
+    min over shingles of ((a·h + b) mod 2^61−1). A narrow bare-scan
+    input is spread first (:func:`_spread_for_udf`)."""
     a_par, b_par = _minhash_params(n_hashes, seed)
-    df = _spread_for_udf(df, spread)
+    df = _spread_for_udf(df)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig(texts: pd.Series) -> pd.Series:
@@ -349,10 +345,9 @@ def incremental_filter(new_docs: DataFrame, corpus_docs: DataFrame,
 # --------------------------------------------------------------------------
 
 def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       spread: bool | None = None) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash over token hashes (vectorized bit-vote)."""
-    df = _spread_for_udf(df, spread)
+    df = _spread_for_udf(df)
 
     @F.pandas_udf(T.LongType())
     def sim(texts: pd.Series) -> pd.Series:
@@ -393,8 +388,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     return df.select(F.col(id_col).alias("id"), sim(F.col(text_col)).alias("simhash"))
 
 
-def simhash_pairs(sigs: DataFrame, max_hamming: int = 3,
-                  materialize: bool = True) -> DataFrame:
+def simhash_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Pairs with Hamming(simhash) ≤ max_hamming via chunk bucketing.
 
     COMPLETENESS requires the chunk count to follow the threshold: with
@@ -407,11 +401,9 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = 3,
     exact Hamming distance filters in-bucket."""
     if not 0 <= max_hamming < 64:
         raise ValueError("max_hamming must be in [0, 64)")
-    if materialize:
-        # same single-computation device as lsh_candidate_pairs — and the
-        # same fault-tolerance trade-off (see its docstring): prefer
-        # materialize=False on a multi-executor cluster / stored tables
-        sigs = sigs.localCheckpoint(eager=False)
+    # same single-computation device as lsh_candidate_pairs — and the
+    # same fault-tolerance trade-off (see its docstring)
+    sigs = sigs.localCheckpoint(eager=False)
     n_chunks = max_hamming + 1
     sizes = [64 // n_chunks + (1 if i < 64 % n_chunks else 0)
              for i in range(n_chunks)]
@@ -486,13 +478,7 @@ def cosine_neardup_pairs(emb: DataFrame, threshold: float,
     a = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
     b = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
     pairs = a.crossJoin(b).filter(F.col("a") < F.col("b"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform("va", lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform("vb", lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return (pairs.withColumn("cosine", F.round(dot / (na * nb), 6))
+    return (pairs.withColumn("cosine", F.round(_cosine_cols(), 6))
             .filter(F.col("cosine") >= threshold)
             .select("a", "b", "cosine"))
 
@@ -520,7 +506,6 @@ def cosine_neardup_lsh(emb: DataFrame, threshold: float,
     so buckets stay small (expected bucket size n / 2^n_bits); the
     recall/cost trade is (n_bits, n_tables), same knobs as the ANN LSH
     index (`osmspark/pipeline/ann.py`)."""
-    from osmspark.pipeline.ann import _bucket_udf, _cosine_cols, _hyperplanes
     planes = _hyperplanes(dim, n_bits, n_tables, seed)
     bud = _bucket_udf(planes)
     ids = (emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))

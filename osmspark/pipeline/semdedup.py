@@ -16,8 +16,8 @@ Spark-first shape:
    is the in-repo k-means; tests use the embeddings table's ``label``.
 2. Candidate pairs are a self-EQUI-join on the cluster id (one shuffle
    per side, co-partitioned; never a cross join) filtered to
-   ``a < b``; the exact cosine and its threshold test reuse the
-   ``zip_with``/``aggregate`` expressions proven hash-exact against
+   ``a < b``; the exact cosine is ``ann._cosine_cols``, the
+   ``zip_with``/``aggregate`` expression proven hash-exact against
    DuckDB's ``list_cosine_similarity`` in ``dedup.cosine_neardup_pairs``.
 3. The keep decision is the greedy min-id rule: drop x iff some
    cluster-mate y with y.id < x.id has cosine(x, y) ≥ threshold —
@@ -39,17 +39,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .ann import _cosine_cols
+
 __all__ = ["semdedup_pairs", "semdedup_keep"]
-
-
-def _cosine(va: str, vb: str):
-    dot = F.aggregate(F.zip_with(va, vb, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(va, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(vb, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return F.round(dot / (na * nb), 6)
 
 
 def semdedup_pairs(emb: DataFrame, threshold: float,
@@ -63,7 +55,7 @@ def semdedup_pairs(emb: DataFrame, threshold: float,
     b = emb.select(F.col(cluster_col).alias("cluster"),
                    F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
     pairs = (a.join(b, "cluster").filter(F.col("a") < F.col("b"))
-             .withColumn("cosine", _cosine("va", "vb"))
+             .withColumn("cosine", F.round(_cosine_cols(), 6))
              .filter(F.col("cosine") >= threshold))
     return pairs.select("cluster", "a", "b", "cosine")
 

@@ -52,8 +52,7 @@ __all__ = ["dbscan", "st_dbscan"]
 
 
 def dbscan(points: DataFrame, eps: float, min_pts: int,
-           id_col: str = "id", max_iters: int = 30,
-           materialize: bool = True) -> DataFrame:
+           id_col: str = "id", max_iters: int = 30) -> DataFrame:
     """(id, is_core, cluster_id) DBSCAN labels for every input point.
 
     ``points``: (id, lat, lon). ``cluster_id`` is the min core id of
@@ -62,13 +61,12 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     pointer-jumping rounds (covers diameter ~3^max_iters — see
     ``cc_labels``; it raises rather than return split clusters).
 
-    ``materialize`` (default) lazily local-checkpoints the eps-pair
-    table, which downstream consumes three times (degree, core-core
-    edges, border assignment) — without it the grid join recomputes
-    per consumer. Same fault-tolerance trade-off as
-    ``dedup.lsh_candidate_pairs``: localCheckpoint truncates lineage,
-    so on a multi-executor cluster prefer ``materialize=False`` (or
-    persist the pair table yourself) to keep recomputability.
+    The eps-pair table is lazily local-checkpointed, since downstream
+    consumes it three times (degree, core-core edges, border
+    assignment) — without it the grid join recomputes per consumer.
+    Same fault-tolerance trade-off as ``dedup.lsh_candidate_pairs``:
+    localCheckpoint truncates lineage, so an executor loss mid-job
+    fails the job instead of recomputing.
     """
     if min_pts < 1:
         raise ValueError(f"min_pts must be >= 1: {min_pts}")
@@ -77,9 +75,8 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
                         F.col("lon").cast("double"))
     # all ordered eps-pairs INCLUDING the (p, p) diagonal — so the
     # per-a_id count is |N_eps(p)| with p itself, the textbook measure
-    pairs = dwithin_join(pts, pts, eps, keep_self=True).select("a_id", "b_id")
-    if materialize:
-        pairs = pairs.localCheckpoint(eager=False)
+    pairs = (dwithin_join(pts, pts, eps, keep_self=True)
+             .select("a_id", "b_id").localCheckpoint(eager=False))
 
     c = float(eps) / math.sqrt(2.0)
     cell = [(F.floor(F.col("lon") / c)).cast("long").alias("_cx"),
@@ -155,8 +152,7 @@ def _labels_from_pairs(pts, pairs, cell, cell_keys, min_pts, max_iters):
 
 def st_dbscan(points: DataFrame, eps: float, eps_t_us: int,
               min_pts: int, id_col: str = "id",
-              max_iters: int = 30,
-              materialize: bool = True) -> DataFrame:
+              max_iters: int = 30) -> DataFrame:
     """ST-DBSCAN (Birant & Kut 2007, public algorithm): DBSCAN whose
     eps-neighborhood requires BOTH dist² ≤ eps² and |Δt| ≤ eps_t —
     clusters that are dense in space AND time (an event swarm at one
@@ -185,9 +181,7 @@ def st_dbscan(points: DataFrame, eps: float, eps_t_us: int,
                         F.col("lon").cast("double"),
                         F.col("ts_us").cast("long"))
     pairs = (colocate_join(pts, pts, eps, eps_t_us, keep_self=True)
-             .select("a_id", "b_id"))
-    if materialize:
-        pairs = pairs.localCheckpoint(eager=False)
+             .select("a_id", "b_id").localCheckpoint(eager=False))
 
     c = float(eps) / math.sqrt(2.0)
     cell = [(F.floor(F.col("lon") / c)).cast("long").alias("_cx"),

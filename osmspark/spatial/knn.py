@@ -77,6 +77,9 @@ SEED = 42
 SAFETY = 2.0
 # cap on scan branches (resolution levels) in one candidate pass
 MAX_GROUPS = 4
+# knn_broadcast distance-matrix tile: queries × points per batch chunk
+_Q_CHUNK = 256
+_P_CHUNK = 16384
 
 
 def _dist2(qlat, qlon, plat, plon):
@@ -96,8 +99,7 @@ def _empty_result(spark) -> DataFrame:
 
 
 def knn_broadcast(points: DataFrame, queries_pdf: pd.DataFrame, k: int,
-                  point_id: str = "id", q_chunk: int = 256,
-                  p_chunk: int = 16384) -> DataFrame:
+                  point_id: str = "id") -> DataFrame:
     """Exact kNN, queries broadcast in-closure, map-side partial top-k.
 
     ``queries_pdf`` is a driver-side pandas frame (q_id, lat, lon) — the
@@ -121,11 +123,11 @@ def knn_broadcast(points: DataFrame, queries_pdf: pd.DataFrame, k: int,
             if n == 0:
                 continue
             out_q, out_p, out_d = [], [], []
-            for ps in range(0, n, p_chunk):
-                pe = min(ps + p_chunk, n)
+            for ps in range(0, n, _P_CHUNK):
+                pe = min(ps + _P_CHUNK, n)
                 pla, plo = p_lat[ps:pe], p_lon[ps:pe]
-                for qs in range(0, len(q_id), q_chunk):
-                    qe = min(qs + q_chunk, len(q_id))
+                for qs in range(0, len(q_id), _Q_CHUNK):
+                    qe = min(qs + _Q_CHUNK, len(q_id))
                     dla = q_lat[qs:qe][None, :] - pla[:, None]
                     dlo = q_lon[qs:qe][None, :] - plo[:, None]
                     d2 = dla * dla + dlo * dlo

@@ -1,7 +1,8 @@
 """Per-user mobility metrics over trajectory point tables.
 
 The three summary statistics every human-mobility study computes from
-raw fixes (González et al. 2008's r_g; OD matrices; visit diversity) —
+raw fixes (González et al. 2008's r_g; OD matrices, built on
+:func:`osmspark.spatial.flows.od_matrix`; visit diversity) —
 downstream of the decode surface the reference provides
 (`lib/pbfParser.js` emits entity rows only; these consume them).
 
@@ -22,7 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-__all__ = ["radius_of_gyration", "od_matrix", "location_diversity",
+from .flows import od_matrix
+
+__all__ = ["radius_of_gyration", "location_diversity",
            "cell_transitions", "home_location", "jump_lengths",
            "k_anonymous_cells", "od_gravity"]
 
@@ -75,34 +78,6 @@ def radius_of_gyration(points: DataFrame, user_col: str = "trip_id",
     return g.select(F.col("user"),
                     F.col("n").alias("n_points"),
                     F.round(rg, 9).alias("rg_deg"))
-
-
-def od_matrix(points: DataFrame, cell_deg: float = 0.5,
-              user_col: str = "trip_id", ts_col: str = "ts_us",
-              id_col: str = "id", lat_col: str = "lat",
-              lon_col: str = "lon") -> DataFrame:
-    """Origin→destination flow matrix: each trip contributes one flow
-    from its FIRST fix's cell to its LAST fix's cell (ties on the
-    timestamp broken by the point id — a total order, so the endpoint
-    choice is deterministic on any engine), then flows aggregate per
-    (origin cell, destination cell).
-
-    Both reductions are min/max of a lexicographic struct — combinable,
-    order-insensitive, exact — so the whole operator is two shuffles
-    (trip endpoints, then cell-pair counts) with integer-only state.
-    Output: (o_cx, o_cy, d_cx, d_cy, n_trips).
-    """
-    inv = F.lit(1.0 / cell_deg)
-    pt = F.struct(F.col(ts_col).alias("ts"), F.col(id_col).alias("pid"),
-                  F.floor(F.col(lon_col) * inv).cast("long").alias("cx"),
-                  F.floor(F.col(lat_col) * inv).cast("long").alias("cy"))
-    ends = (points.groupBy(F.col(user_col).alias("trip"))
-            .agg(F.min(pt).alias("o"), F.max(pt).alias("d")))
-    return (ends.groupBy(F.col("o.cx").alias("o_cx"),
-                         F.col("o.cy").alias("o_cy"),
-                         F.col("d.cx").alias("d_cx"),
-                         F.col("d.cy").alias("d_cy"))
-            .agg(F.count(F.lit(1)).alias("n_trips")))
 
 
 def location_diversity(points: DataFrame, cell_deg: float = 0.5,
@@ -314,7 +289,8 @@ def od_gravity(points: DataFrame, cell_deg: float = 0.5,
         E[T_od] = O_o · D_d / T
 
     (O = trips out of the origin cell, D = trips into the destination
-    cell, T = total trips) against the observed ``od_matrix`` counts.
+    cell, T = total trips) against the observed
+    :func:`osmspark.spatial.flows.od_matrix` counts.
     Over-expectation links (residual ≫ 0) are the corridors.
 
     All marginals are exact integer censuses on top of the SAME
@@ -324,9 +300,12 @@ def od_gravity(points: DataFrame, cell_deg: float = 0.5,
     Output: (o_cx, o_cy, d_cx, d_cy, n_trips, o_out, d_in, expected,
     residual).
     """
-    flows = od_matrix(points, cell_deg=cell_deg, user_col=user_col,
-                      ts_col=ts_col, id_col=id_col, lat_col=lat_col,
-                      lon_col=lon_col)
+    flows = od_matrix(points, trip_col=user_col, ts_col=ts_col,
+                      id_col=id_col, lat_col=lat_col, lon_col=lon_col,
+                      cell_deg=cell_deg).select(
+        F.col("o_cell_x").alias("o_cx"), F.col("o_cell_y").alias("o_cy"),
+        F.col("d_cell_x").alias("d_cx"), F.col("d_cell_y").alias("d_cy"),
+        "n_trips")
     o_marg = (flows.groupBy("o_cx", "o_cy")
               .agg(F.sum("n_trips").alias("o_out")))
     d_marg = (flows.groupBy("d_cx", "d_cy")

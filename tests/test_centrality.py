@@ -141,3 +141,13 @@ def test_frontier_budget_raises_instead_of_truncating(spark):
     got = {int(r.node): int(r.dist)
            for r in shortest_hops(path, 0, max_rounds=7).collect()}
     assert got == {i: i for i in range(7)}
+
+
+def test_isolated_root_of_narrower_type_needs_one_round(spark):
+    # an int root over long edges reaches nothing: one confirming round
+    # suffices, whatever type the first round's union widens node to
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    root = spark.createDataFrame([(99,)], "root int")
+    got = [tuple(r) for r in multi_source_hops(edges, root,
+                                               max_rounds=1).collect()]
+    assert got == [(99, 99, 0)]

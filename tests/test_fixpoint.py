@@ -1,7 +1,11 @@
 """The shared fixpoint driver: round budget (k changing steps + one
-confirming step) and the non-convergence error naming the loop."""
+confirming step), the non-convergence error naming the loop, and the
+rule that no other module runs a ``max_rounds`` loop of its own."""
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,3 +38,26 @@ def test_raises_with_name_at_k_rounds(spark):
                        match="counter did not converge in 3 rounds"):
         iterate("counter", state, step, ("i", "x"), max_rounds=3)
 
+
+def _max_rounds_loops(path: pathlib.Path) -> list[int]:
+    """Lines of ``for ... in range(... max_rounds ...)`` loops."""
+    lines = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        it = getattr(node, "iter", None)
+        if (isinstance(node, (ast.For, ast.comprehension))
+                and isinstance(it, ast.Call)
+                and isinstance(it.func, ast.Name) and it.func.id == "range"
+                and any(isinstance(n, ast.Name) and n.id == "max_rounds"
+                        for a in it.args for n in ast.walk(a))):
+            lines.append(it.lineno)
+    return lines
+
+
+def test_no_round_loop_outside_fixpoint():
+    # every operator with a ``max_rounds`` budget runs on iterate; a
+    # hand-rolled round loop would bring back its own probe and raise
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "osmspark"
+    found = [f"{p.relative_to(pkg.parent)}:{line}"
+             for p in sorted(pkg.rglob("*.py")) if p.name != "fixpoint.py"
+             for line in _max_rounds_loops(p)]
+    assert not found, f"round loops outside fixpoint.py: {found}"

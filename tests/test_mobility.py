@@ -2,15 +2,16 @@
 
 Pins each statistic against a NumPy float reference on irregular
 point sets, the exact-integer edge cases (single fix, constant
-location), and the deterministic endpoint tie-break in od_matrix.
+location), and the deterministic endpoint tie-break in
+flows.od_matrix, which od_gravity builds on.
 """
 
 import math
 
 import numpy as np
 
-from osmspark.spatial.mobility import (location_diversity, od_matrix,
-                                       radius_of_gyration)
+from osmspark.spatial.flows import od_matrix
+from osmspark.spatial.mobility import location_diversity, radius_of_gyration
 
 SCHEMA = "trip_id long, ts_us long, id long, lat double, lon double"
 
@@ -60,8 +61,8 @@ def test_od_matrix_endpoints_and_ties(spark):
         # trip 3: same O and D cell as trip 1
         (3, 10, 7, 0.4, 0.4), (3, 20, 8, 3.9, 3.9),
     ]
-    got = {(r["o_cx"], r["o_cy"], r["d_cx"], r["d_cy"]): r["n_trips"]
-           for r in od_matrix(
+    got = {(r["o_cell_x"], r["o_cell_y"], r["d_cell_x"], r["d_cell_y"]):
+           r["n_trips"] for r in od_matrix(
                spark.createDataFrame(pts, SCHEMA)).collect()}
     assert got[(0, 0, 7, 7)] == 2          # trips 1 and 3
     assert got[(0, 0, 16, 16)] == 1        # trip 2: id 4 -> id 6
@@ -73,7 +74,8 @@ def test_od_matrix_single_point_trip_self_flow(spark):
     got = od_matrix(spark.createDataFrame(pts, SCHEMA)).collect()
     assert len(got) == 1
     r = got[0]
-    assert (r["o_cx"], r["o_cy"]) == (r["d_cx"], r["d_cy"]) == (2, 2)
+    assert ((r["o_cell_x"], r["o_cell_y"])
+            == (r["d_cell_x"], r["d_cell_y"]) == (2, 2))
 
 
 def test_location_diversity_matches_reference(spark):
