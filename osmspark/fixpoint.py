@@ -20,34 +20,58 @@ would pay a confirming phase on ``iterate``: a prototype of it took
 count, so both engines stay bit-identical even before convergence; a
 convergence stop would change their output.
 
-Per round the driver lazily ``localCheckpoint``s the new state, so
-lineage never grows with the round number, and runs ONE aggregation
-that both materializes that checkpoint and computes the convergence
-signature: row count + two independent order-insensitive xxhash64 sums
-over the state's key columns. A false "stable" needs a simultaneous
-collision of both 64-bit sums AND the count (~2^-128, vs ~2^-64 for a
-single sum). An exact symmetric-difference check would cost two extra
-anti-join jobs per round, which dominated wall time on small graphs.
-The sums are taken as ``decimal(38,0)`` so they cannot overflow.
+Each round is ONE Spark query: the step's output carries an
+``Observation`` of the convergence signature and is checkpointed
+eagerly (``observe(...).localCheckpoint(eager=True)``), so lineage
+never grows with the round number and the signature is collected by
+the job that materializes the checkpoint. The signature is the row
+count plus two independent order-insensitive xxhash64 sums over the
+state's key columns. A false "stable" needs a simultaneous collision of
+both 64-bit sums AND the count (~2^-128, vs ~2^-64 for a single sum).
+An exact symmetric-difference check would cost two extra anti-join
+jobs per round, which dominated wall time on small graphs. The sums
+are taken as ``decimal(38,0)`` so they cannot overflow.
+
+The checkpoint is eager because under AQE a lazy ``localCheckpoint``
+call already runs the round's shuffle map stages, so a lazy checkpoint
+plus a separate signature aggregation is two queries per round, not
+one: 2k + 4 jobs for a shuffle-free state that changes in k steps,
+against k + 2 here (pinned by ``tests/test_fixpoint.py``).
+
+Because the sums hash typed values, an ``int`` and the same ``long``
+hash differently. A step whose output changes a column's type would
+make an unchanged state look changed, so :func:`iterate` raises
+``TypeError`` when a step's output schema differs from the state's
+(names and types; nullability is ignored).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 __all__ = ["iterate"]
 
 
-def _signature(df: DataFrame, cols: Sequence[str]) -> tuple:
+def _observed(df: DataFrame, cols: Sequence[str]) -> tuple[DataFrame, tuple]:
+    """``df`` checkpointed by one job that also returns its signature."""
     rev = tuple(reversed(cols))
-    row = df.select(
+    obs = Observation()
+    out = df.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h1"),
         F.sum(F.xxhash64(*rev, F.lit(7))
-              .cast("decimal(38,0)")).alias("h2")).collect()[0]
-    return tuple(row)
+              .cast("decimal(38,0)")).alias("h2")).localCheckpoint(eager=True)
+    got = obs.get
+    return out, (got["n"], got["h1"], got["h2"])
+
+
+def _fields(df: DataFrame) -> str:
+    """Column names and types in order; ``simpleString`` drops nullability."""
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                     for f in df.schema)
 
 
 def iterate(name: str, state: DataFrame,
@@ -62,13 +86,17 @@ def iterate(name: str, state: DataFrame,
     returned. So a state that changes in k steps needs
     ``max_rounds >= k + 1`` (k changing steps plus one confirming
     step). Raises ``RuntimeError("<name> did not converge in
-    <max_rounds> rounds")`` when the budget runs out first.
+    <max_rounds> rounds")`` when the budget runs out first, and
+    ``TypeError`` when a step changes a column's name or type.
     """
-    state = state.localCheckpoint(eager=False)
-    sig = _signature(state, cols)
+    state, sig = _observed(state, cols)
+    fields = _fields(state)
     for _ in range(max_rounds):
-        new = step(state).localCheckpoint(eager=False)
-        new_sig = _signature(new, cols)
+        new = step(state)
+        if (got := _fields(new)) != fields:
+            raise TypeError(f"{name}: a step changed the state schema "
+                            f"from ({fields}) to ({got})")
+        new, new_sig = _observed(new, cols)
         if new_sig == sig:
             return new
         state, sig = new, new_sig

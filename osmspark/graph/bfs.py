@@ -11,6 +11,7 @@ semantics.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 
 from .centrality import multi_source_hops
@@ -23,6 +24,6 @@ def shortest_hops(edges: DataFrame, source, src: str = "src",
     """(node, dist) for every node reachable from ``source`` (the
     source itself at dist 0). Unreachable nodes are absent. Raises if
     ``max_rounds`` does not exceed the source's eccentricity."""
-    roots = edges.sparkSession.createDataFrame([(source,)], ["root"])
+    roots = edges.sparkSession.createDataFrame(pd.DataFrame({"root": [source]}))
     return multi_source_hops(edges, roots, src, dst,
                              max_rounds).drop("root")

@@ -30,6 +30,7 @@ explicit error rather than silently diverging until ``max_rounds``).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..fixpoint import iterate
@@ -44,8 +45,8 @@ def _relax(name: str, arcs: DataFrame, roots: DataFrame,
     itself at dist 0). A path of L arcs needs ``max_rounds >= L + 1``;
     raises ``RuntimeError("<name> did not converge in N rounds")``
     otherwise."""
-    # seed ``node`` with the type the first round's union widens it to,
-    # so an unchanged state also hashes unchanged
+    # seed ``node`` with the type the first round's union widens it to:
+    # iterate rejects a step that changes the state's schema
     node_t = roots.union(arcs.select("v")).schema[0].dataType
     state = (roots.distinct()
              .select("root", F.col("root").cast(node_t).alias("node"),
@@ -92,5 +93,5 @@ def shortest_paths(edges: DataFrame, source, src: str = "src",
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"),
                      w.alias("w")))
     both = both.filter(F.col("u") != F.col("v"))
-    seed = edges.sparkSession.createDataFrame([(source,)], ["root"])
+    seed = edges.sparkSession.createDataFrame(pd.DataFrame({"root": [source]}))
     return _relax("shortest_paths", both, seed, max_rounds).drop("root")

@@ -80,6 +80,8 @@ MAX_GROUPS = 4
 # knn_broadcast distance-matrix tile: queries × points per batch chunk
 _Q_CHUNK = 256
 _P_CHUNK = 16384
+# _nearest_sample_d2 radius estimate: queries per float32 distance block
+_SAMPLE_Q_CHUNK = 128
 
 
 def _dist2(qlat, qlon, plat, plon):
@@ -95,7 +97,8 @@ def _topk_window(cand: DataFrame, k: int) -> DataFrame:
 
 
 def _empty_result(spark) -> DataFrame:
-    return spark.createDataFrame([], _OUT_SCHEMA + ", rank int")
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                 _OUT_SCHEMA + ", rank int")
 
 
 def knn_broadcast(points: DataFrame, queries_pdf: pd.DataFrame, k: int,
@@ -216,7 +219,7 @@ def density_sample(points: DataFrame, point_id: str = "id",
 
 def _nearest_sample_d2(q_lat: np.ndarray, q_lon: np.ndarray,
                        s_lat: np.ndarray, s_lon: np.ndarray,
-                       m: int, q_chunk: int = 128) -> np.ndarray:
+                       m: int) -> np.ndarray:
     """Squared distance from each query to its m-th nearest sample point.
 
     float32 + small chunks: the |chunk|×|S| temporaries are the cost —
@@ -228,8 +231,8 @@ def _nearest_sample_d2(q_lat: np.ndarray, q_lon: np.ndarray,
     s_lat32 = s_lat.astype(np.float32)
     s_lon32 = s_lon.astype(np.float32)
     out = np.empty(len(q_lat), dtype=np.float64)
-    for qs in range(0, len(q_lat), q_chunk):
-        qe = min(qs + q_chunk, len(q_lat))
+    for qs in range(0, len(q_lat), _SAMPLE_Q_CHUNK):
+        qe = min(qs + _SAMPLE_Q_CHUNK, len(q_lat))
         d2 = ((q_lat32[qs:qe, None] - s_lat32[None, :]) ** 2
               + (q_lon32[qs:qe, None] - s_lon32[None, :]) ** 2)
         out[qs:qe] = np.partition(d2, m - 1, axis=1)[:, m - 1]

@@ -1,6 +1,7 @@
 """The shared fixpoint driver: round budget (k changing steps + one
-confirming step), the non-convergence error naming the loop, and the
-rule that no other module runs a ``max_rounds`` loop of its own."""
+confirming step), one Spark job per round, the non-convergence and
+schema-change errors naming the loop, and the rule that no other module
+runs a ``max_rounds`` loop of its own."""
 
 from __future__ import annotations
 
@@ -37,6 +38,34 @@ def test_raises_with_name_at_k_rounds(spark):
     with pytest.raises(RuntimeError,
                        match="counter did not converge in 3 rounds"):
         iterate("counter", state, step, ("i", "x"), max_rounds=3)
+
+
+@pytest.mark.parametrize("k", [0, 3])
+def test_one_job_per_round(spark, k):
+    # the initial checkpoint plus k + 1 rounds, each one observed eager
+    # checkpoint; a separate signature query would double the count
+    sc = spark.sparkContext
+    group = f"test_fixpoint_jobs_{k}"
+    state, step = _counter(spark, k)
+    sc.setJobGroup(group, "iterate job count")
+    try:
+        iterate("counter", state, step, ("i", "x"), max_rounds=k + 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == k + 2
+
+
+def test_step_that_changes_the_schema_raises(spark):
+    # xxhash64 of an int differs from that of the same long: a widening
+    # step would make an unchanged state look changed
+    state = spark.range(1).select(F.col("id").alias("i"),
+                                  F.lit(0).cast("int").alias("x"))
+
+    def widen(df):
+        return df.select("i", F.col("x").cast("long").alias("x"))
+
+    with pytest.raises(TypeError, match=r"widen: .*x int.*x bigint"):
+        iterate("widen", state, widen, ("i", "x"), max_rounds=3)
 
 
 def _max_rounds_loops(path: pathlib.Path) -> list[int]:

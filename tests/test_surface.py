@@ -17,6 +17,10 @@ A second scan over ``osmspark/``, ``tests/``, ``tools/`` and
 ``__spark_entry__.py`` fails on a module-level import whose name the
 module never reads. Package ``__init__`` re-exports and ``__all__``
 names are exports, not debris.
+
+A third scan fails on ``createDataFrame`` of a Python list, tuple or
+comprehension under ``osmspark/``: those rows are pickled through a
+Python worker instead of crossing through Arrow.
 """
 
 from __future__ import annotations
@@ -189,3 +193,33 @@ def test_no_unused_module_imports():
     assert not unused, (
         "module-level imports nothing in the module reads — delete them:\n  "
         + "\n  ".join(unused))
+
+
+def _pickled_row_frames(path: pathlib.Path) -> list[str]:
+    """``createDataFrame`` calls whose data is a list or tuple display
+    or a comprehension: rows that PySpark pickles through a Python
+    worker instead of shipping as Arrow."""
+    rel = path.relative_to(ROOT)
+    found = []
+    for node in ast.walk(_tree(path)):
+        if not (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"):
+            continue
+        data = node.args[0] if node.args else next(
+            (k.value for k in node.keywords if k.arg == "data"), None)
+        if isinstance(data, (ast.List, ast.Tuple, ast.ListComp,
+                             ast.GeneratorExp, ast.SetComp, ast.DictComp)):
+            found.append(f"{rel}:{node.lineno}")
+    return found
+
+
+def test_no_pickled_row_frames_in_library():
+    # the list path starts a second pyspark.daemon pool beside the Arrow
+    # one (osmspark/state/lineage.py gives the cost); a pandas frame, or
+    # emptyRDD() for no rows, crosses through Arrow on the driver
+    found = [c for f in _files(["osmspark"]) for c in _pickled_row_frames(f)]
+    assert not found, (
+        "createDataFrame of a Python list/tuple/comprehension in osmspark/ "
+        "— build a pandas frame, or use sparkContext.emptyRDD():\n  "
+        + "\n  ".join(found))
